@@ -8,8 +8,8 @@ Spark DataFrame API:
   (`tantivy_spark.index.build`)
 - posting lists with block-wise delta+bitpack / VInt compression
   (`tantivy_spark.index.codec`)
-- segment merge as a term-range sorted-merge shuffle with hot-term salting
-  (`tantivy_spark.index.merge`)
+- segment merge as a term-range-partitioned rebase shuffle (hot-term
+  chunks spread across contiguous partitions) (`tantivy_spark.index.merge`)
 - BM25 (k1=1.2, b=0.75, quantized fieldnorms) top-k retrieval, both as an
   exact declarative DataFrame plan (`tantivy_spark.query.exact`) and as a
   block-max-WAND pruned kernel (`tantivy_spark.query.wand`)

@@ -391,7 +391,7 @@ def log_merge_plan(alive_docs: dict[int, int], min_layer_docs: int = 10_000,
 
 
 def maybe_compact(spark: SparkSession, index_dir: str, out_dir: str,
-                  max_segments: int = 16, n_salts: int = 8,
+                  max_segments: int = 16,
                   n_target_segments: int = 8) -> dict | None:
     """Merge-policy analogue (ref: LogMergePolicy / segment_updater.rs):
     compact the index when it has accumulated more than ``max_segments``
@@ -403,21 +403,17 @@ def maybe_compact(spark: SparkSession, index_dir: str, out_dir: str,
         manifest = json.load(f)
     if int(manifest["totals"].get("num_segments", 0)) <= max_segments:
         return None
-    return merge_segments(spark, index_dir, out_dir, n_salts=n_salts,
+    return merge_segments(spark, index_dir, out_dir,
                           n_target_segments=n_target_segments)
 
 
 def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
-                   n_salts: int = 8, n_target_segments: int = 1,
+                   n_target_segments: int = 1,
                    groups: dict[int, int] | None = None,
                    compression: str = "zstd") -> dict:
     """Merge the segments of ``index_dir`` into ``n_target_segments``
     segments at ``out_dir`` (or into an explicit ``groups`` assignment,
-    e.g. from :func:`log_merge_plan`).  Returns the new manifest.
-
-    ``n_salts`` is accepted for API compatibility but unused since the
-    rebase shuffle became range-partitioned (hot-term chunks spread by
-    range instead of salt; output unchanged either way)."""
+    e.g. from :func:`log_merge_plan`).  Returns the new manifest."""
     t_start = time.time()
     phases: dict[str, float] = {}
 
@@ -799,7 +795,6 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
     new_manifest["merged_from"] = {"index_dir": index_dir,
                                    "offsets": {str(k): v for k, v in offsets.items()},
                                    "out_seg": {str(k): v for k, v in out_seg.items()},
-                                   "n_salts": n_salts,
                                    "n_target_segments": n_target_segments}
     _write_manifest(os.path.join(out_dir, "meta.json"), new_manifest)
     return new_manifest

@@ -356,8 +356,9 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     33 aggregates instead of 64 conditional sums (1.4x measured, output
     identical).  Bit ``j`` of the signature is set iff its set-count
     exceeds half the valid-token count — exactly the sign of the
-    classic +1/-1 vote sum.  Lanes cannot interfere: a lane count is
-    bounded by the doc's token count < 2^32.  (The obvious alternative
+    classic +1/-1 vote sum.  Lanes cannot interfere while the doc's
+    token count is < 2^31: the high lane adds ``count * 2^32``, which
+    overflows the signed 64-bit sum at 2^31.  (The obvious alternative
     — 64 ``F.aggregate`` higher-order passes per doc — runs interpreted
     and re-evaluates the token array per pass, measured ~10x slower.)
     Near-duplicate candidates are docs at small Hamming distance.

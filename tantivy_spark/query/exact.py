@@ -1,10 +1,17 @@
 """Exact declarative scorer: lowers a Query tree to a DataFrame program.
 
 This is the correctness-oracle execution path: pure Catalyst-optimizable
-joins/filters over the decoded postings, BM25 in float64 with a fixed
-association order so results are bit-reproducible across engines (the
-DuckDB oracle mirrors the same expression shapes).  The WAND kernel
+filters and aggregates over the decoded postings, BM25 in float64 with a
+fixed association order so results are bit-reproducible across engines
+(the DuckDB oracle mirrors the same expression shapes).  The WAND kernel
 (wand.py) must return the same top-k.
+
+Boolean, disjunction-max and sloppy phrase queries lower one way — like
+the reference's one Weight per query walking each term's postings once
+(boolean_weight.rs): ONE postings scan whose rows explode into the clause
+slots carrying their term, then ONE groupBy(segment_ord, doc_id) with a
+conditional aggregate per clause; occurs and scores are expressions over
+those per-clause columns.
 
 Scale notes: the only data that moves is the posting rows of the query's
 terms (parquet IN-filter pushdown on ``term``); scoring is whole-stage
@@ -20,7 +27,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tantivy_spark import B, K1
@@ -196,13 +203,34 @@ def _decode_kernel(with_positions: bool):
     return decode
 
 
+HIT_COLS = ["segment_ord", "doc_id", "score", "key"]
+
+
+def top_k(df: DataFrame, keys: list, k: int, offset: int, cols: list,
+          docmap: DataFrame | None = None) -> DataFrame:
+    """Every collector's top-k tail: ``(rank, *cols)`` of rows
+    offset+1..offset+k of ``df`` by ``keys`` then DocAddress ascending
+    (top_score_collector.rs:26-28, offset per :93-96), sorted by rank.
+    The orderBy+limit is TakeOrderedAndProject.  ``docmap``: the k ranked
+    rows are broadcast into an inner join that adds ``key`` — the
+    corpus-scale docmap stays distributed."""
+    order = [*keys, F.asc("segment_ord"), F.asc("doc_id")]
+    ranked = (df.orderBy(*order).limit(k + offset)
+              .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
+              .filter(F.col("rank") > offset))
+    if docmap is not None:
+        ranked = F.broadcast(ranked).join(
+            docmap.select("segment_ord", "doc_id", "key"),
+            ["segment_ord", "doc_id"], "inner")
+    return ranked.select("rank", *cols).orderBy("rank")
+
+
 class ExactSearcher:
     """Query executor over an IndexReader (f64 declarative path)."""
 
     def __init__(self, reader: IndexReader):
         self.reader = reader
         self.N = reader.num_docs
-        self.avg = reader.avg_fieldnorm
         self._norms_arr = F.array(*[F.lit(int(v)) for v in FIELD_NORMS_TABLE.tolist()])
         self._fast_fields: DataFrame | None = None
         self._fast_key: str | None = None
@@ -236,28 +264,67 @@ class ExactSearcher:
         return rows.mapInPandas(_decode_kernel(True), schema=FLAT_POS_SCHEMA)
 
     # -------------------------------------------------------------- scoring
-    def _score_col(self, weight: float, avg: float | None = None):
+    def _score_col(self, weight, kb):
         """BM25 f64 column over (tf, fieldnorm_id) with baked weight.
 
-        Fixed shape: w * tf / (tf + K1*(1-B) + (K1*B/avg) * qnorm)
+        Fixed shape: w * tf / (tf + K1*(1-B) + kb * qnorm), kb = K1*B/avg
         — association order mirrored exactly by the DuckDB oracle builder.
         ``avg`` is the searched FIELD's average fieldnorm (multi-field
-        indexes score per field, bm25.rs semantics); default global.
+        indexes score per field, bm25.rs semantics).  ``weight`` and
+        ``kb`` are floats or columns.
         """
-        avg = self.avg if avg is None else avg
         qnorm = F.element_at(self._norms_arr, F.col("fieldnorm_id") + 1).cast("double")
         tf = F.col("tf").cast("double")
-        return (F.lit(float(weight)) * tf
-                / (tf + F.lit(K1 * (1.0 - B)) + F.lit(K1 * B / avg) * qnorm))
+        return (F.lit(weight) * tf
+                / (tf + F.lit(K1 * (1.0 - B)) + F.lit(kb) * qnorm))
 
-    def _term_frame(self, term: str, doc_freq: int, boost: float = 1.0) -> DataFrame:
-        flat = self.flat_postings([term]).filter(F.col("term") == term)
-        if doc_freq <= 0:
-            return flat.select("segment_ord", "doc_id", F.lit(0.0).alias("score")).limit(0)
-        w = idf64(doc_freq, self.N) * (1.0 + K1) * boost
-        avg = self.reader.avg_fieldnorm_for_term(term)
-        return flat.select("segment_ord", "doc_id",
-                           self._score_col(w, avg).alias("score"))
+    def _term_slots(self, slots: list[tuple[int, str, float]],
+                    dfs: dict[str, int]) -> DataFrame:
+        """(segment_ord, doc_id, clause, score) of the term clauses
+        ``(clause, term, boost)`` from ONE postings scan and decode; a
+        slot struct bakes its weight and K1*B/avg, so each row evaluates
+        a lone term query's f64 expression.  df 0 weights only terms
+        without postings or MUST_NOT terms, whose scores nothing reads."""
+        structs = [
+            F.struct(F.lit(i).alias("clause"), F.lit(t).alias("t"),
+                     F.lit(idf64(dfs.get(t, 0), self.N) * (1.0 + K1) * b)
+                     .alias("w"),
+                     F.lit(K1 * B / self.reader.avg_fieldnorm_for_term(t))
+                     .alias("kb"))
+            for i, t, b in slots]
+        flat = self.flat_postings(sorted({t for _, t, _ in slots}))
+        tagged = flat.select(
+            "segment_ord", "doc_id", "tf", "fieldnorm_id",
+            F.explode(F.filter(F.array(*structs),
+                               lambda s: s["t"] == F.col("term")))
+            .alias("__slot"))
+        return tagged.select(
+            "segment_ord", "doc_id", F.col("__slot.clause").alias("clause"),
+            self._score_col(F.col("__slot.w"), F.col("__slot.kb"))
+            .alias("score"))
+
+    def _clause_scores(self, clauses: list[ast.Query],
+                       dfs: dict[str, int]) -> DataFrame:
+        """(segment_ord, doc_id, s_0..s_{n-1}) per doc matching ANY clause,
+        ``s_i`` = clause i's score or NULL.  (Boosted) term clauses share
+        one tagged scan, others lower recursively under their tag; a
+        clause has at most one row per doc, so ``max`` returns it."""
+        slots, frames = [], []
+        for i, c in enumerate(clauses):
+            b, inner = 1.0, c
+            while isinstance(inner, ast.BoostQuery):
+                b, inner = b * inner.boost, inner.child
+            if isinstance(inner, ast.TermQuery):
+                slots.append((i, inner.term, b))
+            else:
+                frames.append(self._lower(c, 1.0, dfs).select(
+                    "segment_ord", "doc_id", F.lit(i).alias("clause"), "score"))
+        if slots:
+            frames.insert(0, self._term_slots(slots, dfs))
+        tagged = reduce(DataFrame.unionByName, frames)
+        return tagged.groupBy("segment_ord", "doc_id").agg(*[
+            F.max(F.when(F.col("clause") == i, F.col("score"))).alias(f"s_{i}")
+            for i in range(len(clauses))])
 
     # ------------------------------------------------------------- matching
     def matching(self, q: ast.Query, boost: float = 1.0,
@@ -290,7 +357,7 @@ class ExactSearcher:
     def _lower(self, q: ast.Query, boost: float, dfs: dict[str, int]) -> DataFrame:
         r = self.reader
         if isinstance(q, ast.TermQuery):
-            return self._term_frame(q.term, dfs.get(q.term, 0), boost)
+            return self._term_slots([(0, q.term, boost)], dfs).drop("clause")
         if isinstance(q, ast.BoostQuery):
             return self._lower(q.child, boost * q.boost, dfs)
         if isinstance(q, ast.ConstScoreQuery):
@@ -344,18 +411,16 @@ class ExactSearcher:
             return self._lower(sub, boost * float(q.boost_factor),
                                self.reader.doc_freqs(sel))
         if isinstance(q, ast.DisjunctionMaxQuery):
-            frames = [self._lower(c, 1.0, dfs) for c in q.disjuncts]
-            tagged = [f.select("segment_ord", "doc_id", F.col("score").alias(f"s_{i}"))
-                      for i, f in enumerate(frames)]
-            acc = reduce(lambda a, b: a.join(b, ["segment_ord", "doc_id"], "full"), tagged)
+            g = self._clause_scores(q.disjuncts, dfs)
             # scores are strictly positive, so 0.0-filling keeps max correct
             # and gives the oracle an engine-independent NULL discipline
-            cols = [F.coalesce(F.col(f"s_{i}"), F.lit(0.0)) for i in range(len(frames))]
+            cols = [F.coalesce(F.col(f"s_{i}"), F.lit(0.0))
+                    for i in range(len(q.disjuncts))]
             mx = F.greatest(*cols) if len(cols) > 1 else cols[0]
             total = reduce(lambda a, b: a + b, cols)
             tb = float(q.tie_breaker)
             score = (mx + F.lit(tb) * (total - mx)) * F.lit(boost)
-            return acc.select("segment_ord", "doc_id", score.alias("score"))
+            return g.select("segment_ord", "doc_id", score.alias("score"))
         if isinstance(q, ast.TermRangeQuery):
             # fully distributed: the range predicate is pushed down to the
             # postings parquet scan (min/max row-group pruning on the sorted
@@ -476,73 +541,62 @@ class ExactSearcher:
         raise NotImplementedError(type(q).__name__)
 
     def _boolean(self, q: ast.BooleanQuery, boost: float, dfs: dict[str, int]) -> DataFrame:
+        """Occurs as predicates on the ``_clause_scores`` columns: all
+        musts non-NULL; without musts, >= minimum_should_match (and >= 1)
+        shoulds non-NULL; all nots NULL.  Score: musts then 0.0-filled
+        shoulds, summed left to right, times boost (the oracle's order)."""
         musts = [c for occ, c in q.clauses if occ == ast.Occur.MUST]
         shoulds = [c for occ, c in q.clauses if occ == ast.Occur.SHOULD]
         nots = [c for occ, c in q.clauses if occ == ast.Occur.MUST_NOT]
-
-        def frame(c, i, tag):
-            f = self._lower(c, 1.0, dfs)
-            return f.select("segment_ord", "doc_id", F.col("score").alias(f"{tag}_{i}"))
-
-        acc: DataFrame | None = None
+        if not musts and not shoulds:
+            return self._lower(ast.EmptyQuery(), boost, dfs)
+        g = self._clause_scores(musts + shoulds + nots, dfs)
+        cols = [F.col(f"s_{i}") for i in range(len(q.clauses))]
+        nm, ns = len(musts), len(shoulds)
+        m_cols, s_cols, n_cols = cols[:nm], cols[nm:nm + ns], cols[nm + ns:]
         if musts:
-            for i, c in enumerate(musts):
-                f = frame(c, i, "m")
-                acc = f if acc is None else acc.join(f, ["segment_ord", "doc_id"], "inner")
-            for j, c in enumerate(shoulds):
-                acc = acc.join(frame(c, j, "s"), ["segment_ord", "doc_id"], "left")
-            score_cols = [F.col(f"m_{i}") for i in range(len(musts))] + [
-                F.coalesce(F.col(f"s_{j}"), F.lit(0.0)) for j in range(len(shoulds))
-            ]
+            cond = reduce(lambda a, b: a & b, [c.isNotNull() for c in m_cols])
         else:
-            if not shoulds:
-                return self._lower(ast.EmptyQuery(), boost, dfs)
-            for j, c in enumerate(shoulds):
-                f = frame(c, j, "s")
-                acc = f if acc is None else acc.join(f, ["segment_ord", "doc_id"], "full")
-            matched = reduce(
-                lambda a, b: a + b,
-                [F.when(F.col(f"s_{j}").isNotNull(), 1).otherwise(0)
-                 for j in range(len(shoulds))],
-            )
-            acc = acc.filter(matched >= q.minimum_should_match)
-            score_cols = [F.coalesce(F.col(f"s_{j}"), F.lit(0.0))
-                          for j in range(len(shoulds))]
+            matched = reduce(lambda a, b: a + b,
+                             [F.when(c.isNotNull(), 1).otherwise(0) for c in s_cols])
+            cond = matched >= max(q.minimum_should_match, 1)
+        for c in n_cols:
+            cond = cond & c.isNull()
+        score_cols = m_cols + [F.coalesce(c, F.lit(0.0)) for c in s_cols]
         score = reduce(lambda a, b: a + b, score_cols) * F.lit(boost)
-        out = acc.select("segment_ord", "doc_id", score.alias("score"))
-        for c in nots:
-            nf = self._lower(c, 1.0, self.reader.doc_freqs(c.terms()) if c.terms() else dfs)
-            out = out.join(nf.select("segment_ord", "doc_id"),
-                           ["segment_ord", "doc_id"], "left_anti")
-        return out
+        return g.filter(cond).select("segment_ord", "doc_id", score.alias("score"))
 
     def _phrase(self, q: ast.PhraseQuery, boost: float, dfs: dict[str, int]) -> DataFrame:
-        """slop=0: the shifted-position trick — pos - ordinal is equal
-        across all phrase terms exactly at phrase start positions.
-        slop>0: chained range joins — consecutive terms must appear in
-        order within slop+1 positions of each other; phrase frequency =
-        number of distinct start positions with a valid chain."""
+        """ONE postings scan: each posting row explodes into the phrase
+        slots carrying its term, position shifted by ``max_off - off``.
+        slop=0: shifted positions agree across all slots exactly at
+        occurrences (phrase_scorer.rs:364-383).  slop>0: ONE groupBy per
+        doc collects each slot's sorted positions, docs missing a slot
+        drop out, and an Arrow-batched kernel runs the carrying-slop
+        algorithm (phrase_scorer.rs:437-507, mirrored in sloppy.py)."""
         terms = q.phrase_terms
         offsets = list(q.offsets) if q.offsets is not None else list(range(len(terms)))
         max_off = max(offsets)
         flat = self.flat_postings(terms, with_positions=True)
+        slots = F.array(*[
+            F.struct(F.lit(i).alias("i"), F.lit(t).alias("t"),
+                     F.lit(max_off - off).alias("shift"))
+            for i, (t, off) in enumerate(zip(terms, offsets))])
+        allp = (flat.select(
+            "segment_ord", "doc_id", "fieldnorm_id", "pos",
+            F.explode(F.filter(slots, lambda s: s["t"] == F.col("term")))
+            .alias("__slot"))
+            .select("segment_ord", "doc_id", "fieldnorm_id",
+                    F.col("__slot.i").alias("slot"),
+                    (F.col("pos") + F.col("__slot.shift")).alias("apos")))
         if q.slop != 0:
-            # per-term shifted sorted position arrays per candidate doc;
-            # the inner join restricts to docs containing ALL terms (the
-            # reference's intersection docset), then an Arrow-batched
-            # kernel runs the exact carrying-slop algorithm per doc
-            # (phrase_scorer.rs:437-507 — mirrored in query/sloppy.py).
-            parts = []
-            for i, (t, off) in enumerate(zip(terms, offsets)):
-                parts.append(
-                    flat.filter(F.col("term") == t)
-                    .groupBy("segment_ord", "doc_id", "fieldnorm_id")
-                    .agg(F.sort_array(F.collect_list(
-                        F.col("pos") + F.lit(max_off - off))).alias(f"pos{i}"))
-                )
-            cur = parts[0]
-            for p in parts[1:]:
-                cur = cur.join(p.drop("fieldnorm_id"), ["segment_ord", "doc_id"])
+            pos_cols = [f"pos{i}" for i in range(len(terms))]
+            cur = (allp.groupBy("segment_ord", "doc_id", "fieldnorm_id")
+                   .agg(*[F.sort_array(F.collect_list(
+                       F.when(F.col("slot") == i, F.col("apos")))).alias(c)
+                       for i, c in enumerate(pos_cols)])
+                   .filter(reduce(lambda a, b: a & b,
+                                  [F.size(c) > 0 for c in pos_cols])))
             slop = int(q.slop)
             from pyspark.sql.functions import pandas_udf
 
@@ -571,32 +625,12 @@ class ExactSearcher:
                         sloppy_phrase_count_batch(list(pos_cols), slop),
                         dtype="int32")
 
-            hits = (cur.withColumn(
-                        "tf", sloppy_tf(*[F.col(f"pos{i}") for i in range(len(terms))]))
+            hits = (cur.withColumn("tf", sloppy_tf(*[F.col(c) for c in pos_cols]))
                     .filter(F.col("tf") > 0)
                     .select("segment_ord", "doc_id", "fieldnorm_id", "tf"))
         else:
-            # shifted-position trick, generalized to explicit offsets:
-            # pos + (max_off - off_i) is equal across all phrase slots
-            # exactly at occurrences (phrase_scorer.rs:364-383).
-            # ONE decode pass (r8): each posting row explodes into the
-            # slots whose term it carries (repeated phrase terms get one
-            # row per slot), instead of one filtered decode branch per
-            # slot unioned together — the scan + Arrow decode used to
-            # run once per slot.  A slot's positions are distinct within
-            # a doc, so countDistinct(ord) == count(*) here.
-            slots = F.array(*[
-                F.struct(F.lit(t).alias("t"),
-                         F.lit(max_off - off).alias("shift"))
-                for t, off in zip(terms, offsets)])
-            allp = (flat.select(
-                "segment_ord", "doc_id", "fieldnorm_id", "pos",
-                F.explode(F.filter(
-                    slots, lambda s: s["t"] == F.col("term")))
-                .alias("__slot"))
-                .select("segment_ord", "doc_id", "fieldnorm_id",
-                        (F.col("pos") + F.col("__slot.shift"))
-                        .alias("apos")))
+            # a slot's positions are distinct within a doc, so
+            # count(*) == countDistinct(slot) here
             hits = (
                 allp.groupBy("segment_ord", "doc_id", "fieldnorm_id", "apos")
                 .agg(F.count(F.lit(1)).alias("nmatch"))
@@ -606,9 +640,9 @@ class ExactSearcher:
             )
         idf_sum = sum(idf64(dfs.get(t, 0), self.N) for t in terms)
         w = idf_sum * (1.0 + K1) * boost
-        avg = self.reader.avg_fieldnorm_for_term(terms[0])
+        kb = K1 * B / self.reader.avg_fieldnorm_for_term(terms[0])
         return hits.select("segment_ord", "doc_id",
-                           self._score_col(w, avg).alias("score"))
+                           self._score_col(w, kb).alias("score"))
 
     def select_mlt_terms(self, doc_text: str, max_terms: int = 10,
                          min_tf: int = 1, min_doc_freq: int = 1,
@@ -658,18 +692,19 @@ class ExactSearcher:
             if not terms:
                 return self._lower(ast.EmptyQuery(), boost, {})
             slot_terms.append(terms)
-        all_terms = sorted({t for ts in slot_terms for t in ts})
-        flat = self.flat_postings(all_terms, with_positions=True)
-        parts = []
-        for i, terms in enumerate(slot_terms):
-            parts.append(
-                flat.filter(F.col("term").isin(terms)).select(
-                    "segment_ord", "doc_id", "fieldnorm_id",
-                    (F.col("pos") - F.lit(i)).alias("apos"),
-                    F.lit(i).alias("slot"),
-                ).distinct()  # two slot-terms may share a position
-            )
-        allp = reduce(lambda a, b: a.unionByName(b), parts)
+        # one scan: posting rows explode into the slots whose expansion
+        # holds their term (distinct: two slot-terms may share a position)
+        slots = F.array(*[F.struct(F.lit(i).alias("slot"),
+                                   F.array(*map(F.lit, ts)).alias("ts"))
+                          for i, ts in enumerate(slot_terms)])
+        allp = (self.flat_postings(sorted({t for ts in slot_terms for t in ts}),
+                                   with_positions=True)
+                .select("segment_ord", "doc_id", "fieldnorm_id", "pos", F.explode(
+                    F.filter(slots, lambda s: F.array_contains(s["ts"], F.col("term"))))
+                    .alias("__slot"))
+                .select("segment_ord", "doc_id", "fieldnorm_id", "__slot.slot",
+                        (F.col("pos") - F.col("__slot.slot")).alias("apos"))
+                .distinct())
         hits = (
             allp.groupBy("segment_ord", "doc_id", "fieldnorm_id", "apos")
             .agg(F.countDistinct("slot").alias("nmatch"))
@@ -687,9 +722,9 @@ class ExactSearcher:
         idf_sum = sum(idf64(slot_dfs.get(i, 0), self.N)
                       for i in range(len(slot_terms)))
         w = idf_sum * (1.0 + K1) * boost
-        avg = self.reader.avg_fieldnorm_for_term(slot_terms[0][0])
+        kb = K1 * B / self.reader.avg_fieldnorm_for_term(slot_terms[0][0])
         return hits.select("segment_ord", "doc_id",
-                           self._score_col(w, avg).alias("score"))
+                           self._score_col(w, kb).alias("score"))
 
     # ----------------------------------------------- distributed term match
     def _const_docs_matching(self, term_cond, boost: float) -> DataFrame:
@@ -834,25 +869,9 @@ class ExactSearcher:
 
     # ------------------------------------------------------------ collectors
     def search(self, q: ast.Query, k: int = 10, offset: int = 0) -> DataFrame:
-        """TopDocs: (rank, segment_ord, doc_id, score, key) — tie-break
-        (score desc, segment_ord asc, doc_id asc), ref
-        top_score_collector.rs:26-28; offset semantics per :93-96."""
-        scored = self.matching(q)
-        top = scored.orderBy(F.desc("score"), F.asc("segment_ord"), F.asc("doc_id")) \
-                    .limit(k + offset)
-        from pyspark.sql import Window
-        w = Window.orderBy(F.desc("score"), F.asc("segment_ord"), F.asc("doc_id"))
-        ranked = top.withColumn("rank", F.row_number().over(w)) \
-                    .filter(F.col("rank") > offset)
-        # broadcast the k-row result side — docmap is the table that is
-        # huge at corpus scale, so it must stay distributed.  Inner join:
-        # every DocAddress exists in docmap, and left-outer would force
-        # Spark to build (broadcast) the docmap side.
-        return (F.broadcast(ranked)
-                .join(self.reader.docmap.select("segment_ord", "doc_id", "key"),
-                      ["segment_ord", "doc_id"], "inner")
-                .select("rank", "segment_ord", "doc_id", "score", "key")
-                .orderBy("rank"))
+        """TopDocs: (rank, segment_ord, doc_id, score, key)."""
+        return top_k(self.matching(q), [F.desc("score")], k, offset,
+                     HIT_COLS, self.reader.docmap)
 
     def count(self, q: ast.Query) -> int:
         """Count collector (ref: src/collector/count_collector.rs).  A

@@ -12,12 +12,13 @@ exact scores float64 (oracle parity).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from tantivy_spark.index.reader import IndexReader
 from tantivy_spark.query import ast
-from tantivy_spark.query.exact import ExactSearcher
+from tantivy_spark.query.exact import HIT_COLS, ExactSearcher, top_k
 from tantivy_spark.query.parser import QueryParser
-from tantivy_spark.query.wand import wand_topk
+from tantivy_spark.query.wand import wand_candidates
 
 
 def _pure_term_shape(q: ast.Query) -> tuple[str, list[str], list[float]] | None:
@@ -90,12 +91,10 @@ class Searcher:
             shape = _pure_term_shape(query)
             if shape is not None:
                 mode, terms, boosts = shape
-                df = wand_topk(self.reader, terms, k=k + offset, mode=mode,
-                               boosts=boosts)
-                if offset:
-                    from pyspark.sql import functions as F
-                    df = df.filter(F.col("rank") > offset)
-                return df
+                rows = wand_candidates(self.reader, terms, k=k + offset,
+                                       mode=mode, boosts=boosts)
+                return top_k(rows, [F.desc("score")], k, offset, HIT_COLS,
+                             self.reader.docmap)
             if method == "wand":
                 raise ValueError("query shape not WAND-eligible")
         return self.exact.search(query, k=k, offset=offset)
@@ -120,25 +119,16 @@ class Searcher:
         the expression, and the top-k lowers to TakeOrderedAndProject
         (per-partition partial top-k, k-row driver merge) — the same
         shape the reference's tweaked collector has per segment."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
         query = self._as_query(q)
         scored = self.exact.matching(query)
         docs = scored.join(self.reader.docmap,
                            ["segment_ord", "doc_id"], "inner")
         tweaked = docs.withColumn("tweaked_score",
                                   tweak(F.col("score"), docs))
-        top = tweaked.orderBy(F.desc("tweaked_score"), F.asc("segment_ord"),
-                              F.asc("doc_id")).limit(k + offset)
-        w = Window.orderBy(F.desc("tweaked_score"), F.asc("segment_ord"),
-                           F.asc("doc_id"))
-        return (top.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") > offset)
-                .select("rank", "segment_ord", "doc_id",
-                        F.col("tweaked_score").alias("score"),
-                        F.col("score").alias("bm25_score"), "key")
-                .orderBy("rank"))
+        return top_k(tweaked, [F.desc("tweaked_score")], k, offset,
+                     ["segment_ord", "doc_id",
+                      F.col("tweaked_score").alias("score"),
+                      F.col("score").alias("bm25_score"), "key"])
 
     def search_order_by(self, q, field: str, order: str = "desc",
                         k: int = 10, offset: int = 0) -> DataFrame:
@@ -163,9 +153,6 @@ class Searcher:
         for_segment/check_schema errors (top_score_collector.rs
         test_field_does_not_exist / test_field_wrong_type pin
         "Field `{field}` is not a fast field.")."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
         if k < 1:
             raise ValueError("limit must be strictly greater than 0")
         if order not in ("asc", "desc"):
@@ -177,14 +164,9 @@ class Searcher:
             self.reader.docmap, ["segment_ord", "doc_id"], "inner")
         key_sort = F.desc_nulls_last(field) if order == "desc" \
             else F.asc_nulls_last(field)
-        sort = [key_sort, F.asc("segment_ord"), F.asc("doc_id")]
-        top = docs.orderBy(*sort).limit(k + offset)
-        w = Window.orderBy(*sort)
-        return (top.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") > offset)
-                .select("rank", "segment_ord", "doc_id",
-                        F.col(field).alias("value"), "key")
-                .orderBy("rank"))
+        return top_k(docs, [key_sort], k, offset,
+                     ["segment_ord", "doc_id", F.col(field).alias("value"),
+                      "key"])
 
     def search_order_by_keys(self, q, keys, k: int = 10,
                              offset: int = 0) -> DataFrame:
@@ -205,9 +187,6 @@ class Searcher:
         the ``"score"`` key surfaces as a ``score`` column.  Same
         TakeOrderedAndProject shape as ``search_order_by`` — no global
         sort of the match set."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
         if k < 1:
             raise ValueError("limit must be strictly greater than 0")
         if not keys:
@@ -228,19 +207,14 @@ class Searcher:
                 sort.append(F.asc_nulls_last(name) if order == "asc"
                             else F.desc_nulls_last(name))
                 cols.append(name)
-        sort += [F.asc("segment_ord"), F.asc("doc_id")]
         # score-as-key requires scoring; pure fast-field keys don't
         # (EnableScoring::Disabled for the order-by collector)
         needs_scores = any(name == "score" for name, _ in keys)
         docs = self.exact.matching(self._as_query(q),
                                    scoring=needs_scores).join(
             self.reader.docmap, ["segment_ord", "doc_id"], "inner")
-        top = docs.orderBy(*sort).limit(k + offset)
-        w = Window.orderBy(*sort)
-        return (top.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") > offset)
-                .select("rank", "segment_ord", "doc_id", *cols, "key")
-                .orderBy("rank"))
+        return top_k(docs, sort, k, offset,
+                     ["segment_ord", "doc_id", *cols, "key"])
 
     def histogram_df(self, q, field: str, min_value, bucket_width,
                      num_buckets: int):
@@ -256,8 +230,6 @@ class Searcher:
         reference uses; the zero fill is a broadcast join against a
         ``spark.range(num_buckets)`` frame."""
         import datetime as _dt
-
-        from pyspark.sql import functions as F
 
         if field not in self.reader.fast_field_cols:
             raise ValueError(f"Field `{field}` is not a fast field.")
@@ -340,8 +312,6 @@ class Searcher:
         source table for full documents — the reference's row-store lookup
         of top hits (ARCHITECTURE.md:138-159), with the source Iceberg/
         parquet table playing the docstore."""
-        from pyspark.sql import functions as F
-
         return (F.broadcast(topk)
                 .join(source, topk["key"] == source[key_col], "inner")
                 .drop(source[key_col])

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from tantivy_spark.bm25 import Bm25Params
 from tantivy_spark.index import codec
 from tantivy_spark.index.reader import IndexReader
+from tantivy_spark.query.exact import HIT_COLS, top_k
 
 OUT_SCHEMA = "segment_ord INT, doc_id INT, score FLOAT"
 
@@ -534,6 +535,21 @@ def wand_stats(reader: IndexReader, terms: list[str], k: int = 10,
             "seeded": seed != float("-inf")}
 
 
+def wand_candidates(reader: IndexReader, terms: list[str], k: int = 10,
+                    mode: str = "or", seed_threshold: bool = False,
+                    boosts: list[float] | None = None,
+                    min_seed_blocks: int = MIN_SEED_BLOCKS) -> DataFrame:
+    """Each segment kernel's local top-k (segment_ord, doc_id, score)
+    rows, the input of ``exact.top_k``; parameters as for wand_topk."""
+    live_terms, params_by_term, deleted_by_seg, seed, rows = _wand_plan(
+        reader, terms, k, mode, seed_threshold, boosts, min_seed_blocks)
+    if rows is None:
+        return reader.spark.createDataFrame([], schema=OUT_SCHEMA)
+    kernel = _segment_kernel_fn(live_terms, params_by_term, k, mode,
+                                deleted_by_seg, seed, emit_stats=False)
+    return rows.mapInPandas(kernel, schema=OUT_SCHEMA)
+
+
 def wand_topk(reader: IndexReader, terms: list[str], k: int = 10,
               mode: str = "or", seed_threshold: bool = False,
               boosts: list[float] | None = None,
@@ -557,25 +573,6 @@ def wand_topk(reader: IndexReader, terms: list[str], k: int = 10,
     ignored for intersections (and when deletes exist — dead docs could
     occupy the seeding block's top-k).
     """
-    live_terms, params_by_term, deleted_by_seg, seed, rows = _wand_plan(
-        reader, terms, k, mode, seed_threshold, boosts, min_seed_blocks)
-    spark = reader.spark
-    if rows is None:
-        rows = spark.createDataFrame([], schema=OUT_SCHEMA)
-    else:
-        kernel = _segment_kernel_fn(live_terms, params_by_term, k, mode,
-                                    deleted_by_seg, seed, emit_stats=False)
-        rows = rows.mapInPandas(kernel, schema=OUT_SCHEMA)
-
-    top = rows.orderBy(F.desc("score"), F.asc("segment_ord"), F.asc("doc_id")).limit(k)
-    from pyspark.sql import Window
-    w = Window.orderBy(F.desc("score"), F.asc("segment_ord"), F.asc("doc_id"))
-    ranked = top.withColumn("rank", F.row_number().over(w))
-    # broadcast the k-row side; docmap stays distributed (huge at scale).
-    # Inner join — every DocAddress exists in docmap, and left-outer would
-    # force building the docmap side.
-    return (F.broadcast(ranked)
-            .join(reader.docmap.select("segment_ord", "doc_id", "key"),
-                  ["segment_ord", "doc_id"], "inner")
-            .select("rank", "segment_ord", "doc_id", "score", "key")
-            .orderBy("rank"))
+    rows = wand_candidates(reader, terms, k, mode, seed_threshold, boosts,
+                           min_seed_blocks)
+    return top_k(rows, [F.desc("score")], k, 0, HIT_COLS, reader.docmap)

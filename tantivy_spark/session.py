@@ -19,6 +19,11 @@ def get_spark(app: str = "tantivy_spark", master: str | None = None,
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus if cpus != "*" else 32)
+    # default heap: half the machine, capped at 48g (a fixed heap larger
+    # than the machine gets the local-mode driver JVM OOM-killed)
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    driver_mem = (os.environ.get("SPARK_DRIVER_MEM")
+                  or f"{min(phys // 2, 48 << 30) >> 20}m")
     builder = (
         SparkSession.builder.master(master)
         .appName(app)
@@ -28,7 +33,7 @@ def get_spark(app: str = "tantivy_spark", master: str | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.maxMetadataStringLength", "2000")

@@ -25,7 +25,7 @@ def merged_index(spark, tiny_index, tmp_path_factory):
     from tantivy_spark.index.merge import merge_segments
 
     out = str(tmp_path_factory.mktemp("midx") / "merged")
-    merge_segments(spark, tiny_index.index_dir, out, n_salts=4)
+    merge_segments(spark, tiny_index.index_dir, out)
     return IndexReader(spark, out)
 
 
@@ -110,8 +110,7 @@ def merged3_index(spark, tiny_index, tmp_path_factory):
     from tantivy_spark.index.merge import merge_segments
 
     out = str(tmp_path_factory.mktemp("m3") / "merged3")
-    merge_segments(spark, tiny_index.index_dir, out, n_salts=4,
-                   n_target_segments=3)
+    merge_segments(spark, tiny_index.index_dir, out, n_target_segments=3)
     return IndexReader(spark, out)
 
 
@@ -233,20 +232,6 @@ def test_chunked_sentinel_fieldnorms_roundtrip(spark, tmp_path_factory):
     a = ExactSearcher(r).search(TermQuery("the"), k=10).collect()
     b = ExactSearcher(mr).search(TermQuery("the"), k=10).collect()
     assert [rr["key"] for rr in a] == [rr["key"] for rr in b]
-
-
-def test_salting_does_not_change_output(spark, tiny_index, tmp_path_factory):
-    from tantivy_spark.index.merge import merge_segments
-
-    out1 = str(tmp_path_factory.mktemp("m1") / "a")
-    out8 = str(tmp_path_factory.mktemp("m8") / "b")
-    merge_segments(spark, tiny_index.index_dir, out1, n_salts=1)
-    merge_segments(spark, tiny_index.index_dir, out8, n_salts=8)
-    a = spark.read.parquet(f"{out1}/postings").orderBy("term", "chunk_id") \
-        .select("term", "chunk_id", "doc_freq", F.md5(F.col("docs")).alias("h")).collect()
-    b = spark.read.parquet(f"{out8}/postings").orderBy("term", "chunk_id") \
-        .select("term", "chunk_id", "doc_freq", F.md5(F.col("docs")).alias("h")).collect()
-    assert a == b
 
 
 def test_log_merge_plan_layers():

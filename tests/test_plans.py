@@ -206,3 +206,56 @@ def test_dedup_against_broadcasts_batch(spark):
     # (the only Window left is simhash_chunks' bucket cap in the store
     # builder, which a real deployment persists once)
     assert "row_number" not in plan2
+
+
+# ---- exact multi-clause lowering: every boolean / disjunction-max /
+# sloppy-phrase query is ONE tagged postings scan plus ONE aggregate —
+# no per-clause scans, no outer/anti join chains.
+
+def _exact_shapes():
+    from tantivy_spark.query.ast import (BooleanQuery, DisjunctionMaxQuery,
+                                         Occur, PhraseQuery)
+
+    return {
+        "must_should_not": BooleanQuery([
+            (Occur.MUST, TermQuery("data")), (Occur.SHOULD, TermQuery("fast")),
+            (Occur.MUST_NOT, TermQuery("slow"))]),
+        "or3": BooleanQuery([(Occur.SHOULD, TermQuery(t))
+                             for t in ("data", "fast", "scan")]),
+        "dismax3": DisjunctionMaxQuery(
+            [TermQuery(t) for t in ("data", "fast", "scan")], tie_breaker=0.3),
+        "slop2_phrase3": PhraseQuery(["the", "data", "the"], slop=2),
+    }
+
+
+def _final_plan(df) -> str:
+    """The executed (AQE-final) plan only, not the initial plan that
+    AdaptiveSparkPlan prints after it."""
+    return _plan(df, execute=True).split("== Initial Plan ==")[0]
+
+
+@pytest.mark.parametrize("name", list(_exact_shapes()))
+def test_exact_multi_clause_is_one_scan_one_aggregate(searcher, name):
+    df = searcher.search(_exact_shapes()[name], k=10)
+    plan = _final_plan(df)
+    assert plan.count("MapInPandas") == 1      # one postings decode
+    assert plan.count("PushedFilters: [In(term") == 1
+    # tiny_index has no deletes, so not even the deletes anti-join
+    for join in ("LeftOuter", "FullOuter", "LeftAnti"):
+        assert join not in plan, join
+    assert "TakeOrderedAndProject" in plan
+
+
+def test_exact_boolean_job_count(spark, searcher):
+    """``+data fast -slow``: one doc_freqs lookup plus one execution.
+    The per-clause lowering (join chains plus a second doc_freqs lookup
+    for the MUST_NOT clause) ran 10 jobs for this query."""
+    q = _exact_shapes()["must_should_not"]
+    searcher.search(q, k=10).collect()     # warm the reader's lazy tables
+    sc = spark.sparkContext
+    sc.setJobGroup("exact_boolean_jobs", "exact_boolean_jobs")
+    try:
+        searcher.search(q, k=10).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("exact_boolean_jobs")) == 7
