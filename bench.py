@@ -15,8 +15,8 @@ tail of stdout, and round 3's inlined detail truncated the headline).
 
 The big (800k-doc) regime additionally:
 - publishes WAND decoded-block/strip counters for seeded vs unseeded
-  pruning (wand_stats) — the seeding claim rides on instrumentation,
-  not wall time;
+  pruning (accumulator deltas around ordinary wand_topk runs) — the
+  seeding claim rides on counters, not wall time;
 - runs the same build once more in a SUBPROCESS at
   local[$SPARK_GRAFT_PROBE_CPUS] (default 12 — the width this box still
   scales at per BASELINE.md; >12 threads saturate memory bandwidth), so
@@ -168,7 +168,8 @@ def main() -> None:
     big_n = int(os.environ.get("SPARK_GRAFT_BIG_DOCS", "800000"))
     if big_n > 0:
         from tantivy_spark.corpus import synthetic_pages
-        from tantivy_spark.query.wand import wand_stats, wand_topk
+        from tantivy_spark.query import wand
+        from tantivy_spark.query.wand import wand_topk
 
         corpus_path = f"/dev/shm/tantivy_bench_corpus_{big_n}"
         if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
@@ -203,12 +204,19 @@ def main() -> None:
         for name, fn in big_suite.items():
             record(name, fn, trials=3)
 
-        # the seeding claim, instrumented: decoded blocks saved by the
-        # global threshold (identical results are pytest-asserted)
+        # the seeding claim, counted: decoded blocks saved by the global
+        # threshold (identical results are pytest-asserted)
+        def wand_blocks(seed_threshold):
+            before = wand.counters(spark)
+            wand_topk(big_reader, ["the", "of"], k=10, mode="or",
+                      seed_threshold=seed_threshold).collect()
+            after = wand.counters(spark)
+            d = {n: after[n] - before[n] for n in after}
+            return {**d, "seeded": d["seeded"] > 0}
+
         detail["big_wand_blocks"] = {
-            "unseeded": wand_stats(big_reader, ["the", "of"], k=10, mode="or"),
-            "seeded": wand_stats(big_reader, ["the", "of"], k=10, mode="or",
-                                 seed_threshold=True),
+            "unseeded": wand_blocks(False),
+            "seeded": wand_blocks(True),
         }
 
         # segment merge 32 -> 8 (the reference benches merge_segments too);

@@ -40,9 +40,9 @@ def main() -> None:
     from tantivy_spark.index.build import IndexConfig, build_index
     from tantivy_spark.index.merge import merge_segments
     from tantivy_spark.index.reader import IndexReader
-    from tantivy_spark.query import BooleanQuery, Occur, TermQuery
+    from tantivy_spark.query import BooleanQuery, Occur, TermQuery, wand
     from tantivy_spark.query.exact import ExactSearcher
-    from tantivy_spark.query.wand import wand_stats, wand_topk
+    from tantivy_spark.query.wand import wand_topk
     from tantivy_spark.session import get_spark, warmup_python_workers
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -108,12 +108,14 @@ def main() -> None:
     reader = IndexReader(spark, out_idx)
     terms = ["the", "of"]
     for mode in ("or", "and"):
-        stats = wand_stats(reader, terms, k=10, mode=mode)
         tw, rows_w = None, None
         for _ in range(3):
+            before = wand.counters(spark)
             t = time.time()
             rows_w = wand_topk(reader, terms, k=10, mode=mode).collect()
             dt = time.time() - t
+            after = wand.counters(spark)
+            stats = {n: after[n] - before[n] for n in after}
             tw = dt if tw is None or dt < tw else tw
         occur = Occur.SHOULD if mode == "or" else Occur.MUST
         q = BooleanQuery([(occur, TermQuery(t)) for t in terms])

@@ -6,7 +6,8 @@ BASELINE.md's claim rides on.
 Builds the 800k synthetic corpus at a given ``n_segments`` and reports,
 for or/and WAND over hot terms:
 
-- decoded-block counters (wand_stats) unseeded vs threshold-seeded,
+- decoded-block counters (accumulator deltas around the timed
+  wand_topk runs) unseeded vs threshold-seeded,
 - best-of-N wall times for wand_topk unseeded/seeded,
 - the exhaustive BooleanQuery scorer as the no-pruning baseline,
 - an identical-results assertion across all three paths.
@@ -39,9 +40,9 @@ def main() -> None:
     from tantivy_spark.corpus import synthetic_pages
     from tantivy_spark.index.build import IndexConfig, build_index
     from tantivy_spark.index.reader import IndexReader
-    from tantivy_spark.query import BooleanQuery, Occur, TermQuery
+    from tantivy_spark.query import BooleanQuery, Occur, TermQuery, wand
     from tantivy_spark.query.exact import ExactSearcher
-    from tantivy_spark.query.wand import wand_stats, wand_topk
+    from tantivy_spark.query.wand import wand_topk
     from tantivy_spark.session import get_spark, warmup_python_workers
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -63,13 +64,16 @@ def main() -> None:
     reader = IndexReader(spark, out_idx)
 
     def timed(fn):
+        """-> (best wall, rows, WAND counter deltas of the last trial)."""
         best = None
         for _ in range(trials):
+            before = wand.counters(spark)
             t = time.time()
             rows = fn()
             dt = time.time() - t
+            after = wand.counters(spark)
             best = dt if best is None or dt < best else best
-        return round(best, 3), rows
+        return round(best, 3), rows, {n: after[n] - before[n] for n in after}
 
     result: dict = {
         "n_segments": n_segments, "n_docs": n_docs, "cpus": cpus,
@@ -77,17 +81,14 @@ def main() -> None:
         "load_before": [round(x, 2) for x in os.getloadavg()],
     }
     for mode, terms in (("or", ["the", "of"]), ("and", ["the", "of"])):
-        stats_un = wand_stats(reader, terms, k=10, mode=mode)
-        stats_se = wand_stats(reader, terms, k=10, mode=mode,
-                              seed_threshold=True)
-        t_un, rows_un = timed(lambda: wand_topk(
+        t_un, rows_un, stats_un = timed(lambda: wand_topk(
             reader, terms, k=10, mode=mode).collect())
-        t_se, rows_se = timed(lambda: wand_topk(
+        t_se, rows_se, stats_se = timed(lambda: wand_topk(
             reader, terms, k=10, mode=mode, seed_threshold=True).collect())
         occur = Occur.SHOULD if mode == "or" else Occur.MUST
         q = BooleanQuery([(occur, TermQuery(t)) for t in terms])
-        t_ex, rows_ex = timed(lambda: ExactSearcher(reader)
-                              .search(q, k=10).collect())
+        t_ex, rows_ex, _ = timed(lambda: ExactSearcher(reader)
+                                 .search(q, k=10).collect())
         ident = ([(r["segment_ord"], r["doc_id"]) for r in rows_un]
                  == [(r["segment_ord"], r["doc_id"]) for r in rows_se]
                  == [(r["segment_ord"], r["doc_id"]) for r in rows_ex])

@@ -22,16 +22,29 @@ The result is **identical** to the exhaustive scorer — pruning only
 affects speed — which tests assert against both the exact DataFrame
 oracle and the pure-numpy golden engine (f32 bit-equality).
 
-Distribution: posting rows for the query's terms (a parquet IN-filtered
-scan) are shuffled once by segment; one kernel instance runs per segment
-with its own threshold (per-partition thresholds; the driver-side final
-merge keeps global exactness regardless of per-segment pruning).
-Per-segment top-k outputs are tiny, so the final merge is a broadcast-size
+Distribution: the kernel scores independent *units* of the posting rows
+for the query's terms (a parquet IN-filtered scan), each with its own
+threshold (the driver-side final merge keeps global exactness regardless
+of per-unit pruning).  With one live term a unit is one chunk row and
+the kernel maps straight over the scan; with several a unit is one
+segment's rows, co-located by one shuffle on segment_ord.  Per-unit
+top-k outputs are tiny, so the final merge is a broadcast-size
 orderBy/limit — the same partial/final shape as the reference's
 per-segment collect + merge_fruits.
+
+Counters: the query run itself adds its pruning work to Spark
+accumulators (one set per SparkContext) — blocks decoded, strips
+processed, blocks in the scanned lists, and queries that applied a
+seed.  :func:`counters` reads their running totals; diff a read taken
+before ``wand_topk(...).collect()`` against one taken after.  The totals
+are shared by every query on the context, and a retried task adds its
+work again.
 """
 
 from __future__ import annotations
+
+import threading
+import weakref
 
 import numpy as np
 import pandas as pd
@@ -134,23 +147,22 @@ class _TermBlocks:
 
 def _segment_wand(terms_blocks: list[_TermBlocks], params: list[Bm25Params],
                   k: int, mode: str, deleted: np.ndarray | None = None,
-                  seed: float = -np.inf, stats: dict | None = None):
+                  seed: float = -np.inf):
     """Run the strip-pruned scorer for one segment.
-    Returns (doc_ids int64, scores float32) of the segment's top-k
-    (plus ties at the kth score).
+    Returns (doc_ids int64, scores float32, decoded_blocks,
+    processed_strips): the segment's top-k (plus ties at the kth score)
+    and the pruning work it took.
 
     ``seed``: an externally-proven lower bound on the GLOBAL kth score
     (bm25.rs:184-186 semantics — threshold seeding across segments).  Any
     strip whose upper bound is strictly below it can never contribute to
-    the global top-k, so pruning starts before k local candidates exist.
-    ``stats``: optional dict collecting ``decoded_blocks`` /
-    ``processed_strips`` for instrumentation."""
+    the global top-k, so pruning starts before k local candidates exist."""
     T = len(terms_blocks)
     # ---- strip decomposition ------------------------------------------------
     edges = np.unique(np.concatenate(
         [tb.starts for tb in terms_blocks] + [tb.ends + 1 for tb in terms_blocks]))
     if len(edges) < 2:
-        return np.zeros(0, np.int64), np.zeros(0, np.float32)
+        return np.zeros(0, np.int64), np.zeros(0, np.float32), 0, 0
     s_lo = edges[:-1]
     s_hi = edges[1:] - 1  # inclusive
     S = len(s_lo)
@@ -253,11 +265,9 @@ def _segment_wand(terms_blocks: list[_TermBlocks], params: list[Bm25Params],
             if len(alls) >= k:
                 threshold = max(threshold,
                                 float(np.partition(alls, -k)[-k]))
-    if stats is not None:
-        stats["decoded_blocks"] = stats.get("decoded_blocks", 0) + len(decoded)
-        stats["processed_strips"] = stats.get("processed_strips", 0) + n_strips
     if not cand_docs:
-        return np.zeros(0, np.int64), np.zeros(0, np.float32)
+        return (np.zeros(0, np.int64), np.zeros(0, np.float32),
+                len(decoded), n_strips)
     docs_all = np.concatenate(cand_docs)
     scores_all = np.concatenate(cand_scores).astype(np.float32)
     # top-k + ties, tie-break doc_id asc
@@ -269,7 +279,7 @@ def _segment_wand(terms_blocks: list[_TermBlocks], params: list[Bm25Params],
         while take < len(ix) and scores_all[ix[take]] == kth:
             take += 1
     ix = ix[:take]
-    return docs_all[ix], scores_all[ix]
+    return docs_all[ix], scores_all[ix], len(decoded), n_strips
 
 
 MAX_BROADCAST_DELETES = 2_000_000
@@ -282,8 +292,7 @@ MIN_SEED_BLOCKS = 32
 
 
 def global_seed_threshold(reader: IndexReader, live_terms: list[str],
-                          params_by_term: dict, k: int,
-                          min_blocks: int = MIN_SEED_BLOCKS) -> float:
+                          params_by_term: dict, k: int) -> float:
     """A PROVEN lower bound on the global kth score, computed before the
     per-segment kernels run (the reference seeds per-term thresholds from
     max_scores, bm25.rs:184-186; here we go one step further and realize
@@ -302,7 +311,7 @@ def global_seed_threshold(reader: IndexReader, live_terms: list[str],
     term at 10^12 docs has millions of (chunk, block) metadata rows —
     collecting them, as this function once did, is a driver OOM.
     Seeding auto-skips (returns -inf) when the best term's posting list
-    is under ``min_blocks`` blocks: pruning has nothing to save there,
+    is under ``MIN_SEED_BLOCKS`` blocks: pruning has nothing to save there,
     so the prelude job would be pure added latency.
     """
     meta = reader.postings_for_terms(live_terms).select(
@@ -351,7 +360,7 @@ def global_seed_threshold(reader: IndexReader, live_terms: list[str],
                 int(row["best"]["block_idx"]))
         if best is None or cand[0] > best[0]:
             best = cand
-    if best is None or best[1] < min_blocks:
+    if best is None or best[1] < MIN_SEED_BLOCKS:
         return float("-inf")
     _, _, term, seg, chunk, b = best
     rows = (reader.postings_for_terms([term])
@@ -367,31 +376,107 @@ def global_seed_threshold(reader: IndexReader, live_terms: list[str],
     return float(np.partition(scores, -k)[-k])
 
 
-def _wand_plan(reader: IndexReader, terms: list[str], k: int, mode: str,
-               seed_threshold: bool, boosts: list[float] | None,
-               min_seed_blocks: int = MIN_SEED_BLOCKS):
-    """Shared prelude of wand_topk / wand_stats: live terms, per-term BM25
-    params, delete bitsets, optional seed, and the segment-partitioned
-    posting rows (None when no term matches)."""
+#: the WAND pruning counters, summed over every kernel unit of the real
+#: query run (see :func:`counters`)
+COUNTERS = ("decoded_blocks", "processed_strips", "total_blocks", "seeded")
+_ACCUMULATORS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_ACCUMULATORS_LOCK = threading.Lock()
+
+
+def _accumulators(spark) -> dict:
+    """The context's counter accumulators, created on first use."""
+    sc = spark.sparkContext
+    with _ACCUMULATORS_LOCK:
+        if sc not in _ACCUMULATORS:
+            _ACCUMULATORS[sc] = {name: sc.accumulator(0)
+                                 for name in COUNTERS}
+        return _ACCUMULATORS[sc]
+
+
+def counters(spark) -> dict:
+    """Running totals of the WAND pruning counters on this SparkContext:
+    {"decoded_blocks", "processed_strips", "total_blocks", "seeded"}.
+    Decoded blocks are what pruning and seeding save; wall time on a
+    loaded box is not trustworthy.  Diff two reads taken around a
+    ``collect()`` for one query's work."""
+    return {name: acc.value for name, acc in _accumulators(spark).items()}
+
+
+def _segment_kernel_fn(live_terms, params_by_term, k: int, mode: str,
+                       deleted_by_seg, seed: float, accs: dict):
+    """mapInPandas kernel: one ``_segment_wand`` run per independent
+    unit, yielding its (segment_ord, doc_id, score) rows and adding its
+    pruning work to ``accs``.
+
+    A unit is one chunk row when the query has one live term: every
+    chunk is independently top-k-able (the score needs only global
+    stats), so the kernel maps straight over the scan partitions — NO
+    shuffle, and parallelism is the chunk count instead of the segment
+    count.  With several live terms a unit is one segment's rows, which
+    the upstream repartition co-locates for document-at-a-time
+    alignment."""
+    kk = int(k)
+    per_chunk = len(live_terms) == 1
+    dead_by_seg = deleted_by_seg or {}
+
+    def units(batches):
+        if per_chunk:
+            for pdf in batches:
+                for row in pdf.itertuples(index=False):
+                    yield int(row.segment_ord), {row.term: [row]}
+            return
+        by_seg: dict[int, dict[str, list]] = {}
+        for pdf in batches:
+            for row in pdf.itertuples(index=False):
+                by_seg.setdefault(int(row.segment_ord), {}) \
+                    .setdefault(row.term, []).append(row)
+        yield from by_seg.items()
+
+    def kernel(batches):
+        for seg, per_term in units(batches):
+            present = [t for t in live_terms if t in per_term]
+            if not present or (mode == "and"
+                               and len(present) < len(live_terms)):
+                continue
+            prms = [params_by_term[t] for t in present]
+            tbs = [_TermBlocks(per_term[t], p) for t, p in zip(present, prms)]
+            d, s, n_decoded, n_strips = _segment_wand(
+                tbs, prms, kk, mode, deleted=dead_by_seg.get(seg), seed=seed)
+            accs["decoded_blocks"].add(n_decoded)
+            accs["processed_strips"].add(n_strips)
+            accs["total_blocks"].add(sum(len(tb.starts) for tb in tbs))
+            if len(d):
+                yield pd.DataFrame({
+                    "segment_ord": np.full(len(d), seg, dtype=np.int32),
+                    "doc_id": d.astype(np.int32),
+                    "score": s,
+                })
+
+    return kernel
+
+
+def wand_candidates(reader: IndexReader, terms: list[str], k: int = 10,
+                    mode: str = "or", seed_threshold: bool = False,
+                    boosts: list[float] | None = None) -> DataFrame:
+    """Each kernel unit's local top-k (segment_ord, doc_id, score) rows,
+    the input of ``exact.top_k``; parameters as for wand_topk."""
     terms = list(terms)
     boost_of = dict(zip(terms, boosts)) if boosts is not None else {}
     deleted_by_seg: dict[int, np.ndarray] | None = None
     dels = reader.deletes
     if dels is not None:
-        if dels.count() > MAX_BROADCAST_DELETES:
+        # one bounded job: at most the cap plus one row reaches the driver
+        dead = dels.limit(MAX_BROADCAST_DELETES + 1).toPandas()
+        if len(dead) > MAX_BROADCAST_DELETES:
             raise ValueError(
                 "too many deletes for in-kernel alive bitsets; compact the "
                 "index (merge_segments) first")
-        deleted_by_seg = {}
-        for row in dels.collect():
-            deleted_by_seg.setdefault(int(row["segment_ord"]), []).append(
-                int(row["doc_id"]))
-        deleted_by_seg = {s: np.sort(np.array(v, dtype=np.int64))
-                          for s, v in deleted_by_seg.items()}
+        deleted_by_seg = {int(seg): np.sort(g["doc_id"].to_numpy(np.int64))
+                          for seg, g in dead.groupby("segment_ord")}
     dfs = reader.doc_freqs(terms)
     live_terms = [t for t in terms if dfs[t] > 0]
-    if mode == "and" and len(live_terms) < len(terms):
-        live_terms = []
+    if not live_terms or (mode == "and" and len(live_terms) < len(terms)):
+        return reader.spark.createDataFrame([], schema=OUT_SCHEMA)
     params_by_term = {
         # per-term average fieldnorm: the term's FIELD average on
         # multi-field indexes (matches the build kernel's per-field
@@ -401,159 +486,24 @@ def _wand_plan(reader: IndexReader, terms: list[str], k: int, mode: str,
                                    boost=float(boost_of.get(t, 1.0)))
         for t in live_terms
     }
-    rows = None
+    accs = _accumulators(reader.spark)
     seed = float("-inf")
-    if live_terms:
-        if seed_threshold and mode == "or" and deleted_by_seg is None:
-            seed = global_seed_threshold(reader, live_terms, params_by_term,
-                                         k, min_blocks=min_seed_blocks)
-        rows = reader.postings_for_terms(live_terms).drop("pos")
-        if len(live_terms) > 1:
-            # multi-term kernels need ALL of a segment's lists co-located
-            # for document-at-a-time alignment
-            rows = rows.repartition("segment_ord")
-        # single term: every chunk row is independently top-k-able (the
-        # score needs only global stats), so the kernel maps straight
-        # over the scan partitions — NO shuffle, and parallelism is the
-        # chunk count instead of the segment count (a 4-segment index on
-        # 32 cores would otherwise run 4 tasks)
-    return live_terms, params_by_term, deleted_by_seg, seed, rows
-
-
-def _segment_kernel_fn(live_terms, params_by_term, k: int, mode: str,
-                       deleted_by_seg, seed: float, emit_stats: bool):
-    """mapInPandas kernel over segment-grouped posting rows.  Yields
-    result rows (segment_ord, doc_id, score) or, with ``emit_stats``,
-    one instrumentation row per segment (decoded_blocks,
-    processed_strips) instead."""
-    n_terms = len(live_terms)
-    kk = int(k)
-    md = mode
-
-    def kernel(batches):
-        if n_terms == 1:
-            # single-term per-CHUNK path (no shuffle upstream): each
-            # chunk row yields its own local top-k; the driver-side
-            # k-row merge keeps results identical to the sequential walk
-            t0 = live_terms[0]
-            prm = params_by_term[t0]
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    seg = int(row.segment_ord)
-                    dead = (deleted_by_seg or {}).get(seg)
-                    stats: dict | None = {} if emit_stats else None
-                    tb = _TermBlocks([row], prm)
-                    d, s = _segment_wand([tb], [prm], kk, md,
-                                         deleted=dead, seed=seed,
-                                         stats=stats)
-                    if emit_stats:
-                        yield pd.DataFrame({
-                            "segment_ord": [seg],
-                            "decoded_blocks": [stats.get(
-                                "decoded_blocks", 0)],
-                            "processed_strips": [stats.get(
-                                "processed_strips", 0)],
-                            "total_blocks": [len(tb.starts)],
-                        })
-                    elif len(d):
-                        yield pd.DataFrame({
-                            "segment_ord": np.full(len(d), seg,
-                                                   dtype=np.int32),
-                            "doc_id": d.astype(np.int32),
-                            "score": s,
-                        })
-            return
-        # group rows per segment (repartition guarantees segment locality)
-        by_seg: dict[int, dict[str, list]] = {}
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                by_seg.setdefault(int(row.segment_ord), {}) \
-                    .setdefault(row.term, []).append(row)
-        for seg, per_term in by_seg.items():
-            tbs, prms = [], []
-            for t in live_terms:
-                if t not in per_term:
-                    if md == "and":
-                        break
-                    continue
-                tbs.append(_TermBlocks(per_term[t], params_by_term[t]))
-                prms.append(params_by_term[t])
-            else:
-                if md == "and" and len(tbs) != n_terms:
-                    continue
-                if not tbs:
-                    continue
-                dead = (deleted_by_seg or {}).get(seg)
-                stats: dict | None = {} if emit_stats else None
-                d, s = _segment_wand(tbs, prms, kk, md, deleted=dead,
-                                     seed=seed, stats=stats)
-                if emit_stats:
-                    total_blocks = sum(len(tb.starts) for tb in tbs)
-                    yield pd.DataFrame({
-                        "segment_ord": [seg],
-                        "decoded_blocks": [stats.get("decoded_blocks", 0)],
-                        "processed_strips": [stats.get("processed_strips", 0)],
-                        "total_blocks": [total_blocks],
-                    })
-                elif len(d):
-                    yield pd.DataFrame({
-                        "segment_ord": np.full(len(d), seg, dtype=np.int32),
-                        "doc_id": d.astype(np.int32),
-                        "score": s,
-                    })
-
-    return kernel
-
-
-STATS_SCHEMA = ("segment_ord INT, decoded_blocks BIGINT, "
-                "processed_strips BIGINT, total_blocks BIGINT")
-
-
-def wand_stats(reader: IndexReader, terms: list[str], k: int = 10,
-               mode: str = "or", seed_threshold: bool = False,
-               boosts: list[float] | None = None,
-               min_seed_blocks: int = MIN_SEED_BLOCKS) -> dict:
-    """Run the WAND kernels in instrumentation mode and return the summed
-    pruning counters: {"decoded_blocks", "processed_strips",
-    "total_blocks", "seeded"} — the evidence behind any seeding claim
-    (decoded blocks are what seeding saves; wall time on a loaded box is
-    not trustworthy)."""
-    live_terms, params_by_term, deleted_by_seg, seed, rows = _wand_plan(
-        reader, terms, k, mode, seed_threshold, boosts, min_seed_blocks)
-    if rows is None:
-        return {"decoded_blocks": 0, "processed_strips": 0,
-                "total_blocks": 0, "seeded": False}
+    if seed_threshold and mode == "or" and deleted_by_seg is None:
+        seed = global_seed_threshold(reader, live_terms, params_by_term, k)
+        if seed != float("-inf"):
+            accs["seeded"].add(1)
+    rows = reader.postings_for_terms(live_terms).drop("pos")
+    if len(live_terms) > 1:
+        # one unit per segment: co-locate each segment's lists
+        rows = rows.repartition("segment_ord")
     kernel = _segment_kernel_fn(live_terms, params_by_term, k, mode,
-                                deleted_by_seg, seed, emit_stats=True)
-    agg = rows.mapInPandas(kernel, schema=STATS_SCHEMA).agg(
-        F.sum("decoded_blocks").alias("db"),
-        F.sum("processed_strips").alias("ps"),
-        F.sum("total_blocks").alias("tb")).collect()[0]
-    return {"decoded_blocks": int(agg["db"] or 0),
-            "processed_strips": int(agg["ps"] or 0),
-            "total_blocks": int(agg["tb"] or 0),
-            "seeded": seed != float("-inf")}
-
-
-def wand_candidates(reader: IndexReader, terms: list[str], k: int = 10,
-                    mode: str = "or", seed_threshold: bool = False,
-                    boosts: list[float] | None = None,
-                    min_seed_blocks: int = MIN_SEED_BLOCKS) -> DataFrame:
-    """Each segment kernel's local top-k (segment_ord, doc_id, score)
-    rows, the input of ``exact.top_k``; parameters as for wand_topk."""
-    live_terms, params_by_term, deleted_by_seg, seed, rows = _wand_plan(
-        reader, terms, k, mode, seed_threshold, boosts, min_seed_blocks)
-    if rows is None:
-        return reader.spark.createDataFrame([], schema=OUT_SCHEMA)
-    kernel = _segment_kernel_fn(live_terms, params_by_term, k, mode,
-                                deleted_by_seg, seed, emit_stats=False)
+                                deleted_by_seg, seed, accs)
     return rows.mapInPandas(kernel, schema=OUT_SCHEMA)
 
 
 def wand_topk(reader: IndexReader, terms: list[str], k: int = 10,
               mode: str = "or", seed_threshold: bool = False,
-              boosts: list[float] | None = None,
-              min_seed_blocks: int = MIN_SEED_BLOCKS) -> DataFrame:
+              boosts: list[float] | None = None) -> DataFrame:
     """Distributed BMW top-k for a pure term union ("or") or pure term
     intersection ("and").  Returns (rank, segment_ord, doc_id, score, key)
     with the reference tie-break; score is float32.
@@ -573,6 +523,5 @@ def wand_topk(reader: IndexReader, terms: list[str], k: int = 10,
     ignored for intersections (and when deletes exist — dead docs could
     occupy the seeding block's top-k).
     """
-    rows = wand_candidates(reader, terms, k, mode, seed_threshold, boosts,
-                           min_seed_blocks)
+    rows = wand_candidates(reader, terms, k, mode, seed_threshold, boosts)
     return top_k(rows, [F.desc("score")], k, 0, HIT_COLS, reader.docmap)

@@ -86,3 +86,19 @@ def test_delete_by_query(spark, idx):
     assert delete_by_query(spark, reader, q) == 0
     # docs matching only one of the terms survive
     assert s.count(TermQuery("the")) > 0
+
+
+def test_wand_refuses_a_delete_set_over_the_cap(spark, idx, monkeypatch):
+    """The WAND deletes prelude brings at most the cap plus one row to
+    the driver and fails loudly past the cap."""
+    from tantivy_spark.query import wand
+
+    reader, _pages = idx
+    keys = [r["key"] for r in
+            Searcher(reader).search(TermQuery("the"), k=5).collect()]
+    assert delete_by_keys(spark, reader, keys) == 5
+    monkeypatch.setattr(wand, "MAX_BROADCAST_DELETES", 4)
+    with pytest.raises(ValueError, match="too many deletes"):
+        wand.wand_topk(reader, ["the", "of"], k=5)
+    monkeypatch.setattr(wand, "MAX_BROADCAST_DELETES", 5)
+    assert len(wand.wand_topk(reader, ["the", "of"], k=5).collect()) == 5

@@ -147,6 +147,37 @@ def test_wand_identical_after_merge3(spark, tiny_index, merged3_index):
                [(r["rank"], r["key"], r["score"]) for r in b]
 
 
+def test_merge_output_is_term_clustered(spark, tiny_index, tmp_path_factory):
+    """The merge kernels read range-partitioned, term-sorted input and
+    write it without a further exchange, so the written postings files
+    cover ordered term ranges that meet at most in one boundary term
+    (the range key is (term, segment_ord, chunk_id), so a hot term's
+    chunks may continue into the next file): a term lookup prunes to a
+    contiguous run of files.  Files of fieldnorm sentinel rows are
+    addressed by term filter, not layout, and are left out."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tantivy_spark.index.build import FIELDNORM_SENTINEL
+    from tantivy_spark.index.merge import merge_segments
+
+    out = str(tmp_path_factory.mktemp("m2") / "merged2")
+    merge_segments(spark, tiny_index.index_dir, out, n_target_segments=2)
+    ranges = []
+    for path in glob.glob(os.path.join(out, "postings", "*.parquet")):
+        terms = [t for t in pq.read_table(path, columns=["term"])
+                 .column("term").to_pylist()
+                 if not t.startswith(FIELDNORM_SENTINEL)]
+        if terms:
+            ranges.append((min(terms), max(terms)))
+    ranges.sort()
+    assert len(ranges) > 1
+    for (_lo, hi), (next_lo, _hi) in zip(ranges, ranges[1:]):
+        assert hi <= next_lo, ranges
+
+
 def test_merge3_stacking_preserves_address_order(tiny_index, merged3_index):
     old = tiny_index.docmap.orderBy("segment_ord", "doc_id").select("key").collect()
     new = merged3_index.docmap.orderBy("segment_ord", "doc_id").select("key").collect()

@@ -124,6 +124,41 @@ def test_single_term_wand_has_no_repartition(spark, tiny_index):
     assert "hashpartitioning(segment_ord" in p2
 
 
+def _wand_or_jobs(spark, reader, group) -> int:
+    from tantivy_spark.query.wand import wand_topk
+
+    wand_topk(reader, ["the", "data"], k=10).collect()   # warm the reader
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        wand_topk(reader, ["the", "data"], k=10).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_wand_or_job_count(spark, tiny_index, tiny_pages, tmp_path_factory):
+    """A 2-term OR counts its pruning work inside its one execution:
+    7 jobs, as before the counters moved into the kernel (the separate
+    counting run added 5 more).  With deletes, one bounded collect of
+    the delete set replaces a count plus a collect: 11 jobs before, 9
+    now."""
+    from tantivy_spark.index.build import IndexConfig, build_index
+    from tantivy_spark.index.deletes import delete_by_keys
+    from tantivy_spark.index.reader import IndexReader
+
+    assert _wand_or_jobs(spark, tiny_index, "wand_or_jobs") == 7
+    out = str(tmp_path_factory.mktemp("wdel") / "idx")
+    build_index(spark, tiny_pages, out, IndexConfig(
+        key_col="url", text_col="text", n_segments=4,
+        segment_expr="pmod(cast(substring(url, -10, 10) as bigint), 4)"))
+    reader = IndexReader(spark, out)
+    keys = [r["key"] for r in
+            ExactSearcher(reader).search(TermQuery("the"), k=5).collect()]
+    assert delete_by_keys(spark, reader, keys) == 5
+    assert _wand_or_jobs(spark, reader, "wand_or_jobs_deletes") == 9
+
+
 def test_chunk_dedup_plan_is_udf_free(spark):
     """Chunk dedup lowers to pure Catalyst expressions: no Python eval
     nodes, exactly one hash-aggregate shuffle keyed by the chunk hash."""

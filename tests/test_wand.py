@@ -8,7 +8,7 @@ bit-equality."""
 import numpy as np
 import pytest
 
-from tantivy_spark.query import BooleanQuery, Occur, TermQuery
+from tantivy_spark.query import BooleanQuery, Occur, TermQuery, wand
 from tantivy_spark.query.golden import GoldenIndex
 from tantivy_spark.query.wand import wand_topk
 
@@ -65,19 +65,22 @@ def test_wand_intersection_matches_golden(tiny_index, tiny_golden, terms, k):
 
 
 @pytest.mark.parametrize("terms,k", UNION_CASES[:5], ids=lambda x: str(x))
-def test_seeded_wand_identical(tiny_index, tiny_golden, terms, k):
+def test_seeded_wand_identical(tiny_index, tiny_golden, terms, k,
+                               monkeypatch):
     """Threshold seeding (global kth lower bound shipped to kernels) must
     never change results — byte-identical ranks, addresses, f32 scores."""
     base = wand_topk(tiny_index, terms, k=k, mode="or").collect()
+    monkeypatch.setattr(wand, "MIN_SEED_BLOCKS", 0)
     seeded = wand_topk(tiny_index, terms, k=k, mode="or",
-                       seed_threshold=True, min_seed_blocks=0).collect()
+                       seed_threshold=True).collect()
     assert [(r["rank"], r["segment_ord"], r["doc_id"], r["score"])
             for r in base] == \
         [(r["rank"], r["segment_ord"], r["doc_id"], r["score"])
          for r in seeded]
 
 
-def test_seed_threshold_is_valid_lower_bound(tiny_index, tiny_golden):
+def test_seed_threshold_is_valid_lower_bound(tiny_index, tiny_golden,
+                                            monkeypatch):
     from tantivy_spark.bm25 import Bm25Params
     from tantivy_spark.query.wand import global_seed_threshold
 
@@ -86,22 +89,22 @@ def test_seed_threshold_is_valid_lower_bound(tiny_index, tiny_golden):
     params = {t: Bm25Params.for_one_term(dfs[t], tiny_index.num_docs,
                                          tiny_index.avg_fieldnorm)
               for t in terms}
-    for k in (1, 5, 10):
-        seed = global_seed_threshold(tiny_index, terms, params, k,
-                                     min_blocks=0)
-        want = _golden_topk(tiny_golden, terms, k, "or")
-        kth = want[-1][3]  # golden kth total score
-        assert seed <= kth + 1e-6, (k, seed, kth)
-        assert seed > float("-inf")
     # the auto-skip: on this tiny corpus every list is far under the
     # default block floor, so the default call declines to seed
     assert global_seed_threshold(tiny_index, terms, params, 5) == \
         float("-inf")
+    monkeypatch.setattr(wand, "MIN_SEED_BLOCKS", 0)
+    for k in (1, 5, 10):
+        seed = global_seed_threshold(tiny_index, terms, params, k)
+        want = _golden_topk(tiny_golden, terms, k, "or")
+        kth = want[-1][3]  # golden kth total score
+        assert seed <= kth + 1e-6, (k, seed, kth)
+        assert seed > float("-inf")
 
 
-def test_seeding_prunes_decode_work(tiny_index):
-    """Direct kernel instrumentation: with a strong seed the kernel
-    decodes no more (and typically fewer) blocks than unseeded."""
+def test_seeding_prunes_decode_work(tiny_index, monkeypatch):
+    """The kernel's returned counts: with a strong seed it decodes no
+    more (and typically fewer) blocks than unseeded."""
     import numpy as np
 
     from tantivy_spark.bm25 import Bm25Params
@@ -120,32 +123,78 @@ def test_seeding_prunes_decode_work(tiny_index):
         by_term.setdefault(r["term"], []).append(r)
     tbs = [_TermBlocks(by_term[t], params[t]) for t in terms if t in by_term]
     prms = [params[t] for t in terms if t in by_term]
-    seed = global_seed_threshold(tiny_index, terms, params, 3, min_blocks=0)
+    monkeypatch.setattr(wand, "MIN_SEED_BLOCKS", 0)
+    seed = global_seed_threshold(tiny_index, terms, params, 3)
 
-    s0: dict = {}
-    d0, sc0 = _segment_wand(tbs, prms, 3, "or", stats=s0)
-    s1: dict = {}
-    d1, sc1 = _segment_wand(tbs, prms, 3, "or", seed=seed, stats=s1)
+    d0, sc0, blocks0, strips0 = _segment_wand(tbs, prms, 3, "or")
+    d1, sc1, blocks1, strips1 = _segment_wand(tbs, prms, 3, "or", seed=seed)
     assert list(d0) == list(d1)
     assert list(sc0) == list(sc1)
-    assert s1["decoded_blocks"] <= s0["decoded_blocks"]
-    assert s1["processed_strips"] <= s0["processed_strips"]
+    assert blocks1 <= blocks0
+    assert strips1 <= strips0
 
 
-def test_wand_stats_distributed(tiny_index):
-    """The instrumentation surface (wand_stats): distributed counters sum
-    across segments; seeding never increases decoded blocks; results stay
-    covered by the seeded-identity test above."""
-    from tantivy_spark.query.wand import wand_stats
+def _unit_counts(reader, terms, k, mode, seed_threshold):
+    """Per-unit sums of ``_segment_wand``'s counts, computed on the driver
+    from the collected posting rows (one unit per chunk row for a single
+    term, per segment otherwise)."""
+    from tantivy_spark.bm25 import Bm25Params
+    from tantivy_spark.query.wand import (
+        _TermBlocks, _segment_wand, global_seed_threshold)
 
-    base = wand_stats(tiny_index, ["the", "of"], k=3, mode="or")
-    assert base["total_blocks"] > 0
-    assert 0 < base["decoded_blocks"] <= base["total_blocks"]
-    assert not base["seeded"]
-    seeded = wand_stats(tiny_index, ["the", "of"], k=3, mode="or",
-                        seed_threshold=True, min_seed_blocks=0)
-    assert seeded["seeded"]
-    assert seeded["decoded_blocks"] <= base["decoded_blocks"]
+    dfs = reader.doc_freqs(terms)
+    params = {t: Bm25Params.for_one_term(dfs[t], reader.num_docs,
+                                         reader.avg_fieldnorm_for_term(t))
+              for t in terms}
+    seed = (global_seed_threshold(reader, terms, params, k)
+            if seed_threshold else float("-inf"))
+    rows = reader.postings_for_terms(terms).drop("pos").collect()
+    units: dict = {}
+    for i, r in enumerate(rows):
+        unit = i if len(terms) == 1 else r["segment_ord"]
+        units.setdefault(unit, {}).setdefault(r["term"], []).append(r)
+    want = {"decoded_blocks": 0, "processed_strips": 0, "total_blocks": 0,
+            "seeded": int(seed != float("-inf"))}
+    for per_term in units.values():
+        if mode == "and" and len(per_term) < len(terms):
+            continue
+        present = [t for t in terms if t in per_term]
+        tbs = [_TermBlocks(per_term[t], params[t]) for t in present]
+        _d, _s, blocks, strips = _segment_wand(
+            tbs, [params[t] for t in present], k, mode, seed=seed)
+        want["decoded_blocks"] += blocks
+        want["processed_strips"] += strips
+        want["total_blocks"] += sum(len(tb.starts) for tb in tbs)
+    return want
+
+
+@pytest.mark.parametrize("terms,mode,seeded", [
+    (["the"], "or", False),
+    (["the", "data"], "or", False),
+    (["the", "data"], "and", False),
+    (["the", "data"], "or", True),
+], ids=["term", "or", "and", "or_seeded"])
+def test_counters_come_from_the_query_run(tiny_index, monkeypatch, terms,
+                                          mode, seeded):
+    """The accumulator deltas around one ordinary ``wand_topk`` collect
+    equal the kernel's own per-unit counts; seeding never decodes more
+    blocks than the unseeded run."""
+    monkeypatch.setattr(wand, "MIN_SEED_BLOCKS", 0)
+    spark = tiny_index.spark
+
+    def delta(seed_threshold):
+        before = wand.counters(spark)
+        wand_topk(tiny_index, terms, k=3, mode=mode,
+                  seed_threshold=seed_threshold).collect()
+        after = wand.counters(spark)
+        return {n: after[n] - before[n] for n in after}
+
+    got = delta(seeded)
+    assert got == _unit_counts(tiny_index, terms, 3, mode, seeded)
+    assert 0 < got["decoded_blocks"] <= got["total_blocks"]
+    assert got["seeded"] == int(seeded)
+    if seeded:
+        assert got["decoded_blocks"] <= delta(False)["decoded_blocks"]
 
 
 def test_wand_randomized_merged(spark, tmp_path_factory):
