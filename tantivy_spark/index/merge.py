@@ -63,6 +63,7 @@ from tantivy_spark.index.build import (
     _write_manifest,
     fieldnorm_sentinel,
 )
+from tantivy_spark.index.reader import DELETES_SCHEMA
 
 
 def _dead_in_chunk(dd: np.ndarray | None, base: int, n: int) -> np.ndarray | None:
@@ -437,7 +438,9 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
     dead: dict[int, np.ndarray] = {}
     deletes_path = os.path.join(index_dir, "deletes")
     if os.path.isdir(deletes_path):
-        for row in spark.read.parquet(deletes_path).distinct().collect():
+        dels_df = spark.read.schema(DELETES_SCHEMA).parquet(deletes_path) \
+            .distinct()
+        for row in dels_df.collect():
             dead.setdefault(int(row["segment_ord"]), []).append(int(row["doc_id"]))
         dead = {s: np.sort(np.array(v, dtype=np.int64)) for s, v in dead.items()}
 
@@ -463,7 +466,6 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
     sort_col = manifest.get("config", {}).get("sort_col") or None
     docmap = spark.read.parquet(os.path.join(index_dir, "docmap"))
     if dead:
-        dels_df = spark.read.parquet(deletes_path).distinct()
         docmap = docmap.join(F.broadcast(dels_df),
                              ["segment_ord", "doc_id"], "left_anti")
     perms_bc = None

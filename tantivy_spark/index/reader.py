@@ -16,6 +16,10 @@ from functools import cached_property
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+#: the deletes table's fixed schema (``deletes._append`` writes exactly
+#: these columns): reading with it skips Spark's schema-inference job
+DELETES_SCHEMA = "segment_ord INT, doc_id INT"
+
 
 class ReloadingReader:
     """The reference's ReloadPolicy analogue (src/reader/mod.rs:7-44):
@@ -152,22 +156,46 @@ class IndexReader:
         return self._table("term_stats")
 
     def doc_freqs(self, terms: list[str]) -> dict[str, int]:
-        """Global doc_freq for a small set of query terms (driver-side).
+        """Global doc_freq for a small set of query terms, read on the
+        driver with pyarrow — no Spark job.
 
-        This is the one deliberate collect in the query path: the same
-        O(#query-terms) statistics lookup the reference does when building
-        a Weight (bm25.rs:95-129).
+        The same statistics lookup the reference does when building a
+        Weight (bm25.rs:95-129).  Only the ``term`` and ``doc_freq``
+        columns are read, ``term IN (...)`` is pushed into the scan, and
+        on a streaming-built index only the published ``batch=``
+        partitions are visited (the gate of :meth:`_table`).  Rows held:
+        O(query terms x published batches), summed per term (incremental
+        ingest appends per-batch deltas).  The ``term`` column it filters
+        grows with the vocabulary, not with ``n_docs``: term_stats is
+        hash-partitioned and unsorted, so row-group statistics rarely
+        prune and the whole column is read.
         """
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
         if not terms:
             return {}
-        rows = (
-            self.term_stats.filter(F.col("term").isin(list(set(terms))))
-            .groupBy("term").agg(F.sum("doc_freq").alias("doc_freq"))
-            .collect()
-        )  # sum: incremental ingest appends per-batch term_stats deltas
+        schema = pa.schema([("term", pa.string()), ("doc_freq", pa.int64())])
+        parts = [ds.dataset(d, schema=schema, format="parquet")
+                 for d in self._table_dirs("term_stats")]
+        table = ds.dataset(parts, schema=schema).to_table(
+            filter=ds.field("term").isin(list(set(terms))))
         out = {t: 0 for t in terms}
-        out.update({r["term"]: int(r["doc_freq"]) for r in rows})
+        for term, n in zip(table.column("term").to_pylist(),
+                           table.column("doc_freq").to_pylist()):
+            out[term] += int(n)
         return out
+
+    def _table_dirs(self, name: str) -> list[str]:
+        """The directories holding ``name``'s visible rows: the table's
+        published ``batch=`` partitions on a streaming-built index, the
+        table directory otherwise (the same gate as :meth:`_table`)."""
+        root = os.path.join(self.index_dir, name)
+        batches = self.manifest.get("batches")
+        if batches and any(e.startswith("batch=") for e in os.listdir(root)):
+            return [d for d in (os.path.join(root, f"batch={b}")
+                                for b in batches) if os.path.isdir(d)]
+        return [root]
 
     def space_usage(self) -> dict:
         """On-disk byte accounting per index component — the analogue of
@@ -236,7 +264,7 @@ class IndexReader:
         p = os.path.join(self.index_dir, "deletes")
         if not os.path.isdir(p):
             return None
-        return self.spark.read.parquet(p)
+        return self.spark.read.schema(DELETES_SCHEMA).parquet(p)
 
     @cached_property
     def fieldnorms(self) -> DataFrame:

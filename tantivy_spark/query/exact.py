@@ -211,9 +211,12 @@ def top_k(df: DataFrame, keys: list, k: int, offset: int, cols: list,
     """Every collector's top-k tail: ``(rank, *cols)`` of rows
     offset+1..offset+k of ``df`` by ``keys`` then DocAddress ascending
     (top_score_collector.rs:26-28, offset per :93-96), sorted by rank.
-    The orderBy+limit is TakeOrderedAndProject.  ``docmap``: the k ranked
-    rows are broadcast into an inner join that adds ``key`` — the
-    corpus-scale docmap stays distributed."""
+    Both orderBy+limit pairs plan as TakeOrderedAndProject (per-partition
+    heap + driver merge): the first selects the hits, the last puts the
+    at most k result rows in rank order at the plan root — one job, no
+    range-partitioned global sort.  ``docmap``: the k ranked rows are
+    broadcast into an inner join that adds ``key`` — the corpus-scale
+    docmap stays distributed."""
     order = [*keys, F.asc("segment_ord"), F.asc("doc_id")]
     ranked = (df.orderBy(*order).limit(k + offset)
               .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
@@ -222,7 +225,7 @@ def top_k(df: DataFrame, keys: list, k: int, offset: int, cols: list,
         ranked = F.broadcast(ranked).join(
             docmap.select("segment_ord", "doc_id", "key"),
             ["segment_ord", "doc_id"], "inner")
-    return ranked.select("rank", *cols).orderBy("rank")
+    return ranked.select("rank", *cols).orderBy("rank").limit(k)
 
 
 class ExactSearcher:

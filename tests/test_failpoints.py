@@ -118,6 +118,18 @@ def test_orphan_batch_invisible_to_readers(spark, corpus, tmp_path_factory):
     assert reader.num_docs == n0
     assert s.matching(AllQuery()).count() == n0          # docmap gated
     assert reader.postings.filter("batch = 1").count() == 0  # postings gated
+    # the driver-side doc_freq lookup applies the same gate: it sums
+    # batch 0's term_stats only, never the orphan batch=1 delta
+    terms = ["the", "data", "fast", "absent"]
+
+    def sums(df):
+        rows = df.filter(F.col("term").isin(terms)).groupBy("term") \
+            .agg(F.sum("doc_freq").alias("df")).collect()
+        return {t: 0 for t in terms} | {r["term"]: r["df"] for r in rows}
+
+    gated = sums(reader.term_stats)
+    assert reader.doc_freqs(terms) == gated
+    assert sums(spark.read.parquet(os.path.join(out, "term_stats"))) != gated
 
     # restart: orphan dirs are reclaimed, then redelivery completes
     ix2 = IncrementalIndexer(spark, out, cfg, segments_per_batch=2)

@@ -5,10 +5,17 @@
   pruning via the term-sorted file layout);
 - unused fat columns (positions) are pruned from the read schema;
 - top-k is TakeOrderedAndProject (per-partition heap + driver merge),
-  never a global sort;
+  never a global sort: the tail that puts the k hits in rank order is a
+  root TakeOrderedAndProject too, so no range-partitioning exchange
+  appears anywhere in a top-k plan;
 - the k-row result side is broadcast into the docmap join, keeping the
-  corpus-scale table distributed.
+  corpus-scale table distributed;
+- query statistics (doc_freq) are read on the driver without a Spark
+  job, so a term top-k runs 2 jobs and a WAND or exact boolean query 3
+  (``count_jobs`` pins these counts).
 """
+
+import itertools
 
 import pytest
 
@@ -20,6 +27,23 @@ def _plan(df, execute: bool = False) -> str:
     if execute:  # AQE finalizes join strategies only at execution time
         df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+_job_groups = itertools.count()   # a fresh group name per measurement
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs one call of ``fn`` runs, after one warm-up call (which
+    materializes the reader's lazy tables)."""
+    fn()
+    sc = spark.sparkContext
+    group = f"count_jobs_{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")
@@ -44,6 +68,7 @@ def test_topk_uses_take_ordered_and_broadcast(searcher):
     assert "BroadcastHashJoin" in plan
     assert "BuildLeft" in plan  # the k-row side is built/broadcast
     assert "SortMergeJoin" not in plan
+    assert "rangepartitioning" not in plan  # no global sort
 
 
 def test_wand_topk_plan(tiny_index):
@@ -53,11 +78,16 @@ def test_wand_topk_plan(tiny_index):
     assert "TakeOrderedAndProject" in plan
     assert "BuildLeft" in plan
     assert "PushedFilters: [In(term" in plan
+    assert "rangepartitioning" not in plan  # no global sort
 
 
-def test_count_single_term_is_stats_lookup(searcher, tiny_golden):
-    # no postings decode at all: answered from term_stats
+def test_count_single_term_is_stats_lookup(spark, searcher, tiny_golden):
+    # no postings decode at all: answered from term_stats, which the
+    # driver reads without a Spark job
     assert searcher.count(TermQuery("data")) == tiny_golden.doc_freq("data")
+    assert count_jobs(spark, lambda: searcher.reader.doc_freqs(
+        ["data", "fast", "absent"])) == 0
+    assert count_jobs(spark, lambda: searcher.count(TermQuery("data"))) == 0
 
 
 def test_term_range_predicate_pushed_to_parquet(searcher):
@@ -124,30 +154,30 @@ def test_single_term_wand_has_no_repartition(spark, tiny_index):
     assert "hashpartitioning(segment_ord" in p2
 
 
-def _wand_or_jobs(spark, reader, group) -> int:
+def _wand_or(reader):
     from tantivy_spark.query.wand import wand_topk
 
-    wand_topk(reader, ["the", "data"], k=10).collect()   # warm the reader
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        wand_topk(reader, ["the", "data"], k=10).collect()
-    finally:
-        sc._jsc.clearJobGroup()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return lambda: wand_topk(reader, ["the", "data"], k=10).collect()
+
+
+def test_term_topk_job_count(spark, tiny_index):
+    """A term top-k is the WAND kernel job plus the docmap job: the
+    doc_freq lookup runs no job and the rank-order tail no global sort."""
+    from tantivy_spark.query.searcher import Searcher
+
+    s = Searcher(tiny_index)
+    assert count_jobs(spark, lambda: s.search("data").collect()) == 2
 
 
 def test_wand_or_job_count(spark, tiny_index, tiny_pages, tmp_path_factory):
-    """A 2-term OR counts its pruning work inside its one execution:
-    7 jobs, as before the counters moved into the kernel (the separate
-    counting run added 5 more).  With deletes, one bounded collect of
-    the delete set replaces a count plus a collect: 11 jobs before, 9
-    now."""
+    """A 2-term OR counts its pruning work inside its one execution and
+    runs 3 jobs.  With deletes, the one bounded collect of the delete set
+    is the only extra job (its fixed read schema infers nothing)."""
     from tantivy_spark.index.build import IndexConfig, build_index
     from tantivy_spark.index.deletes import delete_by_keys
     from tantivy_spark.index.reader import IndexReader
 
-    assert _wand_or_jobs(spark, tiny_index, "wand_or_jobs") == 7
+    assert count_jobs(spark, _wand_or(tiny_index)) == 3
     out = str(tmp_path_factory.mktemp("wdel") / "idx")
     build_index(spark, tiny_pages, out, IndexConfig(
         key_col="url", text_col="text", n_segments=4,
@@ -156,7 +186,7 @@ def test_wand_or_job_count(spark, tiny_index, tiny_pages, tmp_path_factory):
     keys = [r["key"] for r in
             ExactSearcher(reader).search(TermQuery("the"), k=5).collect()]
     assert delete_by_keys(spark, reader, keys) == 5
-    assert _wand_or_jobs(spark, reader, "wand_or_jobs_deletes") == 9
+    assert count_jobs(spark, _wand_or(reader)) == 4
 
 
 def test_chunk_dedup_plan_is_udf_free(spark):
@@ -282,15 +312,7 @@ def test_exact_multi_clause_is_one_scan_one_aggregate(searcher, name):
 
 
 def test_exact_boolean_job_count(spark, searcher):
-    """``+data fast -slow``: one doc_freqs lookup plus one execution.
-    The per-clause lowering (join chains plus a second doc_freqs lookup
-    for the MUST_NOT clause) ran 10 jobs for this query."""
+    """``+data fast -slow``: one execution of 3 jobs; the doc_freqs
+    lookup runs none."""
     q = _exact_shapes()["must_should_not"]
-    searcher.search(q, k=10).collect()     # warm the reader's lazy tables
-    sc = spark.sparkContext
-    sc.setJobGroup("exact_boolean_jobs", "exact_boolean_jobs")
-    try:
-        searcher.search(q, k=10).collect()
-    finally:
-        sc._jsc.clearJobGroup()
-    assert len(sc.statusTracker().getJobIdsForGroup("exact_boolean_jobs")) == 7
+    assert count_jobs(spark, lambda: searcher.search(q, k=10).collect()) == 3
