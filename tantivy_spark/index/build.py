@@ -23,14 +23,26 @@ budget):
   a manifest entry; re-running skips completed stages.  Per-partition
   lineage + throughput metrics land in ``lineage/`` and ``meta.json``.
 
+This module is the one definition of how an index directory is written.
+``build_index`` and streaming ingest (``streaming/ingest.py``) derive
+postings and docmap from source documents with :func:`segment_postings`
+and :func:`segment_docmap`; they and ``merge_segments`` (``merge.py``)
+derive ``term_stats`` and ``lineage`` from the written postings with
+:func:`term_stats_table` and :func:`lineage_table`, and the manifest
+``totals`` from per-chain sentinel statistics with :func:`index_totals`.
+Each caller only schedules the writes.
+
 Layout of an index directory::
 
-    {out}/docmap/      (segment_ord, doc_id, key, num_tokens)
+    {out}/docmap/      (segment_ord, doc_id, key, *fast_field_cols[, sortv])
     {out}/postings/    (segment_ord, term, chunk_id, doc_freq, total_tf,
                         docs, tfs, fns, pos, last_docs, n_docs,
-                        bits_doc, bits_tf, wand_fn, wand_tf)
+                        bits_doc, bits_tf, wand_fn, wand_tf); per-doc
+                       num_tokens and fieldnorm ids ride in the
+                       FIELDNORM_SENTINEL rows
     {out}/term_stats/  (term, doc_freq, total_tf)
-    {out}/lineage/     (segment_ord, stage, rows, bytes, wall_sec)
+    {out}/lineage/     (segment_ord, n_docs, n_tokens, posting_rows,
+                        postings, bytes)
     {out}/meta.json    manifest
 """
 
@@ -39,10 +51,10 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import asdict, dataclass, field
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import asdict, dataclass, replace
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -326,9 +338,8 @@ def _segment_kernel(cfg: IndexConfig):
                                      sentinel, chunk_docs, with_positions,
                                      pre_analyzed))
         cols = list(zip(*rows))
-        names = list(_EMPTY_POSTINGS.keys())
         return pa.table(
-            {names[i]: list(cols[i]) for i in range(len(names))},
+            {name: list(cols[i]) for i, name in enumerate(POSTINGS_COLUMNS)},
             schema=_POSTINGS_PA_SCHEMA,
         )
 
@@ -397,20 +408,8 @@ def _segment_kernel(cfg: IndexConfig):
         avg_fn = (total_tokens / n_docs) if n_docs else 1.0
         cache = tf_cache_f32(max(avg_fn, 1e-9))
 
-        # sentinel rows are CHUNKED like posting lists: chunk c covers docs
-        # [c*CHUNK_DOCS, (c+1)*CHUNK_DOCS).  A single whole-segment row
-        # would be a multi-GB cell at 10^9 docs; chunking keeps every row
-        # bounded and lets fieldnorm decoding parallelize.
-        rows = []
-        for c0 in range(0, n_docs, chunk_docs) if n_docs else [0]:
-            c1 = min(c0 + chunk_docs, n_docs)
-            rows.append((
-                seg, sentinel, c0 // chunk_docs, c1 - c0,
-                int(counts[c0:c1].sum()),
-                codec.vint_encode(counts[c0:c1].astype(np.uint32)), b"",
-                fn_ids_per_doc[c0:c1].tobytes(), None,
-                [], [], [], [], [], [],
-            ))
+        rows = sentinel_chunks(seg, sentinel, counts, fn_ids_per_doc,
+                               chunk_docs)
         if total_tokens:
             # (term, doc, pos) ordering.  Fast path: bit-pack the three
             # keys into ONE int64 and np.sort it — a single-array sort
@@ -490,14 +489,6 @@ def _segment_kernel(cfg: IndexConfig):
     return build_segment
 
 
-_EMPTY_POSTINGS = {
-    "segment_ord": "int32", "term": "object", "chunk_id": "int32",
-    "doc_freq": "int64", "total_tf": "int64",
-    "docs": "object", "tfs": "object", "fns": "object", "pos": "object",
-    "last_docs": "object", "n_docs": "object", "bits_doc": "object",
-    "bits_tf": "object", "wand_fn": "object", "wand_tf": "object",
-}
-
 import pyarrow as _pa  # noqa: E402
 
 _POSTINGS_PA_SCHEMA = _pa.schema([
@@ -509,6 +500,152 @@ _POSTINGS_PA_SCHEMA = _pa.schema([
     ("bits_doc", _pa.list_(_pa.int32())), ("bits_tf", _pa.list_(_pa.int32())),
     ("wand_fn", _pa.list_(_pa.int32())), ("wand_tf", _pa.list_(_pa.int32())),
 ])
+
+#: postings column names, in POSTINGS_SCHEMA order (the frames the merge
+#: kernels emit)
+POSTINGS_COLUMNS = _POSTINGS_PA_SCHEMA.names
+
+
+def sentinel_chunks(seg: int, sentinel: str, counts: np.ndarray,
+                    fn_ids: np.ndarray, chunk_docs: int) -> list[tuple]:
+    """Postings rows of one segment's fieldnorm sentinel chain: per-doc
+    token counts (VInt) in ``docs`` and fieldnorm ids (u8) in ``fns``.
+
+    Sentinel rows are CHUNKED like posting lists: chunk c covers docs
+    [c*chunk_docs, (c+1)*chunk_docs).  A single whole-segment row would be
+    a multi-GB cell at 10^9 docs; chunking keeps every row bounded and
+    lets fieldnorm decoding parallelize.  An empty chain still gets one
+    row, so every segment carries every chain."""
+    n = len(counts)
+    rows = []
+    for c0 in range(0, n, chunk_docs) if n else [0]:
+        c1 = min(c0 + chunk_docs, n)
+        rows.append((
+            seg, sentinel, c0 // chunk_docs, c1 - c0,
+            int(counts[c0:c1].sum()),
+            codec.vint_encode(counts[c0:c1].astype(np.uint32)), b"",
+            fn_ids[c0:c1].tobytes(), None,
+            [], [], [], [], [], [],
+        ))
+    return rows
+
+
+def _doc_sentinel(field_cols: dict | None) -> str:
+    """The sentinel chain whose doc counts are the index's doc counts: a
+    multi-field index carries one chain PER FIELD, all covering the same
+    docs, so exactly one (the first field's) is counted."""
+    return fieldnorm_sentinel(next(iter(field_cols)) if field_cols else None)
+
+
+def _is_sentinel():
+    return F.col("term").startswith(FIELDNORM_SENTINEL)
+
+
+# ---- the index-write path (see the module docstring) -------------------------
+
+def write_table(df: DataFrame, path: str, compression: str) -> None:
+    df.write.mode("overwrite").option("compression", compression).parquet(path)
+
+
+def segment_postings(df: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """Posting and sentinel rows of every segment: tokenize JVM-side, then
+    one segment kernel per ``segment_ord`` group."""
+    return (_tokenized_docs(df, cfg)
+            .groupBy("segment_ord")
+            .applyInArrow(_segment_kernel(cfg), schema=POSTINGS_SCHEMA))
+
+
+def segment_docmap(df: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """(segment_ord, doc_id, key, fast fields[, sortv]) with doc ids in the
+    order the segment kernel assigns them: key order, or (sortv, key)
+    order on a sorted index.  A sorted index KEEPS its sort value on the
+    docmap (the reference requires sort_by_field to be a fast field,
+    index_meta.rs): the sorted merge re-derives the doc-id permutation
+    from it (merge.py)."""
+    spec = _sort_spec(cfg)
+    order = [F.col("key")]
+    if spec:
+        order.insert(0, F.col("sortv").desc() if spec[1]
+                     else F.col("sortv").asc())
+    w = Window.partitionBy("segment_ord").orderBy(*order)
+    keep = ["key", *(cfg.fast_field_cols or ()), *(["sortv"] if spec else [])]
+    return (_segmented_docs(df, cfg).select("segment_ord", *keep)
+            .withColumn("doc_id", (F.row_number().over(w) - 1).cast("int"))
+            .select("segment_ord", "doc_id", *keep))
+
+
+def term_stats_table(postings: DataFrame) -> DataFrame:
+    """(term, doc_freq, total_tf) summed over segments; sentinel rows are
+    not terms."""
+    return (postings.filter(~_is_sentinel())
+            .groupBy("term")
+            .agg(F.sum("doc_freq").alias("doc_freq"),
+                 F.sum("total_tf").alias("total_tf")))
+
+
+def lineage_table(postings: DataFrame, field_cols: dict | None) -> DataFrame:
+    """Per-segment lineage: (segment_ord, n_docs, n_tokens, posting_rows,
+    postings, bytes).  ``n_tokens`` counts every field's tokens; ``bytes``
+    is the encoded docs/tfs/fns/pos payload."""
+    is_sent = _is_sentinel()
+    return postings.groupBy("segment_ord").agg(
+        F.sum(F.when(F.col("term") == _doc_sentinel(field_cols),
+                     F.col("doc_freq"))).alias("n_docs"),
+        F.sum(F.when(is_sent, F.col("total_tf"))).alias("n_tokens"),
+        F.sum(F.when(~is_sent, 1).otherwise(0)).alias("posting_rows"),
+        F.sum(F.when(~is_sent, F.col("doc_freq"))).alias("postings"),
+        (F.sum(F.octet_length("docs")) + F.sum(F.octet_length("tfs"))
+         + F.sum(F.octet_length("fns"))
+         + F.sum(F.coalesce(F.octet_length("pos"), F.lit(0)))).alias("bytes"),
+    )
+
+
+def sentinel_stats(postings: DataFrame) -> tuple[list[tuple], int]:
+    """The input of :func:`index_totals` read from written postings:
+    (sentinel term, docs, tokens) of every sentinel row, and the number of
+    segments they cover.  One column-pruned scan and one collect of
+    O(segments x fields x chunks) rows — no aggregation job."""
+    rows = (postings.filter(_is_sentinel())
+            .select("segment_ord", "term", "doc_freq", "total_tf").collect())
+    return ([(r["term"], r["doc_freq"], r["total_tf"]) for r in rows],
+            len({r["segment_ord"] for r in rows}))
+
+
+def index_totals(chains, num_segments: int,
+                 field_cols: dict | None) -> dict:
+    """The manifest ``totals``: num_docs, total_num_tokens, num_segments,
+    avg_fieldnorm and, on a multi-field index, per-field ``fields``
+    statistics (the reference keeps the average fieldnorm per field —
+    bm25.rs uses the searched field's average, not a document-global
+    one).
+
+    ``chains``: (sentinel term, docs, tokens) rows, summed per chain, so
+    any split works — per sentinel row (build, ingest), per chain of the
+    alive docs (merge), or published totals plus a new batch (ingest)."""
+    per: dict[str, list[int]] = {}
+    for term, docs, tokens in chains:
+        acc = per.setdefault(term, [0, 0])
+        acc[0] += int(docs or 0)
+        acc[1] += int(tokens or 0)
+    num_docs = per.get(_doc_sentinel(field_cols), [0, 0])[0]
+    total_tokens = sum(t for _d, t in per.values())
+
+    def avg(tokens: int, docs: int) -> float:
+        return (tokens / docs) if docs else 0.0
+
+    totals = {
+        "num_docs": num_docs,
+        "total_num_tokens": total_tokens,
+        "num_segments": int(num_segments),
+        "avg_fieldnorm": avg(total_tokens, num_docs),
+    }
+    if field_cols:
+        totals["fields"] = {
+            term.split(FIELD_SEP, 1)[1]: {
+                "num_docs": d, "total_num_tokens": t,
+                "avg_fieldnorm": avg(t, d)}
+            for term, (d, t) in per.items()}
+    return totals
 
 
 #: floor for auto segment sizing — the historical default count, so
@@ -556,8 +693,6 @@ def resolve_n_segments(spark: SparkSession, df: DataFrame,
             "segment_expr pins the segment assignment; give an explicit "
             "n_segments consistent with it (auto sizing would disagree "
             "with the expression's ordinal space)")
-    from dataclasses import replace as _replace
-
     budget = int(os.environ.get("SPARK_GRAFT_KERNEL_TEXT_BUDGET",
                                 DEFAULT_KERNEL_TEXT_BUDGET))
     text_cols = (list(cfg.field_cols.values()) if cfg.field_cols
@@ -594,7 +729,20 @@ def resolve_n_segments(spark: SparkSession, df: DataFrame,
         # wall lost vs an even 2x32 split of smaller kernels)
         by_budget = -(-max(by_budget, width) // width) * width
     n = max(MIN_AUTO_SEGMENTS, by_budget)
-    return _replace(cfg, n_segments=int(n))
+    return replace(cfg, n_segments=int(n))
+
+
+def checked_config(cfg: IndexConfig) -> IndexConfig:
+    """Validate ``record_option`` and normalize ``with_positions`` to it:
+    Basic / WithFreqs never index positions (index_record_option.rs), so
+    the manifest and the positional-query guard agree."""
+    if cfg.record_option not in ("basic", "freqs", "positions"):
+        raise ValueError(
+            f"unknown record_option {cfg.record_option!r}; expected one "
+            f"of ['basic', 'freqs', 'positions']")
+    if cfg.record_option != "positions" and cfg.with_positions:
+        return replace(cfg, with_positions=False)
+    return cfg
 
 
 def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -603,18 +751,7 @@ def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
 
     Returns the manifest dict (also written to ``{out_dir}/meta.json``).
     """
-    cfg = cfg or IndexConfig()
-    cfg = resolve_n_segments(spark, df, cfg)
-    if cfg.record_option not in ("basic", "freqs", "positions"):
-        raise ValueError(
-            f"unknown record_option {cfg.record_option!r}; expected one "
-            f"of ['basic', 'freqs', 'positions']")
-    if cfg.record_option != "positions" and cfg.with_positions:
-        # Basic / WithFreqs never index positions
-        # (index_record_option.rs) — normalize so the manifest and the
-        # positional-query guard agree
-        from dataclasses import replace as _replace
-        cfg = _replace(cfg, with_positions=False)
+    cfg = checked_config(resolve_n_segments(spark, df, cfg or IndexConfig()))
     os.makedirs(out_dir, exist_ok=True)
 
     # Pin the build's shuffle layout: AQE's partition coalescing optimizes
@@ -665,7 +802,6 @@ def build_index_wide(spark: SparkSession, df: DataFrame, out_dir: str,
     ``build_segments`` does not exceed the target count.
     """
     import shutil
-    from dataclasses import replace
 
     from tantivy_spark.index.merge import merge_segments
 
@@ -698,140 +834,48 @@ def _build_index_inner(spark: SparkSession, df: DataFrame, out_dir: str,
         else:
             resume = False  # config changed: full rebuild
 
-    docs = _segmented_docs(df, cfg)
+    def path(table: str) -> str:
+        return os.path.join(out_dir, table)
 
-    # ---- stages: docmap || postings (independent scans of the source, so
-    # they are submitted concurrently — the small docmap job fills slots
-    # the postings waves leave idle), then term_stats || lineage over the
-    # compact postings output.  Stage completion is still checkpointed
-    # individually for resume.
-    from concurrent.futures import ThreadPoolExecutor
+    def run_stages(stages: dict) -> None:
+        """Write the stages not yet done, concurrently (each pair is
+        independent, so the small job fills slots the big one leaves
+        idle); each is checkpointed individually for resume."""
+        todo = {name: table for name, table in stages.items()
+                if not (resume and _stage_done(out_dir, name))}
+        if not todo:
+            return
 
-    def _docmap_job():
-        t0 = time.time()
-        spec = _sort_spec(cfg)
-        if spec:
-            first = F.col("sortv").desc() if spec[1] else F.col("sortv").asc()
-            w = Window.partitionBy("segment_ord").orderBy(first, F.col("key"))
-        else:
-            w = Window.partitionBy("segment_ord").orderBy("key")
-        ffs = list(cfg.fast_field_cols or ())
-        narrow = docs.select("segment_ord", "key", *ffs,
-                             *(["sortv"] if spec else []))
-        # a sorted index KEEPS its sort value on the docmap (the
-        # reference requires sort_by_field to be a fast field,
-        # index_meta.rs) — the sorted MERGE path re-derives the doc-id
-        # permutation from it (merge.py)
-        docmap = narrow \
-            .withColumn("doc_id", (F.row_number().over(w) - 1).cast("int")) \
-            .select("segment_ord", "doc_id", "key", *ffs,
-                    *(["sortv"] if spec else []))
-        docmap.write.mode("overwrite").option(
-            "compression", cfg.compression).parquet(
-            os.path.join(out_dir, "docmap"))
-        return time.time() - t0
+        def timed(name: str, table) -> float:
+            t0 = time.time()
+            write_table(table(), path(name), cfg.compression)
+            return time.time() - t0
 
-    def _postings_job():
-        t0 = time.time()
-        postings = (
-            _tokenized_docs(df, cfg)
-            .groupBy("segment_ord")
-            .applyInArrow(_segment_kernel(cfg), schema=POSTINGS_SCHEMA)
-        )
-        postings.write.mode("overwrite").option(
-            "compression", cfg.compression).parquet(
-            os.path.join(out_dir, "postings"))
-        return time.time() - t0
-
-    jobs = {}
-    if not (resume and _stage_done(out_dir, "docmap")):
-        jobs["docmap"] = _docmap_job
-    if not (resume and _stage_done(out_dir, "postings")):
-        jobs["postings"] = _postings_job
-    if jobs:
         with ThreadPoolExecutor(max_workers=2) as ex:
-            futs = {name: ex.submit(fn) for name, fn in jobs.items()}
+            futs = {name: ex.submit(timed, name, table)
+                    for name, table in todo.items()}
             for name, fut in futs.items():
-                manifest["stages"][name] = {"wall_sec": fut.result(), "status": "done"}
+                manifest["stages"][name] = {"wall_sec": fut.result(),
+                                            "status": "done"}
         _write_manifest(manifest_path, manifest)
 
-    # a multi-field index carries one sentinel chain PER FIELD; doc counts
-    # must come from exactly one of them (they all cover the same docs)
-    doc_sentinel = fieldnorm_sentinel(
-        next(iter(cfg.field_cols)) if cfg.field_cols else None)
+    # docmap || postings: independent scans of the source; then
+    # term_stats || lineage over the compact postings output
+    run_stages({"docmap": lambda: segment_docmap(df, cfg),
+                "postings": lambda: segment_postings(df, cfg)})
+    run_stages({
+        "term_stats": lambda: term_stats_table(
+            spark.read.parquet(path("postings"))),
+        "lineage": lambda: lineage_table(
+            spark.read.parquet(path("postings")), cfg.field_cols),
+    })
 
-    def _term_stats_job():
-        t0 = time.time()
-        postings = spark.read.parquet(os.path.join(out_dir, "postings"))
-        (postings.filter(~F.col("term").startswith(FIELDNORM_SENTINEL))
-         .groupBy("term")
-         .agg(F.sum("doc_freq").alias("doc_freq"), F.sum("total_tf").alias("total_tf"))
-         .write.mode("overwrite").option("compression", cfg.compression)
-         .parquet(os.path.join(out_dir, "term_stats")))
-        return time.time() - t0
-
-    def _lineage_job():
-        t0 = time.time()
-        postings = spark.read.parquet(os.path.join(out_dir, "postings"))
-        is_sent = F.col("term").startswith(FIELDNORM_SENTINEL)
-        lin = postings.groupBy("segment_ord").agg(
-            F.sum(F.when(F.col("term") == doc_sentinel, F.col("doc_freq")))
-            .alias("n_docs"),
-            F.sum(F.when(is_sent, F.col("total_tf"))).alias("n_tokens"),
-            F.sum(F.when(~is_sent, 1).otherwise(0)).alias("posting_rows"),
-            F.sum(F.when(~is_sent, F.col("doc_freq"))).alias("postings"),
-            (F.sum(F.octet_length("docs")) + F.sum(F.octet_length("tfs"))
-             + F.sum(F.octet_length("fns"))
-             + F.sum(F.coalesce(F.octet_length("pos"), F.lit(0)))).alias("bytes"),
-        )
-        lin.write.mode("overwrite").option(
-            "compression", cfg.compression).parquet(
-            os.path.join(out_dir, "lineage"))
-        return time.time() - t0
-
-    jobs = {}
-    if not (resume and _stage_done(out_dir, "term_stats")):
-        jobs["term_stats"] = _term_stats_job
-    if not (resume and _stage_done(out_dir, "lineage")):
-        jobs["lineage"] = _lineage_job
-    if jobs:
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            futs = {name: ex.submit(fn) for name, fn in jobs.items()}
-            for name, fut in futs.items():
-                manifest["stages"][name] = {"wall_sec": fut.result(), "status": "done"}
-        _write_manifest(manifest_path, manifest)
-
-    # ---- totals (driver-side sum over the tiny lineage table) ------------
     if "totals" not in manifest:
-        lin_rows = spark.read.parquet(os.path.join(out_dir, "lineage")).collect()
-        num_docs = sum(int(r["n_docs"] or 0) for r in lin_rows)
-        total_tokens = sum(int(r["n_tokens"] or 0) for r in lin_rows)
-        tot = {"num_segments": len({r["segment_ord"] for r in lin_rows})}
-        manifest["totals"] = {
-            "num_docs": num_docs,
-            "total_num_tokens": total_tokens,
-            "num_segments": tot["num_segments"],
-            "avg_fieldnorm": (total_tokens / num_docs) if num_docs else 0.0,
-        }
-        if cfg.field_cols:
-            # per-field BM25 statistics from each field's sentinel chain
-            # (the reference keeps avg fieldnorm per field — bm25.rs uses
-            # the searched field's average, not a document-global one)
-            sent_rows = (
-                spark.read.parquet(os.path.join(out_dir, "postings"))
-                .filter(F.col("term").startswith(FIELDNORM_SENTINEL))
-                .groupBy("term")
-                .agg(F.sum("doc_freq").alias("nd"), F.sum("total_tf").alias("nt"))
-                .collect())
-            fields: dict = {}
-            for r in sent_rows:
-                fld = r["term"].split(FIELD_SEP, 1)[1]
-                nd, nt = int(r["nd"]), int(r["nt"])
-                fields[fld] = {
-                    "num_docs": nd, "total_num_tokens": nt,
-                    "avg_fieldnorm": (nt / nd) if nd else 0.0,
-                }
-            manifest["totals"]["fields"] = fields
+        totals = index_totals(
+            *sentinel_stats(spark.read.parquet(path("postings"))),
+            cfg.field_cols)
+        manifest["totals"] = totals
+        num_docs, total_tokens = totals["num_docs"], totals["total_num_tokens"]
         wall = sum(s.get("wall_sec", 0.0) for s in manifest["stages"].values())
         manifest["metrics"] = {
             "build_wall_sec": wall,

@@ -29,6 +29,14 @@ kernel output term-sorted, so no post-kernel layout exchange is needed).
 Renumbering is order-deterministic regardless of placement, so the
 partitioning never changes the output (asserted by tests).
 
+Inputs are read through the reader's publish gate (``IndexReader._table``):
+merging a streaming-built index sees only the batches its manifest
+published, without their ``batch`` column, and the merged manifest drops
+the streaming-only keys.  ``term_stats``, ``lineage``, the sentinel rows
+and the manifest ``totals`` are written with the build's definitions
+(``build.term_stats_table``, ``lineage_table``, ``sentinel_chunks``,
+``index_totals``); the totals come from the pre-kernel alive-token sums.
+
 SORTED indexes (config.sort_col set, ref merger.rs sorted path +
 test_merge_facets_sort_asc/desc): stacking would break the sort, so the
 merge instead materializes an old->new doc-id permutation per output
@@ -47,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
@@ -56,14 +65,22 @@ from pyspark.sql import functions as F
 from tantivy_spark.bm25 import tf_cache_f32
 from tantivy_spark.index import codec
 from tantivy_spark.index.build import (
-    CHUNK_DOCS,
     FIELD_SEP,
     FIELDNORM_SENTINEL,
+    POSTINGS_COLUMNS,
     POSTINGS_SCHEMA,
     _write_manifest,
-    fieldnorm_sentinel,
+    index_totals,
+    lineage_table,
+    sentinel_chunks,
+    term_stats_table,
+    write_table,
 )
-from tantivy_spark.index.reader import DELETES_SCHEMA
+from tantivy_spark.index.reader import IndexReader
+
+#: manifest keys that describe a streaming-built index's batches; a
+#: merged index is one plain (batch-free) set of segments
+_STREAMING_KEYS = ("batches", "next_segment_ord", "opstamp")
 
 
 def _dead_in_chunk(dd: np.ndarray | None, base: int, n: int) -> np.ndarray | None:
@@ -140,11 +157,7 @@ def _rebase_kernel(offsets: dict[int, int], out_seg: dict[int, int],
                     list(m[4]), list(m[5]),
                 ))
             if out_rows:
-                yield pd.DataFrame(out_rows, columns=[
-                    "segment_ord", "term", "chunk_id", "doc_freq", "total_tf",
-                    "docs", "tfs", "fns", "pos", "last_docs", "n_docs",
-                    "bits_doc", "bits_tf", "wand_fn", "wand_tf",
-                ])
+                yield pd.DataFrame(out_rows, columns=POSTINGS_COLUMNS)
 
     return rebase
 
@@ -247,10 +260,7 @@ def _sorted_merge_stream(perms_bc, avg_fieldnorm: float, chunk_docs: int,
                 p_parts.append(pos_flat if pos_flat is not None
                                else np.zeros(0, np.int64))
         if not d_parts:
-            return pd.DataFrame(columns=[
-                "segment_ord", "term", "chunk_id", "doc_freq", "total_tf",
-                "docs", "tfs", "fns", "pos", "last_docs", "n_docs",
-                "bits_doc", "bits_tf", "wand_fn", "wand_tf"])
+            return pd.DataFrame(columns=POSTINGS_COLUMNS)
         d = np.concatenate(d_parts)
         t = np.concatenate(t_parts)
         fn = np.concatenate(f_parts)
@@ -284,10 +294,7 @@ def _sorted_merge_stream(perms_bc, avg_fieldnorm: float, chunk_docs: int,
                          db, tb, fb, pb,
                          list(m[0]), list(m[1]), list(m[2]), list(m[3]),
                          list(m[4]), list(m[5])))
-        return pd.DataFrame(rows, columns=[
-            "segment_ord", "term", "chunk_id", "doc_freq", "total_tf",
-            "docs", "tfs", "fns", "pos", "last_docs", "n_docs",
-            "bits_doc", "bits_tf", "wand_fn", "wand_tf"])
+        return pd.DataFrame(rows, columns=POSTINGS_COLUMNS)
 
     def stream(batches):
         pending: pd.DataFrame | None = None
@@ -424,22 +431,24 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
         t_prev[0] = now
 
     _t = [t_start]
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        manifest = json.load(f)
+    # every input goes through the reader's publish gate: on a
+    # streaming-built index only the batches the manifest published are
+    # merged, and the ``batch`` partition column is dropped
+    reader = IndexReader(spark, index_dir)
+    manifest = reader.manifest
     os.makedirs(out_dir, exist_ok=True)
 
-    chunk_docs = int(manifest.get("config", {}).get("chunk_docs", CHUNK_DOCS))
-    lineage = spark.read.parquet(os.path.join(index_dir, "lineage")).collect()
-    seg_docs = {int(r["segment_ord"]): int(r["n_docs"] or 0) for r in lineage}
+    chunk_docs = reader.chunk_docs
+    seg_docs = {int(r["segment_ord"]): int(r["n_docs"] or 0)
+                for r in reader._table("lineage").collect()}
 
     # deletes are physically dropped at merge (reference: merger drops
     # deleted docs and renumbers the survivors; total_num_tokens is
     # recomputed from alive fieldnorms — merger.rs:85-114, 697-708)
     dead: dict[int, np.ndarray] = {}
-    deletes_path = os.path.join(index_dir, "deletes")
-    if os.path.isdir(deletes_path):
-        dels_df = spark.read.schema(DELETES_SCHEMA).parquet(deletes_path) \
-            .distinct()
+    dels_df = reader.deletes
+    if dels_df is not None:
+        dels_df = dels_df.distinct()
         for row in dels_df.collect():
             dead.setdefault(int(row["segment_ord"]), []).append(int(row["doc_id"]))
         dead = {s: np.sort(np.array(v, dtype=np.int64)) for s, v in dead.items()}
@@ -464,7 +473,7 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
     # build's (sortv, key) order, so wide-build + sorted-merge
     # reproduces a direct sorted build byte-for-byte.
     sort_col = manifest.get("config", {}).get("sort_col") or None
-    docmap = spark.read.parquet(os.path.join(index_dir, "docmap"))
+    docmap = reader._table("docmap").drop("batch")
     if dead:
         docmap = docmap.join(F.broadcast(dels_df),
                              ["segment_ord", "doc_id"], "left_anti")
@@ -482,8 +491,8 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
                                      F.row_number().over(w_sort) - 1)
                          .persist())
 
-    field_cols = manifest.get("config", {}).get("field_cols") or None
-    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
+    field_cols = reader.field_cols
+    postings = reader._table("postings").drop("batch")
     real = postings.filter(~F.col("term").startswith(FIELDNORM_SENTINEL))
     sent = postings.filter(F.col("term").startswith(FIELDNORM_SENTINEL))
 
@@ -524,9 +533,8 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
 
     # the permutation packing (sorted indexes) and the token-stats agg
     # are independent driver-blocking jobs — overlap them (r8)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
     if sorted_docmap is not None:
-        with _TPE(max_workers=2) as _ex:
+        with ThreadPoolExecutor(max_workers=2) as _ex:
             _f_perm = _ex.submit(_collect_perms, sorted_docmap, seg_docs)
             _f_tok = _ex.submit(_tok_job)
             tok_rows = _f_tok.result()
@@ -534,14 +542,12 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
     else:
         tok_rows = _tok_job()
     _mark("plan_stats", _t)
-    alive_tokens = sum(int(r["t"]) for r in tok_rows)
-    avg_fn = (alive_tokens / total_alive) if total_alive else 1.0
-    avg_by_field = None
-    if field_cols:
-        avg_by_field = {
-            r["term"].split(FIELD_SEP, 1)[1]:
-                (int(r["t"]) / total_alive) if total_alive else 1.0
-            for r in tok_rows}
+    # every sentinel chain covers all alive docs
+    totals = index_totals([(r["term"], total_alive, r["t"]) for r in tok_rows],
+                          n_out, field_cols)
+    avg_fn = totals["avg_fieldnorm"]
+    avg_by_field = ({f: e["avg_fieldnorm"] for f, e in totals["fields"].items()}
+                    if field_cols else None)
 
     if perms_bc is not None:
         # sorted merge: every (term, output-segment) group re-sorts by
@@ -595,49 +601,35 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
             _rebase_kernel(offsets, out_seg, avg_fn, dead, avg_by_field),
             schema=POSTINGS_SCHEMA)
 
-    # ---- merged fieldnorm sentinels: concat per-doc stats in segment
-    # order within each output segment, re-chunked per CHUNK_DOCS (one
-    # bounded row per chunk — never a whole-segment cell)
-    def merge_sentinels(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one invocation per (output segment, sentinel term): each field's
-        # chain merges independently with identical stacking
-        pdf = pdf.sort_values(["segment_ord", "chunk_id"], ignore_index=True)
-        g = out_seg[int(pdf["segment_ord"].iloc[0])]
-        sentinel_term = pdf["term"].iloc[0]
-        counts_parts, fns_parts = [], []
+    # ---- merged fieldnorm sentinels: one invocation per (output segment,
+    # sentinel term), so each field's chain merges independently.  The
+    # per-doc stats are stacked in segment order (or, on a sorted index,
+    # scattered to each doc's NEW position), then re-chunked per
+    # chunk_docs by the build's sentinel writer.
+    def decoded_sentinels(pdf: pd.DataFrame):
         for row in pdf.itertuples(index=False):
             n = int(row.doc_freq)
-            cbase = int(row.chunk_id) * chunk_docs
-            counts = codec.vint_decode(bytes(row.docs), n)
-            fns = np.frombuffer(bytes(row.fns), dtype=np.uint8)
-            loc = _dead_in_chunk(dead.get(int(row.segment_ord)), cbase, n)
+            yield (int(row.segment_ord), int(row.chunk_id) * chunk_docs, n,
+                   codec.vint_decode(bytes(row.docs), n),
+                   np.frombuffer(bytes(row.fns), dtype=np.uint8))
+
+    def merge_sentinels(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["segment_ord", "chunk_id"], ignore_index=True)
+        counts_parts, fns_parts = [], []
+        for seg, base, n, counts, fns in decoded_sentinels(pdf):
+            loc = _dead_in_chunk(dead.get(seg), base, n)
             if loc is not None:
                 mask = np.ones(n, dtype=bool)
                 mask[loc] = False
                 counts, fns = counts[mask], fns[mask]
             counts_parts.append(counts)
             fns_parts.append(fns)
-        all_counts = np.concatenate(counts_parts) if counts_parts else np.zeros(0, np.uint32)
-        all_fns = np.concatenate(fns_parts) if fns_parts else np.zeros(0, np.uint8)
-        n_all = len(all_counts)
-        rows = []
-        for c0 in range(0, n_all, chunk_docs) if n_all else [0]:
-            c1 = min(c0 + chunk_docs, n_all)
-            rows.append((
-                g, sentinel_term, c0 // chunk_docs, c1 - c0,
-                int(all_counts[c0:c1].sum()),
-                codec.vint_encode(all_counts[c0:c1].astype(np.uint32)), b"",
-                all_fns[c0:c1].tobytes(), None,
-                [], [], [], [], [], [],
-            ))
-        return pd.DataFrame(rows, columns=[
-            "segment_ord", "term", "chunk_id", "doc_freq", "total_tf",
-            "docs", "tfs", "fns", "pos", "last_docs", "n_docs",
-            "bits_doc", "bits_tf", "wand_fn", "wand_tf"])
+        return pd.DataFrame(sentinel_chunks(
+            out_seg[int(pdf["segment_ord"].iloc[0])], pdf["term"].iloc[0],
+            np.concatenate(counts_parts), np.concatenate(fns_parts),
+            chunk_docs), columns=POSTINGS_COLUMNS)
 
     if perms_bc is not None:
-        # sorted merge: scatter each doc's stats to its NEW position
-        # instead of concatenating in stacking order
         group_sizes: dict[int, int] = {}
         for seg, g in out_seg.items():
             group_sizes[g] = group_sizes.get(g, 0) + alive_docs[seg]
@@ -645,34 +637,16 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
         def merge_sentinels_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
             perms = perms_bc.value
             g = out_seg[int(pdf["segment_ord"].iloc[0])]
-            sentinel_term = pdf["term"].iloc[0]
-            n_all = group_sizes[g]
-            all_counts = np.zeros(n_all, dtype=np.uint32)
-            all_fns = np.zeros(n_all, dtype=np.uint8)
-            for row in pdf.itertuples(index=False):
-                seg = int(row.segment_ord)
-                n = int(row.doc_freq)
-                base = int(row.chunk_id) * chunk_docs
-                counts = codec.vint_decode(bytes(row.docs), n)
-                fns = np.frombuffer(bytes(row.fns), dtype=np.uint8)
+            all_counts = np.zeros(group_sizes[g], dtype=np.uint32)
+            all_fns = np.zeros(group_sizes[g], dtype=np.uint8)
+            for seg, base, n, counts, fns in decoded_sentinels(pdf):
                 nd = perms[seg][base:base + n]
                 keep = nd >= 0
                 all_counts[nd[keep]] = counts[keep]
                 all_fns[nd[keep]] = fns[keep]
-            rows = []
-            for c0 in range(0, n_all, chunk_docs) if n_all else [0]:
-                c1 = min(c0 + chunk_docs, n_all)
-                rows.append((
-                    g, sentinel_term, c0 // chunk_docs, c1 - c0,
-                    int(all_counts[c0:c1].sum()),
-                    codec.vint_encode(all_counts[c0:c1].astype(np.uint32)),
-                    b"", all_fns[c0:c1].tobytes(), None,
-                    [], [], [], [], [], [],
-                ))
-            return pd.DataFrame(rows, columns=[
-                "segment_ord", "term", "chunk_id", "doc_freq", "total_tf",
-                "docs", "tfs", "fns", "pos", "last_docs", "n_docs",
-                "bits_doc", "bits_tf", "wand_fn", "wand_tf"])
+            return pd.DataFrame(sentinel_chunks(
+                g, pdf["term"].iloc[0], all_counts, all_fns, chunk_docs),
+                columns=POSTINGS_COLUMNS)
 
         sentinel_fn = merge_sentinels_sorted
     else:
@@ -714,82 +688,35 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
                           .alias("doc_id"),
                           *extra))
 
+    def write_concurrently(tables: dict) -> None:
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            futs = [ex.submit(write_table, df, os.path.join(out_dir, name),
+                              compression) for name, df in tables.items()]
+            for f in futs:
+                f.result()
+
     # postings and docmap are independent scans/writes — submit them
     # concurrently so the small docmap job back-fills executor slots the
     # postings kernel waves leave idle (r8; same overlap pattern as
     # build_index's docmap || postings stage pair)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _postings_job():
-        merged.unionByName(sent_merged) \
-            .write.mode("overwrite").option("compression", compression)\
-            .parquet(os.path.join(out_dir, "postings"))
-
-    def _docmap_job():
-        docmap_out.write.mode("overwrite").option(
-            "compression", compression).parquet(
-            os.path.join(out_dir, "docmap"))
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        futs = [ex.submit(_postings_job), ex.submit(_docmap_job)]
-        for f in futs:
-            f.result()
+    write_concurrently({"postings": merged.unionByName(sent_merged),
+                        "docmap": docmap_out})
     if perms_bc is not None:
         perms_bc.unpersist()
     if sorted_docmap is not None:
         sorted_docmap.unpersist()
     _mark("postings_docmap_write", _t)
 
-    # ---- term_stats / lineage / manifest ----------------------------------
-    # both derive from the postings just written; independent -> overlap
+    # ---- term_stats / lineage: both derive from the postings just
+    # written; independent -> overlap
     new_postings = spark.read.parquet(os.path.join(out_dir, "postings"))
-    is_sent = F.col("term").startswith(FIELDNORM_SENTINEL)
-    doc_sentinel = fieldnorm_sentinel(
-        next(iter(field_cols)) if field_cols else None)
-
-    def _term_stats_job():
-        (new_postings.filter(~F.col("term").startswith(FIELDNORM_SENTINEL))
-         .groupBy("term")
-         .agg(F.sum("doc_freq").alias("doc_freq"),
-              F.sum("total_tf").alias("total_tf"))
-         .write.mode("overwrite").option("compression", compression)
-         .parquet(os.path.join(out_dir, "term_stats")))
-
-    def _lineage_job():
-        (new_postings.groupBy("segment_ord").agg(
-            F.sum(F.when(F.col("term") == doc_sentinel, F.col("doc_freq")))
-            .alias("n_docs"),
-            F.sum(F.when(is_sent, F.col("total_tf"))).alias("n_tokens"),
-            F.sum(F.when(~is_sent, 1).otherwise(0)).alias("posting_rows"),
-            F.sum(F.when(~is_sent, F.col("doc_freq"))).alias("postings"),
-            (F.sum(F.octet_length("docs")) + F.sum(F.octet_length("tfs"))
-             + F.sum(F.octet_length("fns"))
-             + F.sum(F.coalesce(F.octet_length("pos"), F.lit(0))))
-            .alias("bytes"),
-        ).write.mode("overwrite").option("compression", compression)
-         .parquet(os.path.join(out_dir, "lineage")))
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        futs = [ex.submit(_term_stats_job), ex.submit(_lineage_job)]
-        for f in futs:
-            f.result()
+    write_concurrently({"term_stats": term_stats_table(new_postings),
+                        "lineage": lineage_table(new_postings, field_cols)})
     _mark("stats_writes", _t)
 
-    new_manifest = dict(manifest)
-    new_manifest["totals"] = {
-        "num_docs": total_alive,
-        "total_num_tokens": alive_tokens,
-        "num_segments": n_out,
-        "avg_fieldnorm": avg_fn,
-    }
-    if avg_by_field is not None:
-        new_manifest["totals"]["fields"] = {
-            r["term"].split(FIELD_SEP, 1)[1]: {
-                "num_docs": total_alive,
-                "total_num_tokens": int(r["t"]),
-                "avg_fieldnorm": (int(r["t"]) / total_alive)
-                if total_alive else 0.0,
-            } for r in tok_rows}
+    new_manifest = {k: v for k, v in manifest.items()
+                    if k not in _STREAMING_KEYS}
+    new_manifest["totals"] = totals
     new_manifest["stages"] = dict(manifest.get("stages", {}),
                                   merge={"wall_sec": time.time() - t_start,
                                          "status": "done",

@@ -8,6 +8,15 @@ playing meta.json's role (atomic swap, opstamp == batch_id).  Periodic
 compaction = ``tantivy_spark.index.merge.merge_segments`` on a schedule,
 the analogue of the background merge policy.
 
+One write path: a batch is written by the build's own definitions
+(``build.segment_postings``, ``segment_docmap``, ``lineage_table``,
+``term_stats_table``, ``index_totals``) under the indexer's FULL
+``IndexConfig`` — fields, analyzers, fast fields, record option, index
+sorting, compression — with only ``n_segments`` and ``segment_expr``
+replaced (the batch's segment ordinals start at the manifest's
+``next_segment_ord``).  A single batch therefore writes the same tables
+as ``build_index`` over the same docs with the same segment expression.
+
 Atomicity: every batch writes into its OWN partition subdirectories
 (``postings/batch=N``, ``docmap/batch=N``, ...) with overwrite mode, and
 the manifest records the batch only after every write landed.  A crash at
@@ -16,8 +25,9 @@ overwrites exactly — re-delivery is idempotent whether the previous
 attempt failed before, between, or after the parquet writes (the
 reference's equivalent guarantee is the meta.json atomic swap +
 failpoint-tested serializer, tests/failpoints/mod.rs).  Readers see the
-``batch`` partition column via partition discovery; every consumer
-addresses columns by name, so it is inert.
+``batch`` partition column via partition discovery and only the
+partitions the manifest published (``IndexReader._table``); merge reads
+through the same gate.
 
 Failpoints: ``indexer.failpoints.add("after_postings")`` makes the next
 ``process_batch`` raise right after the postings write — the unit tests
@@ -30,17 +40,23 @@ from __future__ import annotations
 import json
 import os
 import time
+from dataclasses import asdict, replace
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from tantivy_spark.index.build import (
     FIELDNORM_SENTINEL,
-    POSTINGS_SCHEMA,
     IndexConfig,
-    _segment_kernel,
-    _tokenized_docs,
     _write_manifest,
+    checked_config,
+    fieldnorm_sentinel,
+    index_totals,
+    lineage_table,
+    segment_docmap,
+    segment_postings,
+    sentinel_stats,
+    term_stats_table,
+    write_table,
 )
 
 FAILPOINTS = ("after_postings", "after_docmap", "after_lineage",
@@ -57,7 +73,7 @@ class IncrementalIndexer:
                  segments_per_batch: int = 4):
         self.spark = spark
         self.index_dir = index_dir
-        self.cfg = cfg or IndexConfig()
+        self.cfg = checked_config(cfg or IndexConfig())
         self.segments_per_batch = segments_per_batch
         #: armed failure-injection points (see module docstring)
         self.failpoints: set[str] = set()
@@ -73,9 +89,8 @@ class IncrementalIndexer:
                     "re-ingesting into a new dir or merging afterwards")
         else:
             self.manifest = {
-                "version": 1, "config": self.cfg.__dict__, "stages": {},
-                "totals": {"num_docs": 0, "total_num_tokens": 0,
-                           "num_segments": 0, "avg_fieldnorm": 0.0},
+                "version": 1, "config": asdict(self.cfg), "stages": {},
+                "totals": index_totals([], 0, self.cfg.field_cols),
                 "batches": {}, "next_segment_ord": 0,
             }
             # persist the empty manifest: a reader over a fresh index sees
@@ -118,100 +133,47 @@ class IncrementalIndexer:
         t0 = time.time()
         n_seg = self.segments_per_batch
         base = int(self.manifest["next_segment_ord"])
-        cfg = IndexConfig(
-            key_col=self.cfg.key_col, text_col=self.cfg.text_col,
-            field_cols=self.cfg.field_cols,
-            n_segments=n_seg,
-            segment_expr=(
-                f"{base} + pmod(xxhash64({self.cfg.key_col}), {n_seg})"
-                if self.cfg.segment_expr is None
-                else f"{base} + ({self.cfg.segment_expr})"),
-            with_positions=self.cfg.with_positions,
-            chunk_docs=self.cfg.chunk_docs,
-        )
-        postings = (
-            _tokenized_docs(batch_df, cfg)
-            .groupBy("segment_ord")
-            .applyInArrow(_segment_kernel(cfg), schema=POSTINGS_SCHEMA)
-        )
-        # every write is an OVERWRITE of this batch's own subdirectory —
-        # a retried batch rewrites the same paths byte-for-byte
-        postings.write.mode("overwrite").option(
-            "compression", self.cfg.compression).parquet(
-            self._bdir("postings", bid))
+        seg_expr = (self.cfg.segment_expr
+                    or f"pmod(xxhash64({self.cfg.key_col}), {n_seg})")
+        cfg = replace(self.cfg, n_segments=n_seg,
+                      segment_expr=f"{base} + ({seg_expr})")
+
+        def write(table: str, df: DataFrame) -> None:
+            # an OVERWRITE of this batch's own subdirectory: a retried
+            # batch rewrites the same paths byte-for-byte
+            write_table(df, self._bdir(table, bid), cfg.compression)
+
+        write("postings", segment_postings(batch_df, cfg))
         self._fail("after_postings")
-
-        from tantivy_spark.index.build import _segmented_docs
-        w = Window.partitionBy("segment_ord").orderBy("key")
-        ffs = list(cfg.fast_field_cols or ())
-        docmap = (_segmented_docs(batch_df, cfg)
-                  .select("segment_ord", "key", *ffs)
-                  .withColumn("doc_id", (F.row_number().over(w) - 1).cast("int"))
-                  .select("segment_ord", "doc_id", "key", *ffs))
-        docmap.write.mode("overwrite").option(
-            "compression", self.cfg.compression).parquet(
-            self._bdir("docmap", bid))
+        write("docmap", segment_docmap(batch_df, cfg))
         self._fail("after_docmap")
-
-        # per-batch stats from the freshly written sentinel rows (doc
-        # counts from exactly ONE field's sentinel chain on multi-field)
-        from tantivy_spark.index.build import fieldnorm_sentinel
-        doc_sentinel = fieldnorm_sentinel(
-            next(iter(self.cfg.field_cols)) if self.cfg.field_cols else None)
-        batch_postings = self.spark.read.parquet(self._bdir("postings", bid))
-        is_sent = F.col("term").startswith(FIELDNORM_SENTINEL)
-        is_doc_sent = F.col("term") == doc_sentinel
-        stats = batch_postings.filter(is_sent).agg(
-            F.coalesce(F.sum(F.when(is_doc_sent, F.col("doc_freq"))),
-                       F.lit(0)).alias("docs"),
-            F.coalesce(F.sum("total_tf"), F.lit(0)).alias("tokens"),
-            F.countDistinct("segment_ord").alias("segs"),
-        ).collect()[0]
-
-        # lineage rows for the new segments
-        (batch_postings.groupBy("segment_ord").agg(
-            F.sum(F.when(is_doc_sent, F.col("doc_freq"))).alias("n_docs"),
-            F.sum(F.when(is_sent, F.col("total_tf"))).alias("n_tokens"),
-            F.sum(F.when(~is_sent, 1).otherwise(0)).alias("posting_rows"),
-            F.sum(F.when(~is_sent, F.col("doc_freq"))).alias("postings"),
-            (F.sum(F.octet_length("docs")) + F.sum(F.octet_length("tfs"))
-             + F.sum(F.octet_length("fns"))
-             + F.sum(F.coalesce(F.octet_length("pos"), F.lit(0)))).alias("bytes"),
-        ).write.mode("overwrite").parquet(self._bdir("lineage", bid)))
+        postings = self.spark.read.parquet(self._bdir("postings", bid))
+        write("lineage", lineage_table(postings, cfg.field_cols))
         self._fail("after_lineage")
-
-        # incremental term_stats delta (reader sums per term)
-        (batch_postings.filter(~is_sent)
-         .groupBy("term")
-         .agg(F.sum("doc_freq").alias("doc_freq"), F.sum("total_tf").alias("total_tf"))
-         .write.mode("overwrite").parquet(self._bdir("term_stats", bid)))
+        # the term_stats delta of this batch (readers sum per term)
+        write("term_stats", term_stats_table(postings))
         self._fail("after_term_stats")
 
+        chains, n_new = sentinel_stats(postings)
         t = self.manifest["totals"]
-        t["num_docs"] += int(stats["docs"])
-        t["total_num_tokens"] += int(stats["tokens"])
-        t["num_segments"] += int(stats["segs"])
-        t["avg_fieldnorm"] = (t["total_num_tokens"] / t["num_docs"]) if t["num_docs"] else 0.0
-        if self.cfg.field_cols:
-            from tantivy_spark.index.build import FIELD_SEP
-            frows = (batch_postings.filter(is_sent).groupBy("term")
-                     .agg(F.sum("doc_freq").alias("nd"),
-                          F.sum("total_tf").alias("nt")).collect())
-            fstats = t.setdefault("fields", {})
-            for r in frows:
-                fld = r["term"].split(FIELD_SEP, 1)[1]
-                e = fstats.setdefault(
-                    fld, {"num_docs": 0, "total_num_tokens": 0,
-                          "avg_fieldnorm": 0.0})
-                e["num_docs"] += int(r["nd"])
-                e["total_num_tokens"] += int(r["nt"])
-                e["avg_fieldnorm"] = (e["total_num_tokens"] / e["num_docs"]
-                                      if e["num_docs"] else 0.0)
-        self.manifest["next_segment_ord"] = base + n_seg
+        totals = index_totals(self._published_chains() + chains,
+                              t["num_segments"] + n_new, cfg.field_cols)
         self.manifest["batches"][bid] = {
-            "segments": [base, base + n_seg], "docs": int(stats["docs"]),
+            "segments": [base, base + n_seg],
+            "docs": totals["num_docs"] - t["num_docs"],
             "wall_sec": time.time() - t0,
         }
+        self.manifest["totals"] = totals
+        self.manifest["next_segment_ord"] = base + n_seg
         # the atomic publish point: everything above is invisible to
         # readers-of-the-manifest until this rename lands
         _write_manifest(self.manifest_path, self.manifest)
+
+    def _published_chains(self) -> list[tuple[str, int, int]]:
+        """The published totals as :func:`index_totals` input rows: one
+        (sentinel term, docs, tokens) row per field chain."""
+        t = self.manifest["totals"]
+        if not self.cfg.field_cols:
+            return [(FIELDNORM_SENTINEL, t["num_docs"], t["total_num_tokens"])]
+        return [(fieldnorm_sentinel(f), e["num_docs"], e["total_num_tokens"])
+                for f, e in t.get("fields", {}).items()]

@@ -95,8 +95,9 @@ def test_crash_midway_through_second_batch(spark, corpus, tmp_path_factory,
 def test_orphan_batch_invisible_to_readers(spark, corpus, tmp_path_factory):
     """A crash AFTER all of a batch's parquet writes but BEFORE its
     manifest publish must leave the batch invisible: readers count only
-    published docs (no phantom matches with excluded statistics), and a
-    restarted indexer reclaims the orphan directories."""
+    published docs (no phantom matches with excluded statistics), a merge
+    merges only published docs, and a restarted indexer reclaims the
+    orphan directories."""
     import os
 
     out = str(tmp_path_factory.mktemp("fp_orphan") / "inc")
@@ -130,6 +131,18 @@ def test_orphan_batch_invisible_to_readers(spark, corpus, tmp_path_factory):
     gated = sums(reader.term_stats)
     assert reader.doc_freqs(terms) == gated
     assert sums(spark.read.parquet(os.path.join(out, "term_stats"))) != gated
+
+    # merge reads through the same gate: the orphan batch is not merged
+    from tantivy_spark.index.merge import merge_segments
+
+    merged = str(tmp_path_factory.mktemp("fp_orphan_merged") / "m")
+    m = merge_segments(spark, out, merged, n_target_segments=2)
+    assert m["totals"]["num_docs"] == n0
+    docmap = spark.read.parquet(os.path.join(merged, "docmap"))
+    assert docmap.count() == n0
+    assert "batch" not in docmap.columns
+    assert not {"batches", "next_segment_ord"} & set(m)
+    assert IndexReader(spark, merged).num_docs == n0
 
     # restart: orphan dirs are reclaimed, then redelivery completes
     ix2 = IncrementalIndexer(spark, out, cfg, segments_per_batch=2)

@@ -12,7 +12,8 @@
   corpus-scale table distributed;
 - query statistics (doc_freq) are read on the driver without a Spark
   job, so a term top-k runs 2 jobs and a WAND or exact boolean query 3
-  (``count_jobs`` pins these counts).
+  (``count_jobs`` pins these counts, and the job budget of a build and
+  a merge).
 """
 
 import itertools
@@ -34,16 +35,26 @@ _job_groups = itertools.count()   # a fresh group name per measurement
 
 def count_jobs(spark, fn) -> int:
     """Spark jobs one call of ``fn`` runs, after one warm-up call (which
-    materializes the reader's lazy tables)."""
-    fn()
+    materializes the reader's lazy tables): the jobs of its job group,
+    plus the ungrouped jobs it submits from its own worker threads (build
+    and merge overlap their writes), which do not inherit the group."""
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def ungrouped() -> set:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()   # job events delivered
+        return set(tracker.getJobIdsForGroup(None))
+
+    fn()
     group = f"count_jobs_{next(_job_groups)}"
+    before = ungrouped()
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc._jsc.clearJobGroup()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    threaded = ungrouped() - before
+    return len(tracker.getJobIdsForGroup(group)) + len(threaded)
 
 
 @pytest.fixture(scope="module")
@@ -316,3 +327,20 @@ def test_exact_boolean_job_count(spark, searcher):
     lookup runs none."""
     q = _exact_shapes()["must_should_not"]
     assert count_jobs(spark, lambda: searcher.search(q, k=10).collect()) == 3
+
+
+def test_build_and_merge_job_counts(spark, tiny_pages, tmp_path_factory):
+    """The index-write path's job budget: a 4-segment build of sf0.001
+    runs 12 jobs (docmap and postings 2 each, term_stats and lineage 3
+    each, the sentinel read for the manifest totals 2), and its merge to
+    2 segments at most 20."""
+    from tantivy_spark.index.build import IndexConfig, build_index
+    from tantivy_spark.index.merge import merge_segments
+
+    base = tmp_path_factory.mktemp("write_jobs")
+    built, merged = str(base / "built"), str(base / "merged")
+    cfg = IndexConfig(n_segments=4)
+    assert count_jobs(spark, lambda: build_index(
+        spark, tiny_pages, built, cfg, resume=False)) == 12
+    assert count_jobs(spark, lambda: merge_segments(
+        spark, built, merged, n_target_segments=2)) <= 20

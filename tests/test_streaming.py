@@ -49,6 +49,56 @@ def test_incremental_equals_batch(spark, corpus, tmp_path_factory):
         assert g["score"] == pytest.approx(w["score"], rel=1e-12)
 
 
+def _content_hash(df, order_cols):
+    """md5 of a table's rows in a fixed order (binary cells by their md5),
+    ignoring the streaming ``batch`` partition column."""
+    import hashlib
+
+    df = df.drop("batch").orderBy(*order_cols)
+    binish = {f.name for f in df.schema.fields
+              if f.dataType.simpleString() == "binary"}
+    pdf = df.select([F.md5(F.col(c)).alias(c) if c in binish else F.col(c)
+                     for c in df.columns]).toPandas()
+    return hashlib.md5(pdf.to_csv(index=False).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("extra", [
+    {},
+    {"fast_field_cols": ["lang"], "record_option": "basic", "sort_col": "lang"},
+], ids=["default", "fast_basic_sorted"])
+def test_single_batch_equals_build(spark, tmp_path_factory, extra):
+    """Ingest and build share one write path: one batch through the
+    indexer writes the same postings, docmap, term_stats and lineage, and
+    the same manifest totals, as build_index over the same docs with the
+    same segment expression — under the full IndexConfig (fast fields,
+    record option, index sorting)."""
+    import json
+
+    docs = synthetic_pages(spark, 200, seed=3)
+    base = tmp_path_factory.mktemp("inc_vs_build")
+    inc, built = str(base / "inc"), str(base / "built")
+    ix = IncrementalIndexer(spark, inc, IndexConfig(**extra),
+                            segments_per_batch=3)
+    ix.process_batch(docs, 0)
+    build_index(spark, docs, built, IndexConfig(
+        n_segments=3, segment_expr="pmod(xxhash64(url), 3)", **extra))
+
+    for table, order in [("postings", ["segment_ord", "term", "chunk_id"]),
+                         ("docmap", ["segment_ord", "doc_id"]),
+                         ("term_stats", ["term"]),
+                         ("lineage", ["segment_ord"])]:
+        got, want = (spark.read.parquet(os.path.join(d, table))
+                     for d in (inc, built))
+        assert sorted(got.drop("batch").columns) == sorted(want.columns), table
+        assert _content_hash(got, order) == _content_hash(want, order), table
+
+    def totals(d):
+        with open(os.path.join(d, "meta.json")) as f:
+            return json.load(f)["totals"]
+
+    assert totals(inc) == totals(built)
+
+
 def test_batch_redelivery_is_idempotent(spark, corpus, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("sidx2") / "inc")
     ix = IncrementalIndexer(spark, out, IndexConfig(key_col="url", text_col="text"),
