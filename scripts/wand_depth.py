@@ -7,10 +7,10 @@ Builds the 800k synthetic corpus at a given ``n_segments`` and reports,
 for or/and WAND over hot terms:
 
 - decoded-block counters (accumulator deltas around the timed
-  wand_topk runs) unseeded vs threshold-seeded,
-- best-of-N wall times for wand_topk unseeded/seeded,
+  wand_topk runs),
+- best-of-N wall times for wand_topk,
 - the exhaustive BooleanQuery scorer as the no-pruning baseline,
-- an identical-results assertion across all three paths.
+- an identical-results assertion across both paths.
 
 Writes WAND_DEPTH.json (append-per-shape) and prints one JSON line.
 
@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import time
 
@@ -81,32 +80,23 @@ def main() -> None:
         "load_before": [round(x, 2) for x in os.getloadavg()],
     }
     for mode, terms in (("or", ["the", "of"]), ("and", ["the", "of"])):
-        t_un, rows_un, stats_un = timed(lambda: wand_topk(
+        t_w, rows_w, stats = timed(lambda: wand_topk(
             reader, terms, k=10, mode=mode).collect())
-        t_se, rows_se, stats_se = timed(lambda: wand_topk(
-            reader, terms, k=10, mode=mode, seed_threshold=True).collect())
         occur = Occur.SHOULD if mode == "or" else Occur.MUST
         q = BooleanQuery([(occur, TermQuery(t)) for t in terms])
         t_ex, rows_ex, _ = timed(lambda: ExactSearcher(reader)
                                  .search(q, k=10).collect())
-        ident = ([(r["segment_ord"], r["doc_id"]) for r in rows_un]
-                 == [(r["segment_ord"], r["doc_id"]) for r in rows_se]
+        ident = ([(r["segment_ord"], r["doc_id"]) for r in rows_w]
                  == [(r["segment_ord"], r["doc_id"]) for r in rows_ex])
         result[mode] = {
-            "unseeded": {"decoded_blocks": stats_un["decoded_blocks"],
-                         "total_blocks": stats_un["total_blocks"],
-                         "wall_sec": t_un},
-            "seeded": {"decoded_blocks": stats_se["decoded_blocks"],
-                       "total_blocks": stats_se["total_blocks"],
-                       "wall_sec": t_se},
+            "decoded_blocks": stats["decoded_blocks"],
+            "total_blocks": stats["total_blocks"],
+            "wall_sec": t_w,
             "exhaustive_wall_sec": t_ex,
             "identical_top10": ident,
-            "decoded_saving_pct": round(
-                100.0 * (1 - stats_se["decoded_blocks"]
-                         / max(1, stats_un["decoded_blocks"])), 1),
-            "skip_rate_unseeded_pct": round(
-                100.0 * (1 - stats_un["decoded_blocks"]
-                         / max(1, stats_un["total_blocks"])), 1),
+            "skip_rate_pct": round(
+                100.0 * (1 - stats["decoded_blocks"]
+                         / max(1, stats["total_blocks"])), 1),
         }
     result["load_after"] = [round(x, 2) for x in os.getloadavg()]
 

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -102,24 +101,6 @@ def tokenize_with_positions_series(texts: pd.Series) -> pd.Series:
             if len(t.encode("utf-8")) < MAX_TOKEN_BYTES
         ]
     )
-
-
-def flat_tokenize(doc_ids: np.ndarray, texts: pd.Series):
-    """Explode a batch: returns (doc_id_rep, tokens, positions) flat arrays.
-
-    Fully vectorized except the per-document regex findall (pandas C loop).
-    """
-    tok_lists = tokenize_with_positions_series(texts)
-    counts = tok_lists.map(len).to_numpy(dtype=np.int64)
-    doc_rep = np.repeat(np.asarray(doc_ids, dtype=np.int64), counts)
-    flat = [p for lst in tok_lists for p in lst]
-    if flat:
-        toks = np.array([p[0] for p in flat], dtype=object)
-        poss = np.array([p[1] for p in flat], dtype=np.int64)
-    else:
-        toks = np.array([], dtype=object)
-        poss = np.array([], dtype=np.int64)
-    return doc_rep, toks, poss, counts
 
 
 # ---------------------------------------------------------------------------

@@ -9,13 +9,12 @@ Reference semantics (/root/reference/src/query/bm25.rs):
   avg = total_num_tokens / total_num_docs across all segments [:109-111]
   max_score  = score(id=255, tf=2_013_265_944)               [:184-186]
 
-The reference computes everything in f32.  We provide:
-
-- :class:`Bm25Params` + numpy f32 kernels for rank-identical parity
-  (used inside Arrow kernels and the WAND loop);
-- SQL/Column expression builders in f64 for the declarative DataFrame
-  plan and the DuckDB oracle (identical expression shape on both engines
-  so double results agree bit-for-bit up to libm ulp on ln()).
+The reference computes everything in f32.  This module provides
+:class:`Bm25Params` + numpy f32 kernels for rank-identical parity (used
+inside Arrow kernels and the WAND loop).  The f64 forms live with their
+engines: ``query/exact.py`` builds the declarative DataFrame plan's
+expression and ``oracle.py`` the DuckDB oracle's, in the same shape so
+double results agree bit-for-bit up to libm ulp on ln().
 """
 
 from __future__ import annotations
@@ -83,24 +82,3 @@ class Bm25Params:
     def block_max_score(self, wand_fieldnorm_ids: np.ndarray, wand_tfs: np.ndarray) -> np.ndarray:
         """Upper-bound scores for blocks from stored (fieldnorm_id, capped tf)."""
         return self.score(wand_fieldnorm_ids, wand_tfs)
-
-
-# ---------------------------------------------------------------------------
-# SQL expression builders (f64; shape shared by Spark & DuckDB oracles)
-# ---------------------------------------------------------------------------
-
-def sql_idf(df_expr: str, n_expr: str) -> str:
-    return f"ln(1.0 + (({n_expr}) - ({df_expr}) + 0.5) / (({df_expr}) + 0.5))"
-
-
-def sql_score(tf_expr: str, qnorm_expr: str, df_expr: str, n_expr: str,
-              avg_expr: str) -> str:
-    """Full BM25 score expression over a *quantized decoded* fieldnorm.
-
-    ``qnorm_expr`` must already be the decoded quantized fieldnorm
-    (see fieldnorm.sql_quantize_fieldnorm).
-    """
-    idf = sql_idf(df_expr, n_expr)
-    weight = f"({idf}) * {1.0 + K1}"
-    norm = f"({K1} * (1.0 - {B} + {B} * ({qnorm_expr}) / ({avg_expr})))"
-    return f"({weight}) * ({tf_expr}) / (({tf_expr}) + {norm})"

@@ -82,13 +82,3 @@ def sql_quantize_fieldnorm(num_tokens_expr: str) -> str:
     """SQL expression (valid in both Spark SQL and DuckDB) computing the
     decoded quantized fieldnorm for a token count."""
     return _sql_closed_form(num_tokens_expr)
-
-
-def quantize_fieldnorm_col(num_tokens_col_name: str):
-    """Spark Column form of the closed-form quantization (JVM-side).
-
-    Takes the *name* of an integer column; returns a Column expression.
-    """
-    from pyspark.sql import functions as F  # local import: module is Spark-free otherwise
-
-    return F.expr(sql_quantize_fieldnorm(num_tokens_col_name))

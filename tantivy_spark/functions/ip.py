@@ -76,18 +76,6 @@ def ip_key_col(ip: Column) -> Column:
         .otherwise(F.lit(None))
 
 
-def ipv4_key_sql_duckdb(expr: str) -> str:
-    """DuckDB SQL computing the same key for dotted-quad IPv4 strings
-    (oracle helper)."""
-    return (
-        f"'00000000000000000000ffff' || lpad(lower(hex("
-        f"CAST(split_part({expr}, '.', 1) AS BIGINT) * 16777216 + "
-        f"CAST(split_part({expr}, '.', 2) AS BIGINT) * 65536 + "
-        f"CAST(split_part({expr}, '.', 3) AS BIGINT) * 256 + "
-        f"CAST(split_part({expr}, '.', 4) AS BIGINT))), 8, '0')"
-    )
-
-
 def ip_range_filter(df: DataFrame, ip_col: str, lower: str | None,
                     upper: str | None, lower_inclusive: bool = True,
                     upper_inclusive: bool = True) -> DataFrame:

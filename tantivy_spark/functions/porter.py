@@ -146,7 +146,3 @@ def porter_stem(word: str) -> str:
         w = w[:-1]
 
     return w
-
-
-def stem_tokens(tokens: list[str]) -> list[str]:
-    return [porter_stem(t) for t in tokens]

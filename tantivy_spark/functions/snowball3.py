@@ -333,10 +333,6 @@ def _el_fold(word: str) -> str:
     return "".join(out)
 
 
-def _el_ends_any(w: str, exacts) -> bool:
-    return w in exacts
-
-
 def greek_stem(word: str) -> str:
     """Greek Snowball stemmer (stemmer.rs:20 — Language::Greek; the
     published algorithm is Ntais 2006 with Saroukos's improvements).

@@ -61,14 +61,6 @@ def bitunpack(buf: bytes, width: int, n: int) -> np.ndarray:
     return np.packbits(out, axis=1, bitorder="little").view("<u4").reshape(n)
 
 
-def bit_width(values: np.ndarray) -> int:
-    """Bits needed for the largest value (0 for all-zero)."""
-    if len(values) == 0:
-        return 0
-    m = int(values.max())
-    return m.bit_length()
-
-
 def _bit_widths(maxes: np.ndarray) -> np.ndarray:
     """Vectorized bit_length per value (uint32 range).  log2 of a float64
     is exact at powers of two and strictly below the next integer for

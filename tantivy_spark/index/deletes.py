@@ -64,11 +64,3 @@ def delete_by_query(spark: SparkSession, reader: IndexReader, query) -> int:
     if n:
         _append(spark, reader.index_dir, addrs)
     return n
-
-
-def alive_filter(reader: IndexReader, df: DataFrame) -> DataFrame:
-    """Anti-join a (segment_ord, doc_id, ...) frame against the deletes."""
-    d = reader.deletes
-    if d is None:
-        return df
-    return df.join(d, ["segment_ord", "doc_id"], "left_anti")

@@ -144,29 +144,18 @@ class Searcher:
         Asc order, top_score_collector.rs test_fast_field_ascending_order)
         and ties break by DocAddress ascending, like every collector.
 
-        Returns (rank, segment_ord, doc_id, ``value``, key).  Fully
-        declarative: the match set joins docmap segment-locally and the
-        top-k lowers to TakeOrderedAndProject (per-partition partial
-        top-k, k-row driver merge) — no global sort of the match set.
+        Returns (rank, segment_ord, doc_id, ``value``, key): the
+        one-key case of ``search_order_by_keys``.
 
         Unknown or non-fast fields fail loudly like the reference's
         for_segment/check_schema errors (top_score_collector.rs
         test_field_does_not_exist / test_field_wrong_type pin
-        "Field `{field}` is not a fast field.")."""
-        if k < 1:
-            raise ValueError("limit must be strictly greater than 0")
-        if order not in ("asc", "desc"):
-            raise ValueError(f"order must be 'asc' or 'desc': {order!r}")
+        "Field `{field}` is not a fast field.") — ``"score"`` included,
+        which ``search_order_by_keys`` would read as the BM25 score."""
         if field not in self.reader.fast_field_cols:
             raise ValueError(f"Field `{field}` is not a fast field.")
-        query = self._as_query(q)
-        docs = self.exact.matching(query, scoring=False).join(
-            self.reader.docmap, ["segment_ord", "doc_id"], "inner")
-        key_sort = F.desc_nulls_last(field) if order == "desc" \
-            else F.asc_nulls_last(field)
-        return top_k(docs, [key_sort], k, offset,
-                     ["segment_ord", "doc_id", F.col(field).alias("value"),
-                      "key"])
+        return self.search_order_by_keys(q, [(field, order)], k, offset) \
+            .withColumnRenamed(field, "value")
 
     def search_order_by_keys(self, q, keys, k: int = 10,
                              offset: int = 0) -> DataFrame:
@@ -184,9 +173,10 @@ class Searcher:
         last both ways) and ties break by DocAddress ascending.
 
         Returns (rank, segment_ord, doc_id, <one column per key>, key);
-        the ``"score"`` key surfaces as a ``score`` column.  Same
-        TakeOrderedAndProject shape as ``search_order_by`` — no global
-        sort of the match set."""
+        the ``"score"`` key surfaces as a ``score`` column.  Fully
+        declarative: the match set joins docmap segment-locally and the
+        top-k lowers to TakeOrderedAndProject (per-partition partial
+        top-k, k-row driver merge) — no global sort of the match set."""
         if k < 1:
             raise ValueError("limit must be strictly greater than 0")
         if not keys:

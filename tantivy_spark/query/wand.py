@@ -30,12 +30,14 @@ the kernel maps straight over the scan; with several a unit is one
 segment's rows, co-located by one shuffle on segment_ord.  Per-unit
 top-k outputs are tiny, so the final merge is a broadcast-size
 orderBy/limit — the same partial/final shape as the reference's
-per-segment collect + merge_fruits.
+per-segment collect + merge_fruits.  No threshold is shared across
+units: a global seed prelude was measured at 800k docs (WAND_DEPTH.json)
+and never saved a decoded block, because each unit's own kth score
+becomes tight within its first strips.
 
 Counters: the query run itself adds its pruning work to Spark
 accumulators (one set per SparkContext) — blocks decoded, strips
-processed, blocks in the scanned lists, and queries that applied a
-seed.  :func:`counters` reads their running totals; diff a read taken
+processed and blocks in the scanned lists.  :func:`counters` reads their running totals; diff a read taken
 before ``wand_topk(...).collect()`` against one taken after.  The totals
 are shared by every query on the context, and a retried task adds its
 work again.
@@ -146,17 +148,11 @@ class _TermBlocks:
 
 
 def _segment_wand(terms_blocks: list[_TermBlocks], params: list[Bm25Params],
-                  k: int, mode: str, deleted: np.ndarray | None = None,
-                  seed: float = -np.inf):
+                  k: int, mode: str, deleted: np.ndarray | None = None):
     """Run the strip-pruned scorer for one segment.
     Returns (doc_ids int64, scores float32, decoded_blocks,
     processed_strips): the segment's top-k (plus ties at the kth score)
-    and the pruning work it took.
-
-    ``seed``: an externally-proven lower bound on the GLOBAL kth score
-    (bm25.rs:184-186 semantics — threshold seeding across segments).  Any
-    strip whose upper bound is strictly below it can never contribute to
-    the global top-k, so pruning starts before k local candidates exist."""
+    and the pruning work it took."""
     T = len(terms_blocks)
     # ---- strip decomposition ------------------------------------------------
     edges = np.unique(np.concatenate(
@@ -187,7 +183,7 @@ def _segment_wand(terms_blocks: list[_TermBlocks], params: list[Bm25Params],
     cand_docs: list[np.ndarray] = []
     cand_scores: list[np.ndarray] = []
     n_cand = 0
-    threshold = float(seed)
+    threshold = -np.inf
     n_strips = 0
     decoded: dict[tuple[int, int], tuple] = {}
 
@@ -200,10 +196,8 @@ def _segment_wand(terms_blocks: list[_TermBlocks], params: list[Bm25Params],
     for si in order:
         if ub[si] < 0:
             break
-        # the seed is already a proven global-kth lower bound, so pruning
-        # applies even before k local candidates accumulate; a locally
-        # computed threshold only applies once k candidates exist
-        if ub[si] < threshold and (n_cand >= k or ub[si] < seed):
+        # the local kth score only bounds the result once k candidates exist
+        if n_cand >= k and ub[si] < threshold:
             break
         n_strips += 1
         lo, hi = s_lo[si], s_hi[si]
@@ -285,100 +279,9 @@ def _segment_wand(terms_blocks: list[_TermBlocks], params: list[Bm25Params],
 MAX_BROADCAST_DELETES = 2_000_000
 
 
-#: seeding prelude latency is only worth paying when pruning has real
-#: work to skip; lists shorter than this many blocks decode in one strip
-#: pass anyway, so seeding auto-skips below it.
-MIN_SEED_BLOCKS = 32
-
-
-def global_seed_threshold(reader: IndexReader, live_terms: list[str],
-                          params_by_term: dict, k: int) -> float:
-    """A PROVEN lower bound on the global kth score, computed before the
-    per-segment kernels run (the reference seeds per-term thresholds from
-    max_scores, bm25.rs:184-186; here we go one step further and realize
-    k actual single-term scores).
-
-    Method: among all (term, chunk, block) with >= k docs, pick the block
-    with the highest block-max score; decode ONLY that block (a few KB)
-    and take its kth-highest single-term score.  Those are k real docs
-    whose total scores are >= their single-term scores (all BM25
-    contributions are positive in a union), so the global kth total score
-    is >= this value.  Only valid for mode="or" — in an intersection a
-    high-scoring doc for one term may not match the others.
-
-    The per-chunk argmax runs DISTRIBUTED (an Arrow kernel emits one row
-    per chunk; the driver collects one aggregate row per term).  A hot
-    term at 10^12 docs has millions of (chunk, block) metadata rows —
-    collecting them, as this function once did, is a driver OOM.
-    Seeding auto-skips (returns -inf) when the best term's posting list
-    is under ``MIN_SEED_BLOCKS`` blocks: pruning has nothing to save there,
-    so the prelude job would be pure added latency.
-    """
-    meta = reader.postings_for_terms(live_terms).select(
-        "term", "segment_ord", "chunk_id", "n_docs", "wand_fn", "wand_tf")
-    pbt = params_by_term
-    kk = int(k)
-
-    def best_per_chunk(batches):
-        for pdf in batches:
-            out = {"term": [], "segment_ord": [], "chunk_id": [],
-                   "block_idx": [], "bms": [], "n_blocks": []}
-            for row in pdf.itertuples(index=False):
-                if not len(row.n_docs):
-                    continue
-                nd = np.asarray(row.n_docs, dtype=np.int64)
-                bms = pbt[row.term].score(
-                    np.asarray(row.wand_fn, dtype=np.int64),
-                    np.asarray(row.wand_tf, dtype=np.int64))
-                eligible = np.nonzero(nd >= kk)[0]
-                if len(eligible) == 0:
-                    continue
-                b = int(eligible[np.argmax(bms[eligible])])
-                out["term"].append(row.term)
-                out["segment_ord"].append(int(row.segment_ord))
-                out["chunk_id"].append(int(row.chunk_id))
-                out["block_idx"].append(b)
-                out["bms"].append(float(bms[b]))
-                out["n_blocks"].append(int(len(nd)))
-            if out["term"]:
-                yield pd.DataFrame(out)
-
-    per_chunk = meta.mapInPandas(
-        best_per_chunk,
-        schema="term STRING, segment_ord INT, chunk_id INT, "
-               "block_idx INT, bms DOUBLE, n_blocks BIGINT")
-    # one row per query term reaches the driver: total blocks + the
-    # argmax block location (struct max orders by bms first)
-    per_term = (per_chunk.groupBy("term").agg(
-        F.sum("n_blocks").alias("blocks"),
-        F.max(F.struct("bms", "segment_ord", "chunk_id", "block_idx"))
-        .alias("best")).collect())
-    best = None  # (bms, blocks, term, segment_ord, chunk_id, block_idx)
-    for row in per_term:
-        cand = (float(row["best"]["bms"]), int(row["blocks"]), row["term"],
-                int(row["best"]["segment_ord"]), int(row["best"]["chunk_id"]),
-                int(row["best"]["block_idx"]))
-        if best is None or cand[0] > best[0]:
-            best = cand
-    if best is None or best[1] < MIN_SEED_BLOCKS:
-        return float("-inf")
-    _, _, term, seg, chunk, b = best
-    rows = (reader.postings_for_terms([term])
-            .filter((F.col("segment_ord") == seg) & (F.col("chunk_id") == chunk))
-            .drop("pos").collect())
-    if not rows:
-        return float("-inf")
-    tb = _TermBlocks(rows, params_by_term[term])
-    _docs, tfs, fns = tb.decode_block(b)
-    scores = params_by_term[term].score(fns, tfs)
-    if len(scores) < k:
-        return float("-inf")
-    return float(np.partition(scores, -k)[-k])
-
-
 #: the WAND pruning counters, summed over every kernel unit of the real
 #: query run (see :func:`counters`)
-COUNTERS = ("decoded_blocks", "processed_strips", "total_blocks", "seeded")
+COUNTERS = ("decoded_blocks", "processed_strips", "total_blocks")
 _ACCUMULATORS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _ACCUMULATORS_LOCK = threading.Lock()
 
@@ -395,15 +298,15 @@ def _accumulators(spark) -> dict:
 
 def counters(spark) -> dict:
     """Running totals of the WAND pruning counters on this SparkContext:
-    {"decoded_blocks", "processed_strips", "total_blocks", "seeded"}.
-    Decoded blocks are what pruning and seeding save; wall time on a
+    {"decoded_blocks", "processed_strips", "total_blocks"}.
+    Decoded blocks are what pruning saves; wall time on a
     loaded box is not trustworthy.  Diff two reads taken around a
     ``collect()`` for one query's work."""
     return {name: acc.value for name, acc in _accumulators(spark).items()}
 
 
 def _segment_kernel_fn(live_terms, params_by_term, k: int, mode: str,
-                       deleted_by_seg, seed: float, accs: dict):
+                       deleted_by_seg, accs: dict):
     """mapInPandas kernel: one ``_segment_wand`` run per independent
     unit, yielding its (segment_ord, doc_id, score) rows and adding its
     pruning work to ``accs``.
@@ -441,7 +344,7 @@ def _segment_kernel_fn(live_terms, params_by_term, k: int, mode: str,
             prms = [params_by_term[t] for t in present]
             tbs = [_TermBlocks(per_term[t], p) for t, p in zip(present, prms)]
             d, s, n_decoded, n_strips = _segment_wand(
-                tbs, prms, kk, mode, deleted=dead_by_seg.get(seg), seed=seed)
+                tbs, prms, kk, mode, deleted=dead_by_seg.get(seg))
             accs["decoded_blocks"].add(n_decoded)
             accs["processed_strips"].add(n_strips)
             accs["total_blocks"].add(sum(len(tb.starts) for tb in tbs))
@@ -456,7 +359,7 @@ def _segment_kernel_fn(live_terms, params_by_term, k: int, mode: str,
 
 
 def wand_candidates(reader: IndexReader, terms: list[str], k: int = 10,
-                    mode: str = "or", seed_threshold: bool = False,
+                    mode: str = "or",
                     boosts: list[float] | None = None) -> DataFrame:
     """Each kernel unit's local top-k (segment_ord, doc_id, score) rows,
     the input of ``exact.top_k``; parameters as for wand_topk."""
@@ -486,23 +389,17 @@ def wand_candidates(reader: IndexReader, terms: list[str], k: int = 10,
                                    boost=float(boost_of.get(t, 1.0)))
         for t in live_terms
     }
-    accs = _accumulators(reader.spark)
-    seed = float("-inf")
-    if seed_threshold and mode == "or" and deleted_by_seg is None:
-        seed = global_seed_threshold(reader, live_terms, params_by_term, k)
-        if seed != float("-inf"):
-            accs["seeded"].add(1)
     rows = reader.postings_for_terms(live_terms).drop("pos")
     if len(live_terms) > 1:
         # one unit per segment: co-locate each segment's lists
         rows = rows.repartition("segment_ord")
     kernel = _segment_kernel_fn(live_terms, params_by_term, k, mode,
-                                deleted_by_seg, seed, accs)
+                                deleted_by_seg, _accumulators(reader.spark))
     return rows.mapInPandas(kernel, schema=OUT_SCHEMA)
 
 
 def wand_topk(reader: IndexReader, terms: list[str], k: int = 10,
-              mode: str = "or", seed_threshold: bool = False,
+              mode: str = "or",
               boosts: list[float] | None = None) -> DataFrame:
     """Distributed BMW top-k for a pure term union ("or") or pure term
     intersection ("and").  Returns (rank, segment_ord, doc_id, score, key)
@@ -513,15 +410,6 @@ def wand_topk(reader: IndexReader, terms: list[str], k: int = 10,
     than MAX_BROADCAST_DELETES deleted docs should be compacted first
     (merge drops them) — callers get a ValueError rather than a silent
     driver-memory blowup.
-
-    ``seed_threshold``: pre-compute a global kth lower bound from the
-    best single block (global_seed_threshold, distributed argmax) and
-    ship it to every segment kernel, so pruning starts immediately
-    instead of after k local candidates.  Auto-skips on short lists
-    (< MIN_SEED_BLOCKS) where the prelude cannot pay for itself.
-    Results are identical either way (tests assert it).  "or" only;
-    ignored for intersections (and when deletes exist — dead docs could
-    occupy the seeding block's top-k).
     """
-    rows = wand_candidates(reader, terms, k, mode, seed_threshold, boosts)
+    rows = wand_candidates(reader, terms, k, mode, boosts)
     return top_k(rows, [F.desc("score")], k, 0, HIT_COLS, reader.docmap)

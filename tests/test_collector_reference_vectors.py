@@ -215,6 +215,11 @@ def test_field_not_fast_field(beer_searcher):
     with pytest.raises(ValueError,
                        match="Field `title` is not a fast field"):
         beer_searcher.search_order_by("beer", "title", k=4)
+    # "score" is the BM25 key of search_order_by_keys, not a fast field:
+    # ordering by it must fail, not silently sort by BM25
+    with pytest.raises(ValueError,
+                       match="Field `score` is not a fast field"):
+        beer_searcher.search_order_by("beer", "score", k=4)
 
 
 def test_top_field_collector_i64_and_f64(spark, tmp_path):

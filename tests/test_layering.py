@@ -41,3 +41,59 @@ def test_engine_does_not_import_pipeline(path):
            if m == "tantivy_spark.pipeline"
            or m.startswith("tantivy_spark.pipeline.")]
     assert not bad, f"{path.name} imports {bad}"
+
+
+REPO = PKG.parent
+#: every Python file that may use a package definition
+USER_FILES = sorted(
+    [*PKG.rglob("*.py"), *(REPO / "tests").rglob("*.py"),
+     *(REPO / "scripts").rglob("*.py"), *(REPO / "perfbench").rglob("*.py"),
+     REPO / "bench.py", REPO / "__spark_entry__.py"])
+
+
+def _names_used(node) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def test_every_package_definition_is_used():
+    """Every module-level function and class in the package is reachable:
+    named by module-level code, by a test, script, benchmark or the entry
+    module, or by the body of another reachable definition.  A helper
+    that only a dead helper calls is dead too."""
+    defined: dict[str, list[str]] = {}     # name -> defining modules
+    uses_of: dict[str, set[str]] = {}      # name -> names its bodies use
+    live: set[str] = set()
+    for path in USER_FILES:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        if PKG not in path.parents:
+            live |= _names_used(tree)
+            continue
+        rel = str(path.relative_to(REPO))
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                defined.setdefault(node.name, []).append(rel)
+                uses_of.setdefault(node.name, set()).update(
+                    _names_used(node))
+            else:
+                live |= _names_used(node)
+    todo = list(live)
+    while todo:
+        name = todo.pop()
+        for used in uses_of.pop(name, ()):
+            if used not in live:
+                live.add(used)
+                todo.append(used)
+    dead = sorted(f"{mod}:{name}" for name, mods in defined.items()
+                  if name not in live
+                  and not (name.startswith("__") and name.endswith("__"))
+                  for mod in mods)
+    assert not dead, f"unused package definitions: {dead}"

@@ -64,137 +64,71 @@ def test_wand_intersection_matches_golden(tiny_index, tiny_golden, terms, k):
         assert np.float32(r["score"]) == np.float32(ws)
 
 
-@pytest.mark.parametrize("terms,k", UNION_CASES[:5], ids=lambda x: str(x))
-def test_seeded_wand_identical(tiny_index, tiny_golden, terms, k,
-                               monkeypatch):
-    """Threshold seeding (global kth lower bound shipped to kernels) must
-    never change results — byte-identical ranks, addresses, f32 scores."""
-    base = wand_topk(tiny_index, terms, k=k, mode="or").collect()
-    monkeypatch.setattr(wand, "MIN_SEED_BLOCKS", 0)
-    seeded = wand_topk(tiny_index, terms, k=k, mode="or",
-                       seed_threshold=True).collect()
-    assert [(r["rank"], r["segment_ord"], r["doc_id"], r["score"])
-            for r in base] == \
-        [(r["rank"], r["segment_ord"], r["doc_id"], r["score"])
-         for r in seeded]
-
-
-def test_seed_threshold_is_valid_lower_bound(tiny_index, tiny_golden,
-                                            monkeypatch):
-    from tantivy_spark.bm25 import Bm25Params
-    from tantivy_spark.query.wand import global_seed_threshold
-
-    terms = ["the", "data"]
-    dfs = tiny_index.doc_freqs(terms)
-    params = {t: Bm25Params.for_one_term(dfs[t], tiny_index.num_docs,
-                                         tiny_index.avg_fieldnorm)
-              for t in terms}
-    # the auto-skip: on this tiny corpus every list is far under the
-    # default block floor, so the default call declines to seed
-    assert global_seed_threshold(tiny_index, terms, params, 5) == \
-        float("-inf")
-    monkeypatch.setattr(wand, "MIN_SEED_BLOCKS", 0)
-    for k in (1, 5, 10):
-        seed = global_seed_threshold(tiny_index, terms, params, k)
-        want = _golden_topk(tiny_golden, terms, k, "or")
-        kth = want[-1][3]  # golden kth total score
-        assert seed <= kth + 1e-6, (k, seed, kth)
-        assert seed > float("-inf")
-
-
-def test_seeding_prunes_decode_work(tiny_index, monkeypatch):
-    """The kernel's returned counts: with a strong seed it decodes no
-    more (and typically fewer) blocks than unseeded."""
-    import numpy as np
-
-    from tantivy_spark.bm25 import Bm25Params
-    from tantivy_spark.query.wand import (
-        _TermBlocks, _segment_wand, global_seed_threshold)
-
-    terms = ["the", "of"]
-    dfs = tiny_index.doc_freqs(terms)
-    params = {t: Bm25Params.for_one_term(dfs[t], tiny_index.num_docs,
-                                         tiny_index.avg_fieldnorm)
-              for t in terms}
-    rows = (tiny_index.postings_for_terms(terms).drop("pos")
-            .filter("segment_ord = 0").collect())
-    by_term = {}
-    for r in rows:
-        by_term.setdefault(r["term"], []).append(r)
-    tbs = [_TermBlocks(by_term[t], params[t]) for t in terms if t in by_term]
-    prms = [params[t] for t in terms if t in by_term]
-    monkeypatch.setattr(wand, "MIN_SEED_BLOCKS", 0)
-    seed = global_seed_threshold(tiny_index, terms, params, 3)
-
-    d0, sc0, blocks0, strips0 = _segment_wand(tbs, prms, 3, "or")
-    d1, sc1, blocks1, strips1 = _segment_wand(tbs, prms, 3, "or", seed=seed)
-    assert list(d0) == list(d1)
-    assert list(sc0) == list(sc1)
-    assert blocks1 <= blocks0
-    assert strips1 <= strips0
-
-
-def _unit_counts(reader, terms, k, mode, seed_threshold):
+def _unit_counts(reader, terms, k, mode):
     """Per-unit sums of ``_segment_wand``'s counts, computed on the driver
     from the collected posting rows (one unit per chunk row for a single
     term, per segment otherwise)."""
     from tantivy_spark.bm25 import Bm25Params
-    from tantivy_spark.query.wand import (
-        _TermBlocks, _segment_wand, global_seed_threshold)
+    from tantivy_spark.query.wand import _TermBlocks, _segment_wand
 
     dfs = reader.doc_freqs(terms)
     params = {t: Bm25Params.for_one_term(dfs[t], reader.num_docs,
                                          reader.avg_fieldnorm_for_term(t))
               for t in terms}
-    seed = (global_seed_threshold(reader, terms, params, k)
-            if seed_threshold else float("-inf"))
     rows = reader.postings_for_terms(terms).drop("pos").collect()
     units: dict = {}
     for i, r in enumerate(rows):
         unit = i if len(terms) == 1 else r["segment_ord"]
         units.setdefault(unit, {}).setdefault(r["term"], []).append(r)
-    want = {"decoded_blocks": 0, "processed_strips": 0, "total_blocks": 0,
-            "seeded": int(seed != float("-inf"))}
+    want = {"decoded_blocks": 0, "processed_strips": 0, "total_blocks": 0}
     for per_term in units.values():
         if mode == "and" and len(per_term) < len(terms):
             continue
         present = [t for t in terms if t in per_term]
         tbs = [_TermBlocks(per_term[t], params[t]) for t in present]
         _d, _s, blocks, strips = _segment_wand(
-            tbs, [params[t] for t in present], k, mode, seed=seed)
+            tbs, [params[t] for t in present], k, mode)
         want["decoded_blocks"] += blocks
         want["processed_strips"] += strips
         want["total_blocks"] += sum(len(tb.starts) for tb in tbs)
     return want
 
 
-@pytest.mark.parametrize("terms,mode,seeded", [
-    (["the"], "or", False),
-    (["the", "data"], "or", False),
-    (["the", "data"], "and", False),
-    (["the", "data"], "or", True),
-], ids=["term", "or", "and", "or_seeded"])
-def test_counters_come_from_the_query_run(tiny_index, monkeypatch, terms,
-                                          mode, seeded):
+def _counter_delta(reader, terms, k, mode="or"):
+    """The WAND counter deltas around one ordinary ``wand_topk`` collect."""
+    before = wand.counters(reader.spark)
+    wand_topk(reader, terms, k=k, mode=mode).collect()
+    after = wand.counters(reader.spark)
+    return {n: after[n] - before[n] for n in after}
+
+
+@pytest.mark.parametrize("terms,mode", [
+    (["the"], "or"),
+    (["the", "data"], "or"),
+    (["the", "data"], "and"),
+], ids=["term", "or", "and"])
+def test_counters_come_from_the_query_run(tiny_index, terms, mode):
     """The accumulator deltas around one ordinary ``wand_topk`` collect
-    equal the kernel's own per-unit counts; seeding never decodes more
-    blocks than the unseeded run."""
-    monkeypatch.setattr(wand, "MIN_SEED_BLOCKS", 0)
-    spark = tiny_index.spark
-
-    def delta(seed_threshold):
-        before = wand.counters(spark)
-        wand_topk(tiny_index, terms, k=3, mode=mode,
-                  seed_threshold=seed_threshold).collect()
-        after = wand.counters(spark)
-        return {n: after[n] - before[n] for n in after}
-
-    got = delta(seeded)
-    assert got == _unit_counts(tiny_index, terms, 3, mode, seeded)
+    equal the kernel's own per-unit counts."""
+    got = _counter_delta(tiny_index, terms, 3, mode)
+    assert got == _unit_counts(tiny_index, terms, 3, mode)
     assert 0 < got["decoded_blocks"] <= got["total_blocks"]
-    assert got["seeded"] == int(seeded)
-    if seeded:
-        assert got["decoded_blocks"] <= delta(False)["decoded_blocks"]
+
+
+def test_pruning_skips_blocks(spark, tmp_path_factory):
+    """On a one-segment index whose hot lists span many blocks, the stop
+    rule ends the strip loop before every block is decoded."""
+    from tantivy_spark.corpus import synthetic_pages
+    from tantivy_spark.index.build import IndexConfig, build_index
+    from tantivy_spark.index.reader import IndexReader
+
+    out = str(tmp_path_factory.mktemp("wprune") / "idx")
+    build_index(spark, synthetic_pages(spark, 3000, seed=7), out,
+                IndexConfig(key_col="url", text_col="text", n_segments=1))
+    reader = IndexReader(spark, out)
+    for terms, k in [(["the"], 1), (["the"], 10), (["the", "of"], 10)]:
+        got = _counter_delta(reader, terms, k)
+        assert 0 < got["decoded_blocks"] < got["total_blocks"], (terms, k, got)
 
 
 def test_wand_randomized_merged(spark, tmp_path_factory):
