@@ -4,7 +4,8 @@ per-segment list), the regime the BMW paper targets and the shape
 BASELINE.md's claim rides on.
 
 Builds the 800k synthetic corpus at a given ``n_segments`` and reports,
-for or/and WAND over hot terms:
+for or/and WAND over hot terms and for the single hot term ``the`` (the
+chunk-parallel single-term plan, ``single_term_chunk_parallel``):
 
 - decoded-block counters (accumulator deltas around the timed
   wand_topk runs),
@@ -79,7 +80,9 @@ def main() -> None:
         "build_or_resume_sec": build_sec,
         "load_before": [round(x, 2) for x in os.getloadavg()],
     }
-    for mode, terms in (("or", ["the", "of"]), ("and", ["the", "of"])):
+    for name, mode, terms in (("or", "or", ["the", "of"]),
+                              ("and", "and", ["the", "of"]),
+                              ("single_term_chunk_parallel", "or", ["the"])):
         t_w, rows_w, stats = timed(lambda: wand_topk(
             reader, terms, k=10, mode=mode).collect())
         occur = Occur.SHOULD if mode == "or" else Occur.MUST
@@ -88,7 +91,8 @@ def main() -> None:
                                  .search(q, k=10).collect())
         ident = ([(r["segment_ord"], r["doc_id"]) for r in rows_w]
                  == [(r["segment_ord"], r["doc_id"]) for r in rows_ex])
-        result[mode] = {
+        result[name] = {
+            "terms": terms,
             "decoded_blocks": stats["decoded_blocks"],
             "total_blocks": stats["total_blocks"],
             "wall_sec": t_w,

@@ -13,7 +13,7 @@
 - query statistics (doc_freq) are read on the driver without a Spark
   job, so a term top-k runs 2 jobs and a WAND or exact boolean query 3
   (``count_jobs`` pins these counts, and the job budget of a build and
-  a merge).
+  a merge; ``count_py4j_calls`` pins a light query's driver round-trips).
 """
 
 import itertools
@@ -55,6 +55,31 @@ def count_jobs(spark, fn) -> int:
         sc._jsc.clearJobGroup()
     threaded = ungrouped() - before
     return len(tracker.getJobIdsForGroup(group)) + len(threaded)
+
+
+def count_py4j_calls(spark, fn) -> int:
+    """py4j round-trips one call of ``fn`` makes, after the same warm-up
+    call as ``count_jobs``.  py4j's garbage-collection detach commands are
+    not counted: they come whenever Python happens to collect a proxy."""
+    from py4j import protocol
+
+    detach = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    client = spark.sparkContext._gateway._gateway_client
+    calls = [0]
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(detach):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
+
+    fn()
+    client.send_command = counting
+    try:
+        fn()
+    finally:
+        client.send_command = send
+    return calls[0]
 
 
 @pytest.fixture(scope="module")
@@ -178,6 +203,17 @@ def test_term_topk_job_count(spark, tiny_index):
 
     s = Searcher(tiny_index)
     assert count_jobs(spark, lambda: s.search("data").collect()) == 2
+
+
+@pytest.mark.parametrize("text,calls", [
+    ("data", 243), ("the data", 256), ("+data +fast", 256)])
+def test_light_query_py4j_calls(spark, tiny_index, text, calls):
+    """Driver round-trips to the JVM per light query: planning cost that
+    no job count shows."""
+    from tantivy_spark.query.searcher import Searcher
+
+    s = Searcher(tiny_index)
+    assert count_py4j_calls(spark, lambda: s.search(text).collect()) == calls
 
 
 def test_wand_or_job_count(spark, tiny_index, tiny_pages, tmp_path_factory):
