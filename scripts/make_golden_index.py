@@ -6,6 +6,10 @@ tests/compat_tests_data/index_v6,v7 + src/compat_tests.rs:1-40).
 Rebuilding here after a deliberate format bump: bump the version
 handling in reader.py first, write a NEW index_v{N} directory, and keep
 the old one so both eras stay covered.
+
+``ROWS``/``DF_SCHEMA``/``CONFIG`` are importable without side effects:
+tests/test_compat_golden_index.py rebuilds the same corpus and checks
+that a fresh build still writes the committed rows.
 """
 import json
 import os
@@ -36,38 +40,45 @@ ROWS = [
     ("doc08", 8, "a quick merge of sorted runs", 6),
     ("doc09", 9, "scan the index not the corpus", 6),
 ]
-
-spark = get_spark("golden_index", master="local[4]", shuffle_partitions=4)
-df = spark.createDataFrame(
-    ROWS, "key STRING, num LONG, text STRING, ntok LONG")
-shutil.rmtree(OUT, ignore_errors=True)
-build_index(spark, df, OUT, IndexConfig(
+DF_SCHEMA = "key STRING, num LONG, text STRING, ntok LONG"
+CONFIG = IndexConfig(
     key_col="key", text_col="text", n_segments=2,
     segment_expr="pmod(num, 2)", fast_field_cols=["num"],
-    compression="zstd"), resume=False)
+    compression="zstd")
 
-# drop non-deterministic wall-clock stage timings from the committed
-# manifest (byte-stable artifact); keep everything a reader consumes
-with open(os.path.join(OUT, "meta.json")) as f:
-    manifest = json.load(f)
-for stage in manifest.get("stages", {}).values():
-    stage.pop("wall_sec", None)
-with open(os.path.join(OUT, "meta.json"), "w") as f:
-    json.dump(manifest, f, indent=1, sort_keys=True)
 
-# pin expected answers AT GENERATION TIME — the compat test replays
-# these against the committed bytes without rebuilding
-s = ExactSearcher(IndexReader(spark, OUT))
-expected = {
-    "term_quick_topk": [
-        [r["rank"], r["key"], float(r["score"])]
-        for r in s.search(TermQuery("quick"), k=5).collect()],
-    "count_the": s.count(TermQuery("the")),
-    "phrase_merge_sort": [
-        [r["rank"], r["key"], float(r["score"])]
-        for r in s.search(PhraseQuery(["merge", "sort"]), k=5).collect()],
-}
-with open(EXPECTED, "w") as f:
-    json.dump(expected, f, indent=1, sort_keys=True)
-print("golden index written:", OUT)
-print(json.dumps(expected, indent=1))
+def main():
+    spark = get_spark("golden_index", master="local[4]", shuffle_partitions=4)
+    df = spark.createDataFrame(ROWS, DF_SCHEMA)
+    shutil.rmtree(OUT, ignore_errors=True)
+    build_index(spark, df, OUT, CONFIG, resume=False)
+
+    # drop non-deterministic wall-clock stage timings from the committed
+    # manifest (byte-stable artifact); keep everything a reader consumes
+    with open(os.path.join(OUT, "meta.json")) as f:
+        manifest = json.load(f)
+    for stage in manifest.get("stages", {}).values():
+        stage.pop("wall_sec", None)
+    with open(os.path.join(OUT, "meta.json"), "w") as f:
+        json.dump(manifest, f, indent=1, sort_keys=True)
+
+    # pin expected answers AT GENERATION TIME — the compat test replays
+    # these against the committed bytes without rebuilding
+    s = ExactSearcher(IndexReader(spark, OUT))
+    expected = {
+        "term_quick_topk": [
+            [r["rank"], r["key"], float(r["score"])]
+            for r in s.search(TermQuery("quick"), k=5).collect()],
+        "count_the": s.count(TermQuery("the")),
+        "phrase_merge_sort": [
+            [r["rank"], r["key"], float(r["score"])]
+            for r in s.search(PhraseQuery(["merge", "sort"]), k=5).collect()],
+    }
+    with open(EXPECTED, "w") as f:
+        json.dump(expected, f, indent=1, sort_keys=True)
+    print("golden index written:", OUT)
+    print(json.dumps(expected, indent=1))
+
+
+if __name__ == "__main__":
+    main()

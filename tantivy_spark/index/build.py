@@ -32,6 +32,14 @@ derive ``term_stats`` and ``lineage`` from the written postings with
 ``totals`` from per-chain sentinel statistics with :func:`index_totals`.
 Each caller only schedules the writes.
 
+It is also the one definition of a postings ROW.  :func:`posting_chunks`
+encodes one term's list into its chunk rows (the segment kernel and both
+merge kernels), :func:`decode_chunk` decodes a row (exact search and
+merge), and :func:`sentinel_chunks` / :func:`decode_sentinel` write and
+read the fieldnorm sentinel rows (build, merge, ``IndexReader.
+fieldnorms_of``).  WAND decodes single blocks with ``codec.decode_block``.
+No other module calls the codec's list, position or VInt coders.
+
 Layout of an index directory::
 
     {out}/docmap/      (segment_ord, doc_id, key, *fast_field_cols[, sortv])
@@ -55,8 +63,10 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, replace
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from tantivy_spark.bm25 import tf_cache_f32
 from tantivy_spark.fieldnorm import fieldnorm_to_id
@@ -64,14 +74,19 @@ from tantivy_spark.index import codec
 
 CHUNK_DOCS = 1 << 17  # max postings per chunk row (1024 blocks)
 
-POSTINGS_SCHEMA = (
-    "segment_ord INT, term STRING, chunk_id INT, doc_freq BIGINT, total_tf BIGINT, "
-    "docs BINARY, tfs BINARY, fns BINARY, pos BINARY, "
-    "last_docs ARRAY<INT>, n_docs ARRAY<INT>, bits_doc ARRAY<INT>, bits_tf ARRAY<INT>, "
-    "wand_fn ARRAY<INT>, wand_tf ARRAY<INT>"
-)
-
-DOCMAP_SCHEMA = "segment_ord INT, doc_id INT, key STRING"
+_POSTINGS_PA_SCHEMA = pa.schema([
+    ("segment_ord", pa.int32()), ("term", pa.string()), ("chunk_id", pa.int32()),
+    ("doc_freq", pa.int64()), ("total_tf", pa.int64()),
+    ("docs", pa.binary()), ("tfs", pa.binary()), ("fns", pa.binary()),
+    ("pos", pa.binary()),
+    ("last_docs", pa.list_(pa.int32())), ("n_docs", pa.list_(pa.int32())),
+    ("bits_doc", pa.list_(pa.int32())), ("bits_tf", pa.list_(pa.int32())),
+    ("wand_fn", pa.list_(pa.int32())), ("wand_tf", pa.list_(pa.int32())),
+])
+POSTINGS_SCHEMA = from_arrow_schema(_POSTINGS_PA_SCHEMA)
+#: postings column names, in POSTINGS_SCHEMA order (the tuples the row
+#: helpers return and the frames the merge kernels emit)
+POSTINGS_COLUMNS = _POSTINGS_PA_SCHEMA.names
 
 #: Reserved pseudo-term carrying per-segment per-doc stats inside the
 #: postings table (one row per segment): ``docs`` = VInt(num_tokens per
@@ -322,7 +337,6 @@ def _segment_kernel(cfg: IndexConfig):
              for pfx, _src, toks, sent, anlz in _field_specs(cfg)]
 
     def build_segment(tbl: "pa.Table") -> "pa.Table":
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         seg = int(tbl.column("segment_ord")[0].as_py())
@@ -352,7 +366,6 @@ def _segment_kernel(cfg: IndexConfig):
         kernel's lowercase tail is skipped and only the postings-writer
         MAX_TOKEN_LEN guard applies (the 40-byte RemoveLong belongs to
         the DEFAULT chain, tokenizer_manager.rs:58-78)."""
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         la = tbl.column(toks_col).combine_chunks().take(order)
@@ -467,43 +480,69 @@ def _segment_kernel(cfg: IndexConfig):
                 tf = tfs_all[lo:hi]
                 fn = fn_ids_per_doc[d]
                 term_pos = pos_all[pos_starts[ti]:pos_ends[ti]] if with_positions else None
-                for c0 in range(0, len(d), chunk_docs):
-                    c1 = min(c0 + chunk_docs, len(d))
-                    db, tb, fb, meta = codec.encode_postings(d[c0:c1], tf[c0:c1],
-                                                             fn[c0:c1], cache)
-                    if with_positions:
-                        p_lo = int(tf[:c0].sum())
-                        p_hi = p_lo + int(tf[c0:c1].sum())
-                        pb = codec.encode_positions(term_pos[p_lo:p_hi], tf[c0:c1])
-                    else:
-                        pb = None
-                    m = list(zip(*meta))
-                    rows.append((
-                        seg, term, c0 // chunk_docs, c1 - c0, int(tf[c0:c1].sum()),
-                        db, tb, fb, pb,
-                        list(m[0]), list(m[1]), list(m[2]), list(m[3]),
-                        list(m[4]), list(m[5]),
-                    ))
+                rows.extend(posting_chunks(seg, term, d, tf, fn, term_pos,
+                                           cache, chunk_docs))
         return rows
 
     return build_segment
 
 
-import pyarrow as _pa  # noqa: E402
+# ---- the postings row format (see the module docstring) ---------------------
 
-_POSTINGS_PA_SCHEMA = _pa.schema([
-    ("segment_ord", _pa.int32()), ("term", _pa.string()), ("chunk_id", _pa.int32()),
-    ("doc_freq", _pa.int64()), ("total_tf", _pa.int64()),
-    ("docs", _pa.binary()), ("tfs", _pa.binary()), ("fns", _pa.binary()),
-    ("pos", _pa.binary()),
-    ("last_docs", _pa.list_(_pa.int32())), ("n_docs", _pa.list_(_pa.int32())),
-    ("bits_doc", _pa.list_(_pa.int32())), ("bits_tf", _pa.list_(_pa.int32())),
-    ("wand_fn", _pa.list_(_pa.int32())), ("wand_tf", _pa.list_(_pa.int32())),
-])
+def posting_chunks(seg: int, term: str, docs: np.ndarray, tfs: np.ndarray,
+                   fns: np.ndarray, pos: np.ndarray | None,
+                   tf_cache: np.ndarray, chunk_docs: int,
+                   first_chunk: int = 0) -> list[tuple]:
+    """Postings rows of one term's list in one segment: ``docs`` strictly
+    increasing, aligned ``tfs`` and fieldnorm ids ``fns``, ``pos`` the
+    concatenated per-doc positions (or None), ``tf_cache`` the block-max
+    pair selector (bm25.tf_cache_f32 of the field's average fieldnorm).
+    The list splits into ``chunk_docs``-posting chunks numbered from
+    ``first_chunk``; an empty list has no rows.  A list that fits one
+    chunk (most of a Zipf vocabulary) is encoded without slicing."""
+    n = len(docs)
+    rows = []
+    pcum = None
+    for c0 in range(0, n, chunk_docs):
+        c1 = min(c0 + chunk_docs, n)
+        if c1 - c0 == n:
+            d, t, f, p = docs, tfs, fns, pos
+        else:
+            d, t, f = docs[c0:c1], tfs[c0:c1], fns[c0:c1]
+            p = None
+            if pos is not None:
+                if pcum is None:
+                    pcum = np.concatenate(([0], np.cumsum(tfs)))
+                p = pos[pcum[c0]:pcum[c1]]
+        db, tb, fb, meta = codec.encode_postings(d, t, f, tf_cache)
+        pb = codec.encode_positions(p, t) if pos is not None else None
+        m = list(zip(*meta))
+        rows.append((seg, term, first_chunk + c0 // chunk_docs, c1 - c0,
+                     int(t.sum()), db, tb, fb, pb,
+                     list(m[0]), list(m[1]), list(m[2]), list(m[3]),
+                     list(m[4]), list(m[5])))
+    return rows
 
-#: postings column names, in POSTINGS_SCHEMA order (the frames the merge
-#: kernels emit)
-POSTINGS_COLUMNS = _POSTINGS_PA_SCHEMA.names
+
+def decode_chunk(row, with_positions: bool):
+    """Inverse of :func:`posting_chunks` for one postings row (a pandas
+    ``itertuples`` row) -> (doc_ids int64, tfs int64, fieldnorm ids
+    uint8, flat positions int64 or None)."""
+    meta = list(zip(row.last_docs, row.n_docs, row.bits_doc, row.bits_tf,
+                    row.wand_fn, row.wand_tf))
+    docs, tfs = codec.decode_postings(bytes(row.docs), bytes(row.tfs), meta)
+    pos = codec.decode_positions(bytes(row.pos), tfs) if with_positions \
+        else None
+    return docs, tfs, codec.decode_fns(bytes(row.fns)), pos
+
+
+def decode_sentinel(row):
+    """Inverse of :func:`sentinel_chunks` for one sentinel row -> (token
+    count per doc uint32, fieldnorm id per doc uint8).  The fieldnorm ids
+    are None when the row was read without its ``fns`` column."""
+    fns = getattr(row, "fns", None)
+    return (codec.vint_decode(bytes(row.docs), int(row.doc_freq)),
+            None if fns is None else codec.decode_fns(bytes(fns)))
 
 
 def sentinel_chunks(seg: int, sentinel: str, counts: np.ndarray,

@@ -401,6 +401,25 @@ def decode_postings(docs_bytes: bytes, tfs_bytes: bytes, meta) -> tuple[np.ndarr
     return docs, tfs
 
 
+def decode_block(docs_bytes: bytes, tfs_bytes: bytes, d_off: int, t_off: int,
+                 n: int, bits_doc: int, bits_tf: int,
+                 prev_last: int) -> tuple[np.ndarray, np.ndarray]:
+    """Decode ONE block of ``n`` postings whose doc/tf bytes start at
+    ``d_off``/``t_off`` -> (doc_ids int64, tfs int64); ``prev_last`` is
+    the previous block's last doc id (-1 for the first block).  A VInt
+    tail block reads to the end of the buffers."""
+    if bits_doc == VINT_MARKER:
+        dm1 = vint_decode(docs_bytes[d_off:], n)
+        tm1 = vint_decode(tfs_bytes[t_off:], n)
+    else:
+        dm1 = bitunpack(docs_bytes[d_off:d_off + _block_nbytes(bits_doc, n)],
+                        bits_doc, n)
+        tm1 = bitunpack(tfs_bytes[t_off:t_off + _block_nbytes(bits_tf, n)],
+                        bits_tf, n)
+    return np.cumsum(dm1.astype(np.int64) + 1) + prev_last, \
+        tm1.astype(np.int64) + 1
+
+
 def _decode_postings_scalar(docs_bytes: bytes, tfs_bytes: bytes, rows):
     """Reference per-block decode path (kept for foreign block layouts)."""
     doc_chunks = []
@@ -408,23 +427,19 @@ def _decode_postings_scalar(docs_bytes: bytes, tfs_bytes: bytes, rows):
     dpos = tpos = 0
     prev_last = -1
     for last_doc, n_docs, bits_doc, bits_tf in rows:
+        docs, tfs = decode_block(docs_bytes, tfs_bytes, dpos, tpos, n_docs,
+                                 bits_doc, bits_tf, prev_last)
         if bits_doc == VINT_MARKER:
-            dm1 = vint_decode(docs_bytes[dpos:], n_docs)
-            tm1 = vint_decode(tfs_bytes[tpos:], n_docs)
             dpos = len(docs_bytes)
             tpos = len(tfs_bytes)
         else:
-            dn = _block_nbytes(bits_doc, n_docs)
-            tn = _block_nbytes(bits_tf, n_docs)
-            dm1 = bitunpack(docs_bytes[dpos:dpos + dn], bits_doc, n_docs)
-            tm1 = bitunpack(tfs_bytes[tpos:tpos + tn], bits_tf, n_docs)
-            dpos += dn
-            tpos += tn
-        docs = np.cumsum(dm1.astype(np.int64) + 1) + prev_last
+            dpos += _block_nbytes(bits_doc, n_docs)
+            tpos += _block_nbytes(bits_tf, n_docs)
         prev_last = int(docs[-1])
-        assert prev_last == int(last_doc), (prev_last, last_doc)
+        if prev_last != int(last_doc):
+            raise AssertionError("decode: last_doc chain mismatch")
         doc_chunks.append(docs)
-        tf_chunks.append(tm1.astype(np.int64) + 1)
+        tf_chunks.append(tfs)
     if not doc_chunks:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
     return np.concatenate(doc_chunks), np.concatenate(tf_chunks)

@@ -15,11 +15,18 @@ alive doc count; each group stacks into one output segment.  With
 
 Spark-first shape: because our posting lists are stored as bounded chunks
 (<= CHUNK_DOCS postings per row), merging needs NO pairwise list merge at
-all — each chunk is independently rebased (decode -> +offset -> re-encode,
-vectorized numpy) and renumbered into the merged term's chunk sequence
-within its output segment.  The only coordination is the per-(term,
-out-segment) chunk renumbering, computed as a prefix-sum over the tiny
-(term, segment) chunk-count table.
+all — each chunk is independently rebased (``build.decode_chunk`` ->
+remap -> ``build.posting_chunks``, vectorized numpy) and renumbered into
+the merged term's chunk sequence within its output segment.  The only
+coordination is the per-(term, out-segment) chunk renumbering, computed as
+a prefix-sum over the tiny (term, segment) chunk-count table.
+
+Every doc id goes through ONE map, ``_remap(...)(segment_ord, doc_ids)
+-> new ids`` (-1 = deleted): ``old - #dead_before(old) + offset`` when
+stacking.  Both posting kernels drop deleted docs through
+``_alive_postings``, the alive-token statistics test aliveness with the
+stacking map, and one ``merge_sentinels`` scatters every fieldnorm
+sentinel chain to its remapped ids.
 
 Skew: the rebase shuffle is RANGE-partitioned by (term, segment, chunk),
 so a hot term's thousands of chunks spread across contiguous partitions
@@ -43,8 +50,9 @@ merge instead materializes an old->new doc-id permutation per output
 segment — (sortv, key) order, the SAME tie-break the build uses, so
 wide-build + sorted-merge reproduces a direct sorted build — and every
 term's postings re-sort globally by new doc id before re-chunking
-(_sorted_merge_stream); fieldnorm chains scatter per doc instead of
-concatenating.  The permutation is the analogue of the reference's
+(_sorted_merge_stream).  The permutation is the remap of the sorted path
+(``perms_bc.value[seg][d]``), so the kernels and the sentinel scatter do
+not know which path they serve.  It is the analogue of the reference's
 SegmentDocIdMapping (~8 bytes/doc, held in the merge thread's RAM
 there): packed distributed, assembled once on the driver, and shipped
 via sc.broadcast — one copy per executor, never in task closures.
@@ -63,15 +71,17 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from tantivy_spark.bm25 import tf_cache_f32
-from tantivy_spark.index import codec
 from tantivy_spark.index.build import (
     FIELD_SEP,
     FIELDNORM_SENTINEL,
     POSTINGS_COLUMNS,
     POSTINGS_SCHEMA,
     _write_manifest,
+    decode_chunk,
+    decode_sentinel,
     index_totals,
     lineage_table,
+    posting_chunks,
     sentinel_chunks,
     term_stats_table,
     write_table,
@@ -83,79 +93,75 @@ from tantivy_spark.index.reader import IndexReader
 _STREAMING_KEYS = ("batches", "next_segment_ord", "opstamp")
 
 
-def _dead_in_chunk(dd: np.ndarray | None, base: int, n: int) -> np.ndarray | None:
-    """Chunk-local (0-based) indices of dead docs within [base, base+n)."""
-    if dd is None or not len(dd):
-        return None
-    lo = np.searchsorted(dd, base, side="left")
-    hi = np.searchsorted(dd, base + n, side="left")
-    if lo == hi:
-        return None
-    return (dd[lo:hi] - base).astype(np.int64)
+def _remap(offsets: dict[int, int], dead: dict[int, np.ndarray],
+           perms_bc=None):
+    """The merge's one old -> new doc-id map: ``remap(segment_ord,
+    doc_ids) -> new ids`` (int64), ``-1`` for a deleted doc.
+
+    Stacking (the reference merger's alive-doc remapping, merger.rs:
+    697-708): ``new = old - #dead_before(old) + offsets[segment]`` over
+    the per-segment sorted dead doc ids.  With ``perms_bc`` (a SORTED
+    index) the map is the broadcast permutation ``perms_bc.value[seg]``
+    instead."""
+    if perms_bc is not None:
+        return lambda seg, d: perms_bc.value[seg][d]
+
+    def stacked(seg: int, d: np.ndarray) -> np.ndarray:
+        dd = dead.get(seg)
+        if dd is None:
+            return d + offsets[seg]
+        return np.where(np.isin(d, dd), -1,
+                        d - np.searchsorted(dd, d) + offsets[seg])
+
+    return stacked
 
 
-def _rebase_kernel(offsets: dict[int, int], out_seg: dict[int, int],
-                   avg_fieldnorm: float,
-                   dead: dict[int, np.ndarray] | None = None,
-                   avg_by_field: dict[str, float] | None = None):
-    """mapInPandas kernel: rebase each posting chunk by its segment offset
-    into its output segment.
-
-    With ``dead`` (per-segment sorted dead doc ids), deleted docs are
-    physically dropped and the survivors renumbered densely — the
-    reference merger's alive-doc remapping (merger.rs:697-708):
-    ``new_id = old_id - #dead_before(old_id) + alive_offset(segment)``.
-
-    ``avg_by_field``: per-field average fieldnorms of a multi-field index;
-    the block-max (wand_fn, wand_tf) pair re-selection must use the
-    TERM'S FIELD average, matching the build kernel, or WAND pruning over
-    the merged index would not be exact.
-    """
+def _tf_caches(avg_fieldnorm: float, avg_by_field: dict[str, float] | None):
+    """term -> block-max pair cache (``posting_chunks``' ``tf_cache``):
+    the TERM'S FIELD average fieldnorm on a multi-field index, matching
+    the build kernel, else the index average — otherwise WAND pruning
+    over the merged index would not be exact."""
     cache = tf_cache_f32(max(avg_fieldnorm, 1e-9))
     field_caches = {f: tf_cache_f32(max(a, 1e-9))
                     for f, a in (avg_by_field or {}).items()}
-    dead = dead or {}
 
-    def cache_of(term: str):
+    def cache_of(term: str) -> np.ndarray:
         if field_caches and FIELD_SEP in term:
             return field_caches.get(term.split(FIELD_SEP, 1)[0], cache)
         return cache
 
+    return cache_of
+
+
+def _alive_postings(row, remap):
+    """One postings row decoded, its doc ids mapped through ``remap`` and
+    its deleted docs (with their positions) dropped -> (new doc ids, tfs,
+    fieldnorm ids, flat positions or None)."""
+    d, t, fn, pos = decode_chunk(row, row.pos is not None)
+    nd = remap(int(row.segment_ord), d)
+    alive = nd >= 0
+    if not alive.all():
+        if pos is not None:
+            pos = pos[np.repeat(alive, t)]
+        nd, t, fn = nd[alive], t[alive], fn[alive]
+    return nd, t, fn, pos
+
+
+def _rebase_kernel(remap, out_seg: dict[int, int], tf_caches,
+                   chunk_docs: int):
+    """mapInPandas kernel of the STACKING merge: each posting chunk keeps
+    its own row, renumbered into its output segment (``new_chunk_id``)
+    with its doc ids stacked by ``remap``; a chunk whose docs are all
+    deleted disappears."""
     def rebase(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
             out_rows = []
             for row in pdf.itertuples(index=False):
-                seg = int(row.segment_ord)
-                off = offsets[seg]
-                meta = list(zip(row.last_docs, row.n_docs, row.bits_doc,
-                                row.bits_tf, row.wand_fn, row.wand_tf))
-                d, t = codec.decode_postings(bytes(row.docs), bytes(row.tfs), meta)
-                fn = codec.decode_fns(bytes(row.fns))
-                pos_flat = (codec.decode_positions(bytes(row.pos), t)
-                            if row.pos is not None else None)
-                dd = dead.get(seg)
-                if dd is not None and len(dd):
-                    alive = ~np.isin(d, dd)
-                    if pos_flat is not None:
-                        pos_keep = np.repeat(alive, t)
-                        pos_flat = pos_flat[pos_keep]
-                    d, t, fn = d[alive], t[alive], fn[alive]
-                    if len(d) == 0:
-                        continue
-                    d = d - np.searchsorted(dd, d)
-                db, tb, fb, new_meta = codec.encode_postings(
-                    d + off, t, fn, cache_of(row.term))
-                pb = (codec.encode_positions(pos_flat, t)
-                      if pos_flat is not None else None)
-                m = list(zip(*new_meta))
-                out_rows.append((
-                    out_seg[seg], row.term, int(row.new_chunk_id), len(d),
-                    int(t.sum()), db, tb, fb, pb,
-                    list(m[0]), list(m[1]), list(m[2]), list(m[3]),
-                    list(m[4]), list(m[5]),
-                ))
+                d, t, fn, pos = _alive_postings(row, remap)
+                out_rows += posting_chunks(
+                    out_seg[int(row.segment_ord)], row.term, d, t, fn, pos,
+                    tf_caches(row.term), chunk_docs,
+                    first_chunk=int(row.new_chunk_id))
             if out_rows:
                 yield pd.DataFrame(out_rows, columns=POSTINGS_COLUMNS)
 
@@ -198,8 +204,7 @@ def _collect_perms(sorted_docmap, seg_docs: dict[int, int]
     return perms
 
 
-def _sorted_merge_stream(perms_bc, avg_fieldnorm: float, chunk_docs: int,
-                         avg_by_field: dict[str, float] | None = None):
+def _sorted_merge_stream(remap, tf_caches, chunk_docs: int):
     """mapInPandas kernel for SORTED-index merge (ref: merger.rs — a
     sorted index merges by k-way-merging doc orders on the sort key, not
     by stacking).  Input: posting rows repartitioned by (term, out_g) and
@@ -210,67 +215,29 @@ def _sorted_merge_stream(perms_bc, avg_fieldnorm: float, chunk_docs: int,
     amortizes over ~10k-row batches instead of paying applyInPandas
     conversion overhead once per term.
 
-    Per group: decode all source chunks, map doc ids through the
-    broadcast permutation (``perms_bc`` — one copy per executor, the
-    analogue of the reference's in-RAM SegmentDocIdMapping; -1 =
-    deleted, dropped), re-sort the whole posting list by NEW doc id, and
-    re-encode into ``chunk_docs``-bounded chunks.
+    Per group: decode all source chunks, map doc ids through ``remap``
+    (the broadcast permutation; deleted docs dropped), re-sort the whole
+    posting list by NEW doc id, and re-encode into ``chunk_docs``-bounded
+    chunks.
 
     There is no salting: a term's postings need a GLOBAL re-sort within
     the output segment, so a hot term is one group — the same
     serial-per-term shape the reference merger has.
     """
-    cache = tf_cache_f32(max(avg_fieldnorm, 1e-9))
-    field_caches = {f: tf_cache_f32(max(a, 1e-9))
-                    for f, a in (avg_by_field or {}).items()}
-
-    def cache_of(term: str):
-        if field_caches and FIELD_SEP in term:
-            return field_caches.get(term.split(FIELD_SEP, 1)[0], cache)
-        return cache
-
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        perms = perms_bc.value
         term = pdf["term"].iloc[0]
-        g = int(pdf["out_g"].iloc[0])
-        tf_cache = cache_of(term)
-        d_parts, t_parts, f_parts, p_parts = [], [], [], []
-        has_pos = pdf["pos"].notna().any()
-        for row in pdf.itertuples(index=False):
-            seg = int(row.segment_ord)
-            meta = list(zip(row.last_docs, row.n_docs, row.bits_doc,
-                            row.bits_tf, row.wand_fn, row.wand_tf))
-            d, t = codec.decode_postings(bytes(row.docs), bytes(row.tfs),
-                                         meta)
-            fn = codec.decode_fns(bytes(row.fns))
-            pos_flat = (codec.decode_positions(bytes(row.pos), t)
-                        if row.pos is not None else None)
-            nd = perms[seg][d]
-            alive = nd >= 0
-            if not alive.all():
-                if pos_flat is not None:
-                    pos_flat = pos_flat[np.repeat(alive, t)]
-                nd, t, fn = nd[alive], t[alive], fn[alive]
-            if len(nd) == 0:
-                continue
-            d_parts.append(nd)
-            t_parts.append(t)
-            f_parts.append(fn)
-            if has_pos:
-                p_parts.append(pos_flat if pos_flat is not None
-                               else np.zeros(0, np.int64))
-        if not d_parts:
+        parts = [p for p in (_alive_postings(row, remap)
+                             for row in pdf.itertuples(index=False))
+                 if len(p[0])]
+        if not parts:
             return pd.DataFrame(columns=POSTINGS_COLUMNS)
-        d = np.concatenate(d_parts)
-        t = np.concatenate(t_parts)
-        fn = np.concatenate(f_parts)
+        d, t, fn = (np.concatenate([p[i] for p in parts]) for i in range(3))
         # new doc ids are unique within a (term, out_g) group (each doc
         # lists a term once), so the faster unstable sort is exact
         order = np.argsort(d)
-        d, t_new, fn = d[order], t[order], fn[order]
-        pos_new = None
-        if has_pos:
-            pos_flat = np.concatenate(p_parts)
+        pos = None
+        if parts[0][3] is not None:
+            pos_flat = np.concatenate([p[3] for p in parts])
             # vectorized variable-length gather: posting i's position
             # slice moves as one unit to its sorted rank
             starts = np.concatenate(([0], np.cumsum(t)[:-1]))
@@ -278,23 +245,10 @@ def _sorted_merge_stream(perms_bc, avg_fieldnorm: float, chunk_docs: int,
             new_off = np.concatenate(([0], np.cumsum(t_ord)[:-1]))
             gather = (starts_ord.repeat(t_ord)
                       + (np.arange(int(t_ord.sum())) - new_off.repeat(t_ord)))
-            pos_new = pos_flat[gather]
-        t = t_new
-        pcum = np.concatenate(([0], np.cumsum(t)))
-        rows = []
-        for ci, c0 in enumerate(range(0, len(d), chunk_docs)):
-            c1 = min(c0 + chunk_docs, len(d))
-            db, tb, fb, new_meta = codec.encode_postings(
-                d[c0:c1], t[c0:c1], fn[c0:c1], tf_cache)
-            pb = (codec.encode_positions(pos_new[pcum[c0]:pcum[c1]],
-                                         t[c0:c1])
-                  if pos_new is not None else None)
-            m = list(zip(*new_meta))
-            rows.append((g, term, ci, c1 - c0, int(t[c0:c1].sum()),
-                         db, tb, fb, pb,
-                         list(m[0]), list(m[1]), list(m[2]), list(m[3]),
-                         list(m[4]), list(m[5])))
-        return pd.DataFrame(rows, columns=POSTINGS_COLUMNS)
+            pos = pos_flat[gather]
+        return pd.DataFrame(posting_chunks(
+            int(pdf["out_g"].iloc[0]), term, d[order], t[order], fn[order],
+            pos, tf_caches(term), chunk_docs), columns=POSTINGS_COLUMNS)
 
     def stream(batches):
         pending: pd.DataFrame | None = None
@@ -463,15 +417,10 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
     oseg_expr = F.create_map(
         *[x for seg, g in out_seg.items() for x in (F.lit(seg), F.lit(g))])
 
-    # ---- SORTED-index merge (ref: merger.rs sorted path — doc ids of
-    # the merged segment follow the index sort key, not stacking).  The
-    # old->new permutation is the analogue of the reference's
-    # SegmentDocIdMapping (~8 bytes/doc, held in the merge thread's RAM
-    # there); here it is packed DISTRIBUTED, assembled once on the
-    # driver, and shipped via sc.broadcast — one torrent copy per
-    # executor, never pickled into task closures.  Tie-break matches the
-    # build's (sortv, key) order, so wide-build + sorted-merge
-    # reproduces a direct sorted build byte-for-byte.
+    # ---- SORTED-index merge (see the module docstring): new doc ids in
+    # (sortv, key) order within each output segment, the build's
+    # tie-break, so wide-build + sorted-merge reproduces a direct sorted
+    # build byte-for-byte.
     sort_col = manifest.get("config", {}).get("sort_col") or None
     docmap = reader._table("docmap").drop("batch")
     if dead:
@@ -499,19 +448,16 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
     # alive-only token counts PER SENTINEL CHAIN (drives both the
     # block-max caches and the merged manifest) — distributed over the
     # chunked sentinel rows, never a whole-index driver collect
+    stacking = _remap(offsets, dead)
+
     def _sent_stats(batches):
         for pdf in batches:
             recs = []
             for row in pdf.itertuples(index=False):
-                n = int(row.doc_freq)
-                base = int(row.chunk_id) * chunk_docs
-                counts = codec.vint_decode(bytes(row.docs), n)
-                loc = _dead_in_chunk(dead.get(int(row.segment_ord)), base, n)
-                if loc is not None:
-                    mask = np.ones(n, dtype=bool)
-                    mask[loc] = False
-                    counts = counts[mask]
-                recs.append((row.term, int(counts.sum())))
+                counts, _ = decode_sentinel(row)
+                d = int(row.chunk_id) * chunk_docs + np.arange(len(counts))
+                alive = stacking(int(row.segment_ord), d) >= 0
+                recs.append((row.term, int(counts[alive].sum())))
             if recs:
                 yield pd.DataFrame(recs, columns=["term", "tok_alive"])
 
@@ -545,9 +491,11 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
     # every sentinel chain covers all alive docs
     totals = index_totals([(r["term"], total_alive, r["t"]) for r in tok_rows],
                           n_out, field_cols)
-    avg_fn = totals["avg_fieldnorm"]
-    avg_by_field = ({f: e["avg_fieldnorm"] for f, e in totals["fields"].items()}
-                    if field_cols else None)
+    tf_caches = _tf_caches(
+        totals["avg_fieldnorm"],
+        {f: e["avg_fieldnorm"] for f, e in totals["fields"].items()}
+        if field_cols else None)
+    remap = _remap(offsets, dead, perms_bc)
 
     if perms_bc is not None:
         # sorted merge: every (term, output-segment) group re-sorts by
@@ -567,8 +515,7 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
                   .sortWithinPartitions("term", "out_g",
                                         "segment_ord", "chunk_id")
                   .mapInPandas(
-                      _sorted_merge_stream(perms_bc, avg_fn, chunk_docs,
-                                           avg_by_field),
+                      _sorted_merge_stream(remap, tf_caches, chunk_docs),
                       schema=POSTINGS_SCHEMA))
     else:
         # ---- per-(term, out-segment) chunk renumbering via prefix sums ---
@@ -598,64 +545,36 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
             .sortWithinPartitions("term", "segment_ord", "chunk_id")
         )
         merged = rebased_input.mapInPandas(
-            _rebase_kernel(offsets, out_seg, avg_fn, dead, avg_by_field),
+            _rebase_kernel(remap, out_seg, tf_caches, chunk_docs),
             schema=POSTINGS_SCHEMA)
 
     # ---- merged fieldnorm sentinels: one invocation per (output segment,
-    # sentinel term), so each field's chain merges independently.  The
-    # per-doc stats are stacked in segment order (or, on a sorted index,
-    # scattered to each doc's NEW position), then re-chunked per
-    # chunk_docs by the build's sentinel writer.
-    def decoded_sentinels(pdf: pd.DataFrame):
-        for row in pdf.itertuples(index=False):
-            n = int(row.doc_freq)
-            yield (int(row.segment_ord), int(row.chunk_id) * chunk_docs, n,
-                   codec.vint_decode(bytes(row.docs), n),
-                   np.frombuffer(bytes(row.fns), dtype=np.uint8))
+    # sentinel term), so each field's chain merges independently.  Each
+    # doc's stats scatter to its ``remap``ped id (stacked, or permuted on
+    # a sorted index; deleted docs dropped), then re-chunk per chunk_docs
+    # through the build's sentinel writer.
+    group_sizes: dict[int, int] = {}
+    for seg, g in out_seg.items():
+        group_sizes[g] = group_sizes.get(g, 0) + alive_docs[seg]
 
     def merge_sentinels(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["segment_ord", "chunk_id"], ignore_index=True)
-        counts_parts, fns_parts = [], []
-        for seg, base, n, counts, fns in decoded_sentinels(pdf):
-            loc = _dead_in_chunk(dead.get(seg), base, n)
-            if loc is not None:
-                mask = np.ones(n, dtype=bool)
-                mask[loc] = False
-                counts, fns = counts[mask], fns[mask]
-            counts_parts.append(counts)
-            fns_parts.append(fns)
+        g = int(pdf["g"].iloc[0])
+        all_counts = np.zeros(group_sizes[g], dtype=np.uint32)
+        all_fns = np.zeros(group_sizes[g], dtype=np.uint8)
+        for row in pdf.itertuples(index=False):
+            counts, fns = decode_sentinel(row)
+            nd = remap(int(row.segment_ord), int(row.chunk_id) * chunk_docs
+                       + np.arange(len(counts)))
+            keep = nd >= 0
+            all_counts[nd[keep]] = counts[keep]
+            all_fns[nd[keep]] = fns[keep]
         return pd.DataFrame(sentinel_chunks(
-            out_seg[int(pdf["segment_ord"].iloc[0])], pdf["term"].iloc[0],
-            np.concatenate(counts_parts), np.concatenate(fns_parts),
-            chunk_docs), columns=POSTINGS_COLUMNS)
-
-    if perms_bc is not None:
-        group_sizes: dict[int, int] = {}
-        for seg, g in out_seg.items():
-            group_sizes[g] = group_sizes.get(g, 0) + alive_docs[seg]
-
-        def merge_sentinels_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
-            perms = perms_bc.value
-            g = out_seg[int(pdf["segment_ord"].iloc[0])]
-            all_counts = np.zeros(group_sizes[g], dtype=np.uint32)
-            all_fns = np.zeros(group_sizes[g], dtype=np.uint8)
-            for seg, base, n, counts, fns in decoded_sentinels(pdf):
-                nd = perms[seg][base:base + n]
-                keep = nd >= 0
-                all_counts[nd[keep]] = counts[keep]
-                all_fns[nd[keep]] = fns[keep]
-            return pd.DataFrame(sentinel_chunks(
-                g, pdf["term"].iloc[0], all_counts, all_fns, chunk_docs),
-                columns=POSTINGS_COLUMNS)
-
-        sentinel_fn = merge_sentinels_sorted
-    else:
-        sentinel_fn = merge_sentinels
+            g, pdf["term"].iloc[0], all_counts, all_fns, chunk_docs),
+            columns=POSTINGS_COLUMNS)
 
     sent_merged = (sent.withColumn("g", oseg_expr[F.col("segment_ord")])
                    .groupBy("g", "term")
-                   .applyInPandas(lambda pdf: sentinel_fn(pdf.drop(columns=["g"])),
-                                  schema=POSTINGS_SCHEMA))
+                   .applyInPandas(merge_sentinels, schema=POSTINGS_SCHEMA))
 
     # final layout: the kernels already receive range-partitioned,
     # term-sorted input and preserve row order, so every term lookup

@@ -278,9 +278,7 @@ class IndexReader:
         import numpy as np
         import pandas as pd
 
-        from tantivy_spark.fieldnorm import fieldnorm_to_id  # noqa: F401
-        from tantivy_spark.index import codec
-        from tantivy_spark.index.build import fieldnorm_sentinel
+        from tantivy_spark.index.build import decode_sentinel, fieldnorm_sentinel
 
         chunk_docs = self.chunk_docs  # captured by value into the kernel
         rows = self.postings.filter(F.col("term") == fieldnorm_sentinel(fld)) \
@@ -289,14 +287,13 @@ class IndexReader:
         def decode(batches):
             for pdf in batches:
                 for row in pdf.itertuples(index=False):
-                    n = int(row.doc_freq)
+                    counts, fns = decode_sentinel(row)
+                    n = len(counts)
                     base = int(row.chunk_id) * chunk_docs
-                    counts = codec.vint_decode(bytes(row.docs), n).astype(np.int64)
-                    fns = np.frombuffer(bytes(row.fns), dtype=np.uint8)
                     yield pd.DataFrame({
                         "segment_ord": np.full(n, row.segment_ord, dtype=np.int32),
                         "doc_id": (base + np.arange(n)).astype(np.int32),
-                        "num_tokens": counts,
+                        "num_tokens": counts.astype(np.int64),
                         "fieldnorm_id": fns.astype(np.int32),
                     })
 

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from tantivy_spark import B, K1
 from tantivy_spark.fieldnorm import FIELD_NORMS_TABLE
-from tantivy_spark.index import codec
+from tantivy_spark.index.build import decode_chunk
 from tantivy_spark.index.reader import IndexReader
 from tantivy_spark.query import ast
 
@@ -169,10 +169,7 @@ def _decode_kernel(with_positions: bool):
                 continue
             terms, segs, docs, tfs, fns, poss = [], [], [], [], [], []
             for row in pdf.itertuples(index=False):
-                meta = list(zip(row.last_docs, row.n_docs, row.bits_doc,
-                                row.bits_tf, row.wand_fn, row.wand_tf))
-                d, t = codec.decode_postings(bytes(row.docs), bytes(row.tfs), meta)
-                fn = codec.decode_fns(bytes(row.fns))
+                d, t, fn, p = decode_chunk(row, with_positions)
                 n = len(d)
                 terms.append(np.full(n, row.term, dtype=object))
                 segs.append(np.full(n, row.segment_ord, dtype=np.int32))
@@ -180,7 +177,6 @@ def _decode_kernel(with_positions: bool):
                 tfs.append(t)
                 fns.append(fn.astype(np.int32))
                 if with_positions:
-                    p = codec.decode_positions(bytes(row.pos), t)
                     poss.append(p.astype(np.int32))
             if not terms:
                 continue

@@ -480,18 +480,8 @@ def sloppy_count_two_batch(left_lists, right_lists, slop: int):
     """
     import numpy as np
 
-    def flatten(lists):
-        arrs = [np.asarray(x, dtype=np.int64) for x in lists]
-        lens = np.fromiter((len(a) for a in arrs), dtype=np.int64,
-                           count=len(arrs))
-        vals = (np.concatenate(arrs) if len(arrs) and lens.sum()
-                else np.zeros(0, np.int64))
-        offs = np.concatenate(([0], np.cumsum(lens)[:-1])) \
-            if len(arrs) else np.zeros(0, np.int64)
-        return vals, offs, lens
-
-    lvals, loff, llen = flatten(left_lists)
-    rvals, roff, rlen = flatten(right_lists)
+    lvals, loff, llen = _flatten_lists(left_lists)
+    rvals, roff, rlen = _flatten_lists(right_lists)
     n = len(llen)
     li = np.zeros(n, np.int64)
     ri = np.zeros(n, np.int64)

@@ -131,17 +131,10 @@ class _TermBlocks:
         ci = int(self.chunk_of[b])
         docs_buf, tfs_buf, fns_buf = self.chunk_bufs[ci]
         nd = int(self.n_docs[b])
-        bd, bt = int(self.bits_doc[b]), int(self.bits_tf[b])
-        if bd == codec.VINT_MARKER:
-            dm1 = codec.vint_decode(docs_buf[self.doc_off[b]:], nd)
-            tm1 = codec.vint_decode(tfs_buf[self.tf_off[b]:], nd)
-        else:
-            dlen = (nd * bd + 7) // 8
-            tlen = (nd * bt + 7) // 8
-            dm1 = codec.bitunpack(docs_buf[self.doc_off[b]:self.doc_off[b] + dlen], bd, nd)
-            tm1 = codec.bitunpack(tfs_buf[self.tf_off[b]:self.tf_off[b] + tlen], bt, nd)
-        docs = np.cumsum(dm1.astype(np.int64) + 1) + (self.starts[b] - 1)
-        tfs = tm1.astype(np.int64) + 1
+        docs, tfs = codec.decode_block(
+            docs_buf, tfs_buf, int(self.doc_off[b]), int(self.tf_off[b]), nd,
+            int(self.bits_doc[b]), int(self.bits_tf[b]),
+            int(self.starts[b]) - 1)
         fns = np.frombuffer(fns_buf, dtype=np.uint8,
                             count=nd, offset=int(self.fn_off[b])).astype(np.int64)
         return docs, tfs, fns

@@ -123,3 +123,19 @@ def test_encode_decode_randomized_roundtrip():
                 for l, n_, bd, bt, _f, _t in meta]
         d3, t3 = codec._decode_postings_scalar(db, tb, rows)
         assert np.array_equal(d3, docs) and np.array_equal(t3, tfs), trial
+
+
+@pytest.mark.parametrize("n", [300, 40], ids=["bitpacked", "vint-tail"])
+def test_corrupt_last_doc_raises_on_both_decode_paths(n):
+    """A block whose stored last_doc disagrees with its decoded doc ids
+    is rejected by the bulk decoder and by the per-block fallback alike
+    (an explicit raise, which ``python -O`` does not strip)."""
+    docs = np.arange(0, 3 * n, 3)
+    db, tb, _fb, meta = codec.encode_postings(docs, np.ones(n, np.int64),
+                                              np.zeros(n, np.uint8))
+    bad = [(m[0] + 1,) + tuple(m[1:]) if i == 0 else m
+           for i, m in enumerate(meta)]
+    with pytest.raises(AssertionError, match="last_doc"):
+        codec.decode_postings(db, tb, bad)
+    with pytest.raises(AssertionError, match="last_doc chain mismatch"):
+        codec._decode_postings_scalar(db, tb, [m[:4] for m in bad])

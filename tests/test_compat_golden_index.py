@@ -6,7 +6,9 @@ manifest keys, table layout, scoring) breaks a test instead of a user's
 existing index.
 
 Regenerate ONLY on a deliberate format bump: scripts/make_golden_index.py
-(keep the old version directory and add a new one, like the reference)."""
+(keep the old version directory and add a new one, like the reference).
+The one rebuild here, into tmp_path, checks the other direction: the
+current writer still produces the committed rows."""
 
 import json
 import os
@@ -69,3 +71,43 @@ def test_fast_field_survives_format(searcher):
     """The committed docmap carries the 'num' fast field; range queries
     must resolve on it without the source table."""
     assert searcher.count(FastFieldRangeQuery("num", 3, 7)) == 5
+
+
+def _golden_script():
+    import importlib.util
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)),
+                        "scripts", "make_golden_index.py")
+    spec = importlib.util.spec_from_file_location("make_golden_index", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+#: table -> sort key of its rows (every key is unique within its table)
+TABLE_ORDER = {
+    "postings": ("segment_ord", "term", "chunk_id"),
+    "docmap": ("segment_ord", "doc_id"),
+    "term_stats": ("term",),
+    "lineage": ("segment_ord",),
+}
+
+
+def test_fresh_build_writes_the_committed_rows(spark, tmp_path):
+    """A fresh build of the generator's corpus and config writes exactly
+    the committed rows of every table: the writer, the codec and the
+    chunk-row layout cannot drift without a format bump."""
+    from tantivy_spark.index.build import build_index
+
+    gen = _golden_script()
+    out = str(tmp_path / "rebuilt")
+    build_index(spark, spark.createDataFrame(gen.ROWS, gen.DF_SCHEMA), out,
+                gen.CONFIG, resume=False)
+    for table, order in TABLE_ORDER.items():
+        got = [r.asDict() for r in
+               spark.read.parquet(os.path.join(out, table))
+               .orderBy(*order).collect()]
+        want = [r.asDict() for r in
+                spark.read.parquet(os.path.join(GOLDEN, table))
+                .orderBy(*order).collect()]
+        assert got and got == want, table

@@ -97,3 +97,40 @@ def test_every_package_definition_is_used():
                   and not (name.startswith("__") and name.endswith("__"))
                   for mod in mods)
     assert not dead, f"unused package definitions: {dead}"
+
+
+#: the codec's list, position and VInt/bitpack (de)coders: only the codec
+#: itself and the postings row helpers may name them, so the chunk-row
+#: format has one writer and one reader
+ROW_FORMAT_CODERS = {"encode_postings", "decode_postings", "encode_positions",
+                     "decode_positions", "vint_decode", "bitunpack"}
+ROW_HELPERS = {"index/build.py": {"posting_chunks", "decode_chunk",
+                                  "decode_sentinel"}}
+
+
+def _coder_uses(tree) -> list[tuple[str, int]]:
+    """(enclosing module-level definition, line) of every name or
+    attribute reference to a ROW_FORMAT_CODERS member."""
+    out = []
+    for top in tree.body:
+        owner = getattr(top, "name", "<module>")
+        for n in ast.walk(top):
+            name = n.id if isinstance(n, ast.Name) else \
+                n.attr if isinstance(n, ast.Attribute) else None
+            if name in ROW_FORMAT_CODERS:
+                out.append((owner, n.lineno))
+    return out
+
+
+def test_only_the_row_helpers_use_the_postings_coders():
+    bad = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        if rel == "index/codec.py":
+            continue
+        allowed = ROW_HELPERS.get(rel, set())
+        bad += [f"{rel}:{line} ({owner})" for owner, line in
+                _coder_uses(ast.parse(path.read_text(), filename=str(path)))
+                if owner not in allowed]
+    assert not bad, f"chunk-row format decoded/encoded outside the " \
+        f"row helpers: {bad}"

@@ -336,3 +336,78 @@ def test_build_index_wide_matches_direct(spark, tiny_pages,
         hw = sorted((r["key"], round(r["score"], 4)) for r in
                     ExactSearcher(rw).search(q, k=600).collect())
         assert hd == hw, q
+
+
+#: md5 of each merged table's sorted rows: a merge-kernel change that moves
+#: one byte of the output fails here.  Key: (sorted index, n targets).
+MERGED_TABLE_DIGESTS = {
+    (False, 1): {"postings": "6763b1b0bfa13c9f9f93dca022dab9a3",
+                 "docmap": "0ca935d41bb7b3fe12571ad3e1601037",
+                 "term_stats": "d3224c1ab8fbb66c5b21d72a7c874f65",
+                 "lineage": "b6c89af05c2bcecf0a004f0ac601171c"},
+    (False, 2): {"postings": "599c5266a58a7a86b66f3749c5e4cd11",
+                 "docmap": "991d33ae92d74582f76cae959f4fc756",
+                 "term_stats": "d3224c1ab8fbb66c5b21d72a7c874f65",
+                 "lineage": "10fae8fdc58bb3713a2fa503b880b323"},
+    (True, 1): {"postings": "f33d21ad0a501fadf8de7d6e2362f9f2",
+                "docmap": "012329c9a40efc2b43ec035391b673a6",
+                "term_stats": "d3224c1ab8fbb66c5b21d72a7c874f65",
+                "lineage": "f259d5209d8158580ba0a5cf0cb04653"},
+    (True, 2): {"postings": "f7f234f2d49d789a0fcf25d945649fe4",
+                "docmap": "6e4df8d46f35407825f04dcc6a9a8fdf",
+                "term_stats": "d3224c1ab8fbb66c5b21d72a7c874f65",
+                "lineage": "27211a7733f579cc7002ca371111a81f"},
+}
+
+
+@pytest.fixture(scope="module")
+def multichunk_deleted_indexes(spark, tmp_path_factory):
+    """A stacking and a sorted index over the same 600 docs, with
+    ``chunk_docs=160`` (multi-chunk posting lists and sentinel chains,
+    chunks holding a full bitpacked block plus a VInt tail) and 20
+    deleted keys spread over every segment."""
+    from tantivy_spark.corpus import synthetic_pages
+    from tantivy_spark.index.build import IndexConfig, build_index
+    from tantivy_spark.index.deletes import delete_by_keys
+
+    pages = synthetic_pages(spark, 600, seed=41).select(
+        "url", "text", F.octet_length("text").alias("tlen"))
+    urls = sorted(r["url"] for r in pages.select("url").collect())
+    victims = urls[::30]
+    base = tmp_path_factory.mktemp("mdig")
+    out = {}
+    for is_sorted in (False, True):
+        src = str(base / f"src_{is_sorted}")
+        build_index(spark, pages, src, IndexConfig(
+            key_col="url", text_col="text", n_segments=3, chunk_docs=160,
+            sort_col="desc:tlen" if is_sorted else None))
+        assert delete_by_keys(spark, IndexReader(spark, src),
+                              victims) == len(victims)
+        out[is_sorted] = src
+    return out
+
+
+def _sorted_rows_md5(spark, path: str) -> str:
+    import hashlib
+
+    lines = sorted(repr(tuple(bytes(v) if isinstance(v, bytearray) else v
+                              for v in r))
+                   for r in spark.read.parquet(path).collect())
+    return hashlib.md5("\n".join(lines).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("is_sorted,n_target", list(MERGED_TABLE_DIGESTS))
+def test_merged_tables_are_byte_pinned(spark, multichunk_deleted_indexes,
+                                       tmp_path, is_sorted, n_target):
+    """Stacking and sorted merges of a multi-chunk index with deletes
+    write exactly the pinned rows of every table."""
+    import os
+
+    from tantivy_spark.index.merge import merge_segments
+
+    out = str(tmp_path / "merged")
+    merge_segments(spark, multichunk_deleted_indexes[is_sorted], out,
+                   n_target_segments=n_target)
+    got = {t: _sorted_rows_md5(spark, os.path.join(out, t))
+           for t in ("postings", "docmap", "term_stats", "lineage")}
+    assert got == MERGED_TABLE_DIGESTS[(is_sorted, n_target)]
