@@ -527,9 +527,10 @@ def posting_chunks(seg: int, term: str, docs: np.ndarray, tfs: np.ndarray,
 def decode_chunk(row, with_positions: bool):
     """Inverse of :func:`posting_chunks` for one postings row (a pandas
     ``itertuples`` row) -> (doc_ids int64, tfs int64, fieldnorm ids
-    uint8, flat positions int64 or None)."""
-    meta = list(zip(row.last_docs, row.n_docs, row.bits_doc, row.bits_tf,
-                    row.wand_fn, row.wand_tf))
+    uint8, flat positions int64 or None).  Reads ``docs``, ``tfs``,
+    ``fns``, ``last_docs``, ``n_docs``, ``bits_doc``, ``bits_tf`` and, with
+    positions, ``pos`` — never the WAND block-max columns."""
+    meta = list(zip(row.last_docs, row.n_docs, row.bits_doc, row.bits_tf))
     docs, tfs = codec.decode_postings(bytes(row.docs), bytes(row.tfs), meta)
     pos = codec.decode_positions(bytes(row.pos), tfs) if with_positions \
         else None

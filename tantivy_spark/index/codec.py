@@ -51,11 +51,12 @@ def bitpack(values: np.ndarray, width: int) -> bytes:
 
 
 def bitunpack(buf: bytes, width: int, n: int) -> np.ndarray:
-    """Inverse of :func:`bitpack` -> uint32 array of length n."""
+    """Inverse of :func:`bitpack` -> uint32 array of length n, read from
+    the start of ``buf`` (bytes past the ``n * width`` bits are ignored)."""
     if width == 0:
         return np.zeros(n, dtype=np.uint32)
-    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8), bitorder="little")
-    bits = bits[: n * width].reshape(n, width)
+    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8), count=n * width,
+                         bitorder="little").reshape(n, width)
     out = np.zeros((n, 32), dtype=np.uint8)
     out[:, :width] = bits
     return np.packbits(out, axis=1, bitorder="little").view("<u4").reshape(n)
@@ -173,9 +174,6 @@ def vint_decode(buf: bytes, n: int) -> np.ndarray:
 # posting-list encode / decode
 # ---------------------------------------------------------------------------
 
-BLOCK_META_FIELDS = ("last_doc", "n_docs", "bits_doc", "bits_tf", "wand_fieldnorm_id", "wand_tf")
-
-
 def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, fieldnorm_ids: np.ndarray,
                     tf_cache: np.ndarray | None = None):
     """Encode one term's posting list.
@@ -243,10 +241,17 @@ def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, fieldnorm_ids: np.ndar
     return b"".join(docs_parts), b"".join(tfs_parts), fns_bytes, meta
 
 
-def _block_nbytes(bits: int, n: int) -> int:
-    if bits == VINT_MARKER:
-        raise ValueError("vint block size not fixed")
-    return (n * bits + 7) // 8
+def block_offsets(n_docs, bits) -> np.ndarray:
+    """Byte offset of every block in its docs (or tfs) buffer, given each
+    block's posting count and bit width: a bitpacked block of ``n``
+    values at width ``w`` takes ``ceil(n * w / 8)`` bytes, and the VInt
+    tail (always the last block) starts after all of them."""
+    n = np.asarray(n_docs, dtype=np.int64)
+    b = np.asarray(bits, dtype=np.int64)
+    sizes = np.where(b == VINT_MARKER, 0, (n * b + 7) // 8)
+    out = np.zeros(len(n), dtype=np.int64)
+    out[1:] = np.cumsum(sizes)[:-1]
+    return out
 
 
 def decode_fns(fns_bytes: bytes) -> np.ndarray:
@@ -342,7 +347,9 @@ def _bitunpack_full_blocks(buf: bytes, widths: np.ndarray,
 
 
 def decode_postings(docs_bytes: bytes, tfs_bytes: bytes, meta) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a full posting list -> (doc_ids int64, tfs int64).
+    """Decode a full posting list -> (doc_ids int64, tfs int64); only the
+    first four fields (last_doc, n_docs, bits_doc, bits_tf) of each
+    ``meta`` tuple are read.
 
     All bitpacked FULL blocks decode in bulk (grouped by bit width — the
     former per-block loop dominated the exhaustive query path's decode
@@ -350,30 +357,29 @@ def decode_postings(docs_bytes: bytes, tfs_bytes: bytes, meta) -> tuple[np.ndarr
     Per-block doc bases come from the skip metadata's ``last_doc`` chain,
     so no sequential dependency survives.
     """
-    rows = [(int(l), int(n), int(bd), int(bt)) for l, n, bd, bt, _f, _t in meta]
+    rows = [(int(m[0]), int(m[1]), int(m[2]), int(m[3])) for m in meta]
     if not rows:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-    full = [(i, r) for i, r in enumerate(rows) if r[2] != VINT_MARKER]
+    full = [r for r in rows if r[2] != VINT_MARKER]
     # encode_postings emits bitpacked blocks of exactly BLOCK_LEN docs
     # followed by at most one VInt tail; fall back to the scalar path on
     # anything else (foreign layouts)
-    if any(r[1] != BLOCK_LEN for _i, r in full) or \
-            sum(1 for r in rows if r[2] == VINT_MARKER) > 1 or \
+    if any(r[1] != BLOCK_LEN for r in full) or \
+            len(rows) - len(full) > 1 or \
             (rows[-1][2] != VINT_MARKER and len(full) != len(rows)):
         return _decode_postings_scalar(docs_bytes, tfs_bytes, rows)
 
     n_full = len(full)
-    bd = np.array([r[2] for _i, r in full], dtype=np.int64)
-    bt = np.array([r[3] for _i, r in full], dtype=np.int64)
+    n_docs = [r[1] for r in rows]
+    d_off = block_offsets(n_docs, [r[2] for r in rows])
+    t_off = block_offsets(n_docs, [r[3] for r in rows])
     if n_full:
-        d_off = np.zeros(n_full, dtype=np.int64)
-        t_off = np.zeros(n_full, dtype=np.int64)
-        d_off[1:] = np.cumsum(BLOCK_LEN * bd // 8)[:-1]
-        t_off[1:] = np.cumsum(BLOCK_LEN * bt // 8)[:-1]
-        dm1 = _bitunpack_full_blocks(docs_bytes, bd, d_off)
-        tm1 = _bitunpack_full_blocks(tfs_bytes, bt, t_off)
+        bd = np.array([r[2] for r in full], dtype=np.int64)
+        bt = np.array([r[3] for r in full], dtype=np.int64)
+        dm1 = _bitunpack_full_blocks(docs_bytes, bd, d_off[:n_full])
+        tm1 = _bitunpack_full_blocks(tfs_bytes, bt, t_off[:n_full])
         # per-block doc base: previous block's last_doc (-1 for the first)
-        last = np.array([r[0] for _i, r in full], dtype=np.int64)
+        last = np.array([r[0] for r in full], dtype=np.int64)
         base = np.empty(n_full, dtype=np.int64)
         base[0] = -1
         base[1:] = last[:-1]
@@ -388,10 +394,8 @@ def decode_postings(docs_bytes: bytes, tfs_bytes: bytes, meta) -> tuple[np.ndarr
         tfs = np.zeros(0, dtype=np.int64)
     if rows[-1][2] == VINT_MARKER:  # tail
         n_tail = rows[-1][1]
-        d_end = int(BLOCK_LEN * bd.sum() // 8) if n_full else 0
-        t_end = int(BLOCK_LEN * bt.sum() // 8) if n_full else 0
-        dm1_t = vint_decode(docs_bytes[d_end:], n_tail)
-        tm1_t = vint_decode(tfs_bytes[t_end:], n_tail)
+        dm1_t = vint_decode(docs_bytes[int(d_off[-1]):], n_tail)
+        tm1_t = vint_decode(tfs_bytes[int(t_off[-1]):], n_tail)
         prev_last = int(last[-1]) if n_full else -1
         tail_docs = np.cumsum(dm1_t.astype(np.int64) + 1) + prev_last
         if int(tail_docs[-1]) != rows[-1][0]:
@@ -405,17 +409,15 @@ def decode_block(docs_bytes: bytes, tfs_bytes: bytes, d_off: int, t_off: int,
                  n: int, bits_doc: int, bits_tf: int,
                  prev_last: int) -> tuple[np.ndarray, np.ndarray]:
     """Decode ONE block of ``n`` postings whose doc/tf bytes start at
-    ``d_off``/``t_off`` -> (doc_ids int64, tfs int64); ``prev_last`` is
-    the previous block's last doc id (-1 for the first block).  A VInt
-    tail block reads to the end of the buffers."""
+    ``d_off``/``t_off`` (see :func:`block_offsets`) -> (doc_ids int64,
+    tfs int64); ``prev_last`` is the previous block's last doc id (-1 for
+    the first block).  A VInt tail block reads to the end of the
+    buffers."""
+    docs_buf, tfs_buf = memoryview(docs_bytes)[d_off:], memoryview(tfs_bytes)[t_off:]
     if bits_doc == VINT_MARKER:
-        dm1 = vint_decode(docs_bytes[d_off:], n)
-        tm1 = vint_decode(tfs_bytes[t_off:], n)
+        dm1, tm1 = vint_decode(docs_buf, n), vint_decode(tfs_buf, n)
     else:
-        dm1 = bitunpack(docs_bytes[d_off:d_off + _block_nbytes(bits_doc, n)],
-                        bits_doc, n)
-        tm1 = bitunpack(tfs_bytes[t_off:t_off + _block_nbytes(bits_tf, n)],
-                        bits_tf, n)
+        dm1, tm1 = bitunpack(docs_buf, bits_doc, n), bitunpack(tfs_buf, bits_tf, n)
     return np.cumsum(dm1.astype(np.int64) + 1) + prev_last, \
         tm1.astype(np.int64) + 1
 
@@ -424,17 +426,14 @@ def _decode_postings_scalar(docs_bytes: bytes, tfs_bytes: bytes, rows):
     """Reference per-block decode path (kept for foreign block layouts)."""
     doc_chunks = []
     tf_chunks = []
-    dpos = tpos = 0
+    n_docs = [r[1] for r in rows]
+    d_offs = block_offsets(n_docs, [r[2] for r in rows])
+    t_offs = block_offsets(n_docs, [r[3] for r in rows])
     prev_last = -1
-    for last_doc, n_docs, bits_doc, bits_tf in rows:
-        docs, tfs = decode_block(docs_bytes, tfs_bytes, dpos, tpos, n_docs,
-                                 bits_doc, bits_tf, prev_last)
-        if bits_doc == VINT_MARKER:
-            dpos = len(docs_bytes)
-            tpos = len(tfs_bytes)
-        else:
-            dpos += _block_nbytes(bits_doc, n_docs)
-            tpos += _block_nbytes(bits_tf, n_docs)
+    for (last_doc, n, bits_doc, bits_tf), d_off, t_off in zip(rows, d_offs,
+                                                              t_offs):
+        docs, tfs = decode_block(docs_bytes, tfs_bytes, int(d_off),
+                                 int(t_off), n, bits_doc, bits_tf, prev_last)
         prev_last = int(docs[-1])
         if prev_last != int(last_doc):
             raise AssertionError("decode: last_doc chain mismatch")

@@ -6,12 +6,22 @@ fixed association order so results are bit-reproducible across engines
 (the DuckDB oracle mirrors the same expression shapes).  The WAND kernel
 (wand.py) must return the same top-k.
 
-Boolean, disjunction-max and sloppy phrase queries lower one way — like
-the reference's one Weight per query walking each term's postings once
+Boolean and disjunction-max queries lower one way — like the
+reference's one Weight per query walking each term's postings once
 (boolean_weight.rs): ONE postings scan whose rows explode into the clause
 slots carrying their term, then ONE groupBy(segment_ord, doc_id) with a
 conditional aggregate per clause; occurs and scores are expressions over
 those per-clause columns.
+
+Positional queries lower one way too (``ExactSearcher._positional``): a
+list of clauses, each a list of slots, each slot a term set plus a
+position shift.  ONE positions scan's rows explode into every slot whose
+term set holds their term; a groupBy(clause, doc, shifted position)
+counts the slots present (slop=0), or the per-slot positions feed the
+sloppy kernels (slop>0).  A PhraseQuery is one clause of single-term
+slots, a RegexPhraseQuery one clause whose slots are the pattern
+expansions, and a PhrasePrefixQuery one clause per expansion, a doc
+scoring by its best clause.
 
 Scale notes: the only data that moves is the posting rows of the query's
 terms (parquet IN-filter pushdown on ``term``); scoring is whole-stage
@@ -23,6 +33,7 @@ TopNComputer + merge_fruits, src/collector/top_score_collector.rs).
 from __future__ import annotations
 
 import math
+import re
 from functools import reduce
 
 import numpy as np
@@ -45,35 +56,16 @@ def idf64(doc_freq: int, total_docs: int) -> float:
     return math.log(1.0 + (total_docs - doc_freq + 0.5) / (doc_freq + 0.5))
 
 
-def _damerau_levenshtein(a: str, b: str) -> int:
-    """Restricted Damerau-Levenshtein (adjacent transposition cost 1) —
-    the reference's Levenshtein_distance(d, true) semantics
-    (fuzzy_query.rs:85-93).  Runs on tiny collected candidate sets only."""
-    la, lb = len(a), len(b)
-    prev2 = None
-    prev = list(range(lb + 1))
-    for i in range(1, la + 1):
-        cur = [i] + [0] * lb
-        for j in range(1, lb + 1):
-            cost = 0 if a[i - 1] == b[j - 1] else 1
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + cost)
-            if (i > 1 and j > 1 and a[i - 1] == b[j - 2]
-                    and a[i - 2] == b[j - 1]):
-                cur[j] = min(cur[j], prev2[j - 2] + 1)
-        prev2, prev = prev, cur
-    return prev[lb]
-
-
-def _prefix_edit_distance(t: str, q: str, transpositions: bool) -> int:
-    """min over prefixes p of ``t`` of edit(q, p) — the reference's
-    prefix DFA semantics (fuzzy_query.rs new_prefix / build_prefix_dfa):
-    'jap' matches 'japan' at prefix distance 0.  ``transpositions``
-    selects restricted Damerau-Levenshtein."""
+def _edit_distance_row(q: str, t: str, transpositions: bool) -> list[int]:
+    """Last row of the edit-distance DP of ``q`` against ``t``: cell j is
+    edit(q, t[:j]); ``transpositions`` selects restricted
+    Damerau-Levenshtein (fuzzy_query.rs:85-93).  The last cell is the
+    (symmetric) full distance, the minimum the prefix distance of the
+    reference's prefix DFA (build_prefix_dfa: 'jap' matches 'japan' at
+    0).  Runs on tiny candidate sets only."""
     lq, lt = len(q), len(t)
     prev2 = None
     prev = list(range(lt + 1))      # edit(q[:0], t[:j]) = j
-    if lq == 0:
-        return 0
     for i in range(1, lq + 1):
         cur = [i] + [0] * lt
         for j in range(1, lt + 1):
@@ -83,7 +75,26 @@ def _prefix_edit_distance(t: str, q: str, transpositions: bool) -> int:
                     and q[i - 1] == t[j - 2] and q[i - 2] == t[j - 1]):
                 cur[j] = min(cur[j], prev2[j - 2] + 1)
         prev2, prev = prev, cur
-    return min(prev)                # best prefix of t
+    return prev
+
+
+def _term_regex(pattern: str):
+    """Filter column: ``term`` fully matches ``pattern``.  An invalid
+    pattern fails loudly at plan time (regex_query.rs test_pattern_error),
+    not as an executor-side Java stack trace mid-scan."""
+    try:
+        re.compile(pattern)
+    except re.error as e:
+        raise ValueError(f"invalid regex pattern {pattern!r}: {e}") from e
+    return F.col("term").rlike(f"^(?:{pattern})$")
+
+
+def _phrase_slots(term_sets: list[list[str]], offsets=None) -> list:
+    """A phrase's positional slots: term set i at phrase offset
+    ``offsets[i]`` (default i) shifts its positions by ``max_off - off``,
+    so every slot of one occurrence lands on the same position."""
+    offs = list(range(len(term_sets))) if offsets is None else list(offsets)
+    return [(ts, max(offs) - off) for ts, off in zip(term_sets, offs)]
 
 
 def fastfield_filter(df: DataFrame, q: "ast.FastFieldRangeQuery") -> DataFrame:
@@ -162,7 +173,15 @@ def _rewrite_fastfield_terms(q: "ast.Query", reader, scoring: bool) -> "ast.Quer
     return walk(q, scoring)
 
 
-def _decode_kernel(with_positions: bool):
+#: the postings columns ``build.decode_chunk`` reads (no WAND block-max)
+DECODE_COLS = ["term", "segment_ord", "docs", "tfs", "fns", "last_docs",
+               "n_docs", "bits_doc", "bits_tf"]
+
+
+def decode_rows(rows: DataFrame, with_positions: bool = False) -> DataFrame:
+    """Posting rows -> one row per posting (``FLAT_SCHEMA``) or, with
+    positions, per occurrence (``FLAT_POS_SCHEMA``): one Arrow decode
+    kernel over only the columns it decodes, so the scan reads no more."""
     def decode(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -196,7 +215,9 @@ def _decode_kernel(with_positions: bool):
                 out["pos"] = flat_pos
             yield pd.DataFrame(out)
 
-    return decode
+    cols = DECODE_COLS + (["pos"] if with_positions else [])
+    schema = FLAT_POS_SCHEMA if with_positions else FLAT_SCHEMA
+    return rows.select(*cols).mapInPandas(decode, schema=schema)
 
 
 HIT_COLS = ["segment_ord", "doc_id", "score", "key"]
@@ -256,11 +277,8 @@ class ExactSearcher:
                 f"{self.reader.index_dir!r} was built with "
                 "with_positions=False, so phrase / positional queries "
                 "cannot run against it")
-        rows = self.reader.postings_for_terms(terms)
-        if not with_positions:
-            rows = rows.drop("pos")
-            return rows.mapInPandas(_decode_kernel(False), schema=FLAT_SCHEMA)
-        return rows.mapInPandas(_decode_kernel(True), schema=FLAT_POS_SCHEMA)
+        return decode_rows(self.reader.postings_for_terms(terms),
+                           with_positions)
 
     # -------------------------------------------------------------- scoring
     def _score_col(self, weight, kb):
@@ -375,28 +393,52 @@ class ExactSearcher:
                     .select("segment_ord", "doc_id").distinct()
                     .select("segment_ord", "doc_id", F.lit(1.0 * boost).alias("score")))
         if isinstance(q, ast.PhraseQuery):
-            return self._phrase(q, boost, dfs)
+            _, hits = self._positional(
+                [_phrase_slots([[t] for t in q.phrase_terms], q.offsets)],
+                q.slop)
+            idf_sum = sum(idf64(dfs.get(t, 0), self.N) for t in q.phrase_terms)
+            return self._phrase_scores(hits, [idf_sum], [q.phrase_terms[0]],
+                                       boost).drop("clause")
         if isinstance(q, ast.PhrasePrefixQuery):
             # expansion order is the term-dictionary (lexicographic) order,
             # like the reference's prefix range scan taking the first
-            # max_expansions terms (phrase_prefix_query.rs:29,123) — an
-            # orderBy BEFORE the limit makes the chosen set deterministic
-            # at any parallelism (a bare .limit() is partition-order luck)
-            expansions = [
-                r["term"] for r in self.reader.term_stats
-                .filter(F.col("term").startswith(q.prefix))
-                .select("term").orderBy("term")
-                .limit(q.max_expansions).collect()]
+            # max_expansions terms (phrase_prefix_query.rs:29,123)
+            expansions = self._dictionary_terms(
+                [F.col("term").startswith(q.prefix)], q.max_expansions)
             if not expansions:
                 return self._lower(ast.EmptyQuery(), boost, dfs)
-            # one phrase per expansion; a doc scores via its best expansion
-            # (max), mirroring "any expansion matches at the last slot"
-            subs = [ast.PhraseQuery(q.phrase_terms + [e]) for e in expansions]
-            return self._lower(ast.DisjunctionMaxQuery(subs, tie_breaker=0.0),
-                               boost, self.reader.doc_freqs(
-                                   q.phrase_terms + expansions))
+            # one phrase clause per expansion, all in one scan; a doc
+            # scores via its best expansion (max), mirroring "any
+            # expansion matches at the last slot"
+            phrases = [q.phrase_terms + [e] for e in expansions]
+            dfs = self.reader.doc_freqs(q.phrase_terms + expansions)
+            _, hits = self._positional(
+                [_phrase_slots([[t] for t in p]) for p in phrases])
+            scores = self._phrase_scores(
+                hits, [sum(idf64(dfs.get(t, 0), self.N) for t in p)
+                       for p in phrases], [p[0] for p in phrases])
+            return scores.groupBy("segment_ord", "doc_id").agg(
+                (F.max("score") * F.lit(boost)).alias("score"))
         if isinstance(q, ast.RegexPhraseQuery):
-            return self._regex_phrase(q, boost)
+            # each slot is its pattern's expansion; a phrase start is an
+            # aligned position where every slot has a matching term
+            slot_terms = []
+            for pat in q.patterns:
+                slot_terms.append(self._expand_regex(pat, q.max_expansions))
+                if not slot_terms[-1]:
+                    return self._lower(ast.EmptyQuery(), boost, dfs)
+            tagged, hits = self._positional([_phrase_slots(slot_terms)])
+            # per-slot doc freq = docs containing any of the slot's terms
+            # (the summed-idf weight, bm25.rs:120-128): ONE grouped job
+            # over the tagged occurrences
+            df_rows = (tagged.select("slot", "segment_ord", "doc_id")
+                       .distinct().groupBy("slot")
+                       .agg(F.count("*").alias("df")).collect())
+            slot_dfs = {int(r["slot"]): int(r["df"]) for r in df_rows}
+            idf_sum = sum(idf64(slot_dfs.get(i, 0), self.N)
+                          for i in range(len(slot_terms)))
+            return self._phrase_scores(hits, [idf_sum], [slot_terms[0][0]],
+                                       boost).drop("clause")
         if isinstance(q, ast.MoreLikeThisQuery):
             sel = self.select_mlt_terms(
                 q.doc_text, q.max_query_terms, q.min_term_freq,
@@ -503,22 +545,11 @@ class ExactSearcher:
                     .select("segment_ord", "doc_id",
                             F.lit(1.0 * boost).alias("score")))
         if isinstance(q, ast.RegexQuery):
-            # invalid patterns fail LOUDLY at plan time with the pattern
-            # in the message (regex_query.rs test_pattern_error pins
-            # InvalidArgument at construction), not as an executor-side
-            # Java stack trace mid-scan
-            import re as _re
-            try:
-                _re.compile(q.pattern)
-            except _re.error as e:
-                raise ValueError(
-                    f"invalid regex pattern {q.pattern!r}: {e}") from e
             # distributed: the regex runs as a codegen'd filter on the
             # postings scan — no driver-side expansion, no cap (the
             # reference intersects a regex automaton with the FST, also
             # never materializing the match set — regex_query.rs)
-            return self._const_docs_matching(
-                F.col("term").rlike(f"^(?:{q.pattern})$"), boost)
+            return self._const_docs_matching(_term_regex(q.pattern), boost)
         if isinstance(q, ast.FuzzyTermQuery):
             terms = self._expand_fuzzy(
                 q.term, q.distance, q.prefix,
@@ -565,82 +596,94 @@ class ExactSearcher:
         score = reduce(lambda a, b: a + b, score_cols) * F.lit(boost)
         return g.filter(cond).select("segment_ord", "doc_id", score.alias("score"))
 
-    def _phrase(self, q: ast.PhraseQuery, boost: float, dfs: dict[str, int]) -> DataFrame:
-        """ONE postings scan: each posting row explodes into the phrase
-        slots carrying its term, position shifted by ``max_off - off``.
-        slop=0: shifted positions agree across all slots exactly at
-        occurrences (phrase_scorer.rs:364-383).  slop>0: ONE groupBy per
+    def _positional(self, clauses: list[list[tuple[list[str], int]]],
+                    slop: int = 0) -> tuple[DataFrame, DataFrame]:
+        """Every positional query's one lowering: the ``(clause, slot,
+        terms, shift)`` structs of all clauses (:func:`_phrase_slots`) tag
+        the rows of ONE positions scan.  Returns the tagged occurrences
+        (clause, slot, segment_ord, doc_id, fieldnorm_id, apos) and the
+        (clause, segment_ord, doc_id, fieldnorm_id, tf) of every doc
+        matching a clause.  slop=0: within one field a position holds one
+        token, so an apos counting all the clause's slots is an occurrence
+        (phrase_scorer.rs:364-383).  slop>0 (one clause): ONE groupBy per
         doc collects each slot's sorted positions, docs missing a slot
         drop out, and an Arrow-batched kernel runs the carrying-slop
         algorithm (phrase_scorer.rs:437-507, mirrored in sloppy.py)."""
-        terms = q.phrase_terms
-        offsets = list(q.offsets) if q.offsets is not None else list(range(len(terms)))
-        max_off = max(offsets)
-        flat = self.flat_postings(terms, with_positions=True)
-        slots = F.array(*[
-            F.struct(F.lit(i).alias("i"), F.lit(t).alias("t"),
-                     F.lit(max_off - off).alias("shift"))
-            for i, (t, off) in enumerate(zip(terms, offsets))])
-        allp = (flat.select(
+        structs = [
+            F.struct(F.lit(c).alias("clause"), F.lit(i).alias("slot"),
+                     F.array(*map(F.lit, terms)).alias("terms"),
+                     F.lit(shift).alias("shift"))
+            for c, slots in enumerate(clauses)
+            for i, (terms, shift) in enumerate(slots)]
+        flat = self.flat_postings(
+            sorted({t for slots in clauses for ts, _ in slots for t in ts}),
+            with_positions=True)
+        tagged = (flat.select(
             "segment_ord", "doc_id", "fieldnorm_id", "pos",
-            F.explode(F.filter(slots, lambda s: s["t"] == F.col("term")))
-            .alias("__slot"))
-            .select("segment_ord", "doc_id", "fieldnorm_id",
-                    F.col("__slot.i").alias("slot"),
+            F.explode(F.filter(F.array(*structs), lambda s: F.array_contains(
+                s["terms"], F.col("term")))).alias("__slot"))
+            .select(F.col("__slot.clause").alias("clause"),
+                    F.col("__slot.slot").alias("slot"),
+                    "segment_ord", "doc_id", "fieldnorm_id",
                     (F.col("pos") + F.col("__slot.shift")).alias("apos")))
-        if q.slop != 0:
-            pos_cols = [f"pos{i}" for i in range(len(terms))]
-            cur = (allp.groupBy("segment_ord", "doc_id", "fieldnorm_id")
-                   .agg(*[F.sort_array(F.collect_list(
-                       F.when(F.col("slot") == i, F.col("apos")))).alias(c)
-                       for i, c in enumerate(pos_cols)])
-                   .filter(reduce(lambda a, b: a & b,
-                                  [F.size(c) > 0 for c in pos_cols])))
-            slop = int(q.slop)
-            from pyspark.sql.functions import pandas_udf
+        doc = ["clause", "segment_ord", "doc_id", "fieldnorm_id"]
+        if slop == 0:
+            n_slots = F.element_at(
+                F.array(*[F.lit(len(slots)) for slots in clauses]),
+                F.col("clause") + 1)
+            hits = (tagged.groupBy(*doc, "apos")
+                    .agg(F.count(F.lit(1)).alias("nmatch"))
+                    .filter(F.col("nmatch") == n_slots)
+                    .groupBy(*doc).agg(F.count("*").alias("tf")))
+            return tagged, hits
+        pos_cols = [f"pos{i}" for i in range(len(clauses[0]))]
+        cur = (tagged.groupBy(*doc)
+               .agg(*[F.sort_array(F.collect_list(
+                   F.when(F.col("slot") == i, F.col("apos")))).alias(c)
+                   for i, c in enumerate(pos_cols)])
+               .filter(reduce(lambda a, b: a & b,
+                              [F.size(c) > 0 for c in pos_cols])))
+        slop = int(slop)
+        from pyspark.sql.functions import pandas_udf
 
-            if len(terms) == 2:
-                # hot shape: doc-PARALLEL numpy automaton — one
-                # vectorized step advances every candidate doc's
-                # two-pointer state at once (sloppy.py
-                # sloppy_count_two_batch; equivalence property-tested)
-                @pandas_udf("integer")
-                def sloppy_tf(p0: pd.Series, p1: pd.Series) -> pd.Series:
-                    from tantivy_spark.query.sloppy import (
-                        sloppy_count_two_batch)
-                    return pd.Series(
-                        sloppy_count_two_batch(p0, p1, slop),
-                        dtype="int32")
-            else:
-                # n>2: the carrying-slop automaton, equally doc-PARALLEL
-                # (sloppy.py sloppy_phrase_count_batch chains
-                # sloppy_carrying_batch stages; equivalence with the
-                # per-doc reference kernel is property-tested)
-                @pandas_udf("integer")
-                def sloppy_tf(*pos_cols: pd.Series) -> pd.Series:
-                    from tantivy_spark.query.sloppy import (
-                        sloppy_phrase_count_batch)
-                    return pd.Series(
-                        sloppy_phrase_count_batch(list(pos_cols), slop),
-                        dtype="int32")
-
-            hits = (cur.withColumn("tf", sloppy_tf(*[F.col(c) for c in pos_cols]))
-                    .filter(F.col("tf") > 0)
-                    .select("segment_ord", "doc_id", "fieldnorm_id", "tf"))
+        if len(pos_cols) == 2:
+            # hot shape: doc-PARALLEL numpy automaton — one vectorized
+            # step advances every candidate doc's two-pointer state at
+            # once (sloppy.py sloppy_count_two_batch; equivalence
+            # property-tested)
+            @pandas_udf("integer")
+            def sloppy_tf(p0: pd.Series, p1: pd.Series) -> pd.Series:
+                from tantivy_spark.query.sloppy import sloppy_count_two_batch
+                return pd.Series(sloppy_count_two_batch(p0, p1, slop),
+                                 dtype="int32")
         else:
-            # a slot's positions are distinct within a doc, so
-            # count(*) == countDistinct(slot) here
-            hits = (
-                allp.groupBy("segment_ord", "doc_id", "fieldnorm_id", "apos")
-                .agg(F.count(F.lit(1)).alias("nmatch"))
-                .filter(F.col("nmatch") == len(terms))
-                .groupBy("segment_ord", "doc_id", "fieldnorm_id")
-                .agg(F.count("*").alias("tf"))
-            )
-        idf_sum = sum(idf64(dfs.get(t, 0), self.N) for t in terms)
-        w = idf_sum * (1.0 + K1) * boost
-        kb = K1 * B / self.reader.avg_fieldnorm_for_term(terms[0])
-        return hits.select("segment_ord", "doc_id",
+            # n>2: the carrying-slop automaton, equally doc-PARALLEL
+            # (sloppy.py sloppy_phrase_count_batch chains
+            # sloppy_carrying_batch stages; equivalence with the per-doc
+            # reference kernel is property-tested)
+            @pandas_udf("integer")
+            def sloppy_tf(*pos_cols: pd.Series) -> pd.Series:
+                from tantivy_spark.query.sloppy import (
+                    sloppy_phrase_count_batch)
+                return pd.Series(
+                    sloppy_phrase_count_batch(list(pos_cols), slop),
+                    dtype="int32")
+
+        hits = (cur.withColumn("tf", sloppy_tf(*[F.col(c) for c in pos_cols]))
+                .filter(F.col("tf") > 0).select(*doc, "tf"))
+        return tagged, hits
+
+    def _phrase_scores(self, hits: DataFrame, idf_sums: list[float],
+                       first_terms: list[str],
+                       boost: float = 1.0) -> DataFrame:
+        """(clause, segment_ord, doc_id, score): clause c of ``hits``
+        scores as one phrase — weight ``idf_sums[c]`` * (1+K1) * boost,
+        the K1*B/avg of its first term (bm25.rs:120-128)."""
+        w, kb = [F.element_at(F.array(*map(F.lit, v)), F.col("clause") + 1)
+                 for v in ([s * (1.0 + K1) * boost for s in idf_sums],
+                           [K1 * B / self.reader.avg_fieldnorm_for_term(t)
+                            for t in first_terms])]
+        return hits.select("clause", "segment_ord", "doc_id",
                            self._score_col(w, kb).alias("score"))
 
     def select_mlt_terms(self, doc_text: str, max_terms: int = 10,
@@ -682,49 +725,6 @@ class ExactSearcher:
         scored.sort(key=lambda x: (-x[1], x[0]))
         return [t for t, _ in scored[:max_terms]]
 
-    def _regex_phrase(self, q: ast.RegexPhraseQuery, boost: float) -> DataFrame:
-        """Each slot expands against the term dictionary; a phrase start is
-        an aligned position where every slot has some matching term."""
-        slot_terms: list[list[str]] = []
-        for pat in q.patterns:
-            terms = self._expand_regex(pat, cap=q.max_expansions)
-            if not terms:
-                return self._lower(ast.EmptyQuery(), boost, {})
-            slot_terms.append(terms)
-        # one scan: posting rows explode into the slots whose expansion
-        # holds their term (distinct: two slot-terms may share a position)
-        slots = F.array(*[F.struct(F.lit(i).alias("slot"),
-                                   F.array(*map(F.lit, ts)).alias("ts"))
-                          for i, ts in enumerate(slot_terms)])
-        allp = (self.flat_postings(sorted({t for ts in slot_terms for t in ts}),
-                                   with_positions=True)
-                .select("segment_ord", "doc_id", "fieldnorm_id", "pos", F.explode(
-                    F.filter(slots, lambda s: F.array_contains(s["ts"], F.col("term"))))
-                    .alias("__slot"))
-                .select("segment_ord", "doc_id", "fieldnorm_id", "__slot.slot",
-                        (F.col("pos") - F.col("__slot.slot")).alias("apos"))
-                .distinct())
-        hits = (
-            allp.groupBy("segment_ord", "doc_id", "fieldnorm_id", "apos")
-            .agg(F.countDistinct("slot").alias("nmatch"))
-            .filter(F.col("nmatch") == len(slot_terms))
-            .groupBy("segment_ord", "doc_id", "fieldnorm_id")
-            .agg(F.count("*").alias("tf"))
-        )
-        # per-slot doc freq = docs containing any of the slot's terms; the
-        # summed-idf multi-term weight, like PhraseQuery (bm25.rs:120-128).
-        # ONE grouped job over the already-built slot frame instead of a
-        # serial count() per slot.
-        df_rows = (allp.select("slot", "segment_ord", "doc_id").distinct()
-                   .groupBy("slot").agg(F.count("*").alias("df")).collect())
-        slot_dfs = {int(r["slot"]): int(r["df"]) for r in df_rows}
-        idf_sum = sum(idf64(slot_dfs.get(i, 0), self.N)
-                      for i in range(len(slot_terms)))
-        w = idf_sum * (1.0 + K1) * boost
-        kb = K1 * B / self.reader.avg_fieldnorm_for_term(slot_terms[0][0])
-        return hits.select("segment_ord", "doc_id",
-                           self._score_col(w, kb).alias("score"))
-
     # ----------------------------------------------- distributed term match
     def _const_docs_matching(self, term_cond, boost: float) -> DataFrame:
         """(segment_ord, doc_id, const score) of docs containing ANY
@@ -739,31 +739,32 @@ class ExactSearcher:
         otherwise fall into open-lower ranges)."""
         from tantivy_spark.index.build import FIELDNORM_SENTINEL
 
-        rows = (self.reader.postings
-                .filter(~F.col("term").startswith(FIELDNORM_SENTINEL)
-                        & term_cond)
-                .drop("pos"))
-        flat = rows.mapInPandas(_decode_kernel(False), schema=FLAT_SCHEMA)
+        flat = decode_rows(self.reader.postings.filter(
+            ~F.col("term").startswith(FIELDNORM_SENTINEL) & term_cond))
         return (flat.select("segment_ord", "doc_id").distinct()
                 .select("segment_ord", "doc_id",
                         F.lit(1.0 * boost).alias("score")))
 
     # ------------------------------------------------------- dict expansion
+    def _dictionary_terms(self, conds: list, limit: int) -> list[str]:
+        """The first ``limit`` distinct dictionary terms passing the
+        filters ``conds``, in lexicographic order at any parallelism.  One
+        sorted take: a streaming-built index has one ``term_stats`` row
+        per published batch and term, so the first ``limit`` x batches
+        rows hold the first ``limit`` distinct terms."""
+        per_term = max(1, len(self.reader.manifest.get("batches") or ()))
+        base = self.reader.term_stats
+        for cond in conds:
+            base = base.filter(cond)
+        rows = base.select("term").orderBy("term") \
+            .limit(limit * per_term).collect()
+        return list(dict.fromkeys(r["term"] for r in rows))[:limit]
+
     def _expand_regex(self, pattern: str, cap: int = 1024) -> list[str]:
-        """First ``cap`` dictionary terms matching ``pattern``, in
-        term-dictionary (lexicographic) order — deterministic at any
-        parallelism.  Used where per-term statistics are needed driver-side
-        (RegexPhraseQuery slots); RegexQuery itself stays distributed."""
-        import re as _re
-        try:
-            _re.compile(pattern)
-        except _re.error as e:  # loud plan-time parity, regex_query.rs:186
-            raise ValueError(
-                f"invalid regex pattern {pattern!r}: {e}") from e
-        rows = (self.reader.term_stats
-                .filter(F.col("term").rlike(f"^(?:{pattern})$"))
-                .select("term").orderBy("term").limit(cap).collect())
-        return [r["term"] for r in rows]
+        """First ``cap`` dictionary terms matching ``pattern``.  Used where
+        per-term statistics are needed driver-side (RegexPhraseQuery
+        slots); RegexQuery itself stays distributed."""
+        return self._dictionary_terms([_term_regex(pattern)], cap)
 
     def _expand_fuzzy(self, term: str, distance: int, prefix: bool,
                       cap: int = 1024, transposition_cost_one: bool = False
@@ -792,12 +793,12 @@ class ExactSearcher:
             raise ValueError(
                 f"Levenshtein distance of {distance} is not allowed. "
                 f"Choose a value less than 3")
-        base = self.reader.term_stats
+        conds = []
         if FIELD_SEP in term:
             # field-qualified term: candidates must stay inside the field
             # (short field names could otherwise be within edit distance)
-            base = base.filter(
-                F.col("term").startswith(term.split(FIELD_SEP, 1)[0] + FIELD_SEP))
+            conds.append(F.col("term").startswith(
+                term.split(FIELD_SEP, 1)[0] + FIELD_SEP))
         rest = term.split(FIELD_SEP, 1)[1] if FIELD_SEP in term else term
         if "=" in rest and not rest.startswith("="):
             # json-path fuzzy term ({path}={value} dictionary shape): the
@@ -810,7 +811,22 @@ class ExactSearcher:
             # is invariant under a shared prefix.
             path = rest.partition("=")[0]
             qual = term[: len(term) - len(rest)]
-            base = base.filter(F.col("term").startswith(f"{qual}{path}="))
+            conds.append(F.col("term").startswith(f"{qual}{path}="))
+        from pyspark.sql.functions import pandas_udf
+
+        qterm, dmax = term, int(distance)
+        trans = bool(transposition_cost_one)
+
+        @pandas_udf("boolean")
+        def _within(terms_s: pd.Series) -> pd.Series:
+            from tantivy_spark.query.exact import _edit_distance_row
+            if prefix:
+                cut = len(qterm) + dmax
+                return terms_s.map(lambda t: min(_edit_distance_row(
+                    qterm, t[:cut], trans)) <= dmax)
+            return terms_s.map(
+                lambda t: _edit_distance_row(qterm, t, True)[-1] <= dmax)
+
         if prefix:
             # reference new_prefix semantics (build_prefix_dfa): a
             # dictionary term matches if SOME PREFIX of it is within
@@ -821,45 +837,19 @@ class ExactSearcher:
             # lev(q, t[:len(q)+d]) <= 3d holds for every true match, so
             # that codegen'd filter is a cheap superset; the exact
             # prefix-(Damerau-)Levenshtein check runs DISTRIBUTED.
-            from pyspark.sql.functions import pandas_udf
-
-            qterm, dmax = term, int(distance)
-            trans = bool(transposition_cost_one)
-            base = base.filter(
-                (F.length("term") >= len(term) - distance)
-                & (F.levenshtein(
-                    F.substring(F.col("term"), 1, len(term) + distance),
-                    F.lit(term)) <= 3 * distance))
-
-            @pandas_udf("boolean")
-            def _ped_ok(terms_s: pd.Series) -> pd.Series:
-                from tantivy_spark.query.exact import _prefix_edit_distance
-                cut = len(qterm) + dmax
-                return terms_s.map(
-                    lambda t: _prefix_edit_distance(t[:cut], qterm,
-                                                    trans) <= dmax)
-
-            base = base.filter(_ped_ok(F.col("term")))
+            conds += [(F.length("term") >= len(term) - distance)
+                      & (F.levenshtein(
+                          F.substring(F.col("term"), 1, len(term) + distance),
+                          F.lit(term)) <= 3 * distance),
+                      _within(F.col("term"))]
         else:
             coarse = 2 * distance if transposition_cost_one else distance
-            base = base.filter(
-                (F.length("term") >= len(term) - distance)
-                & (F.length("term") <= len(term) + distance)
-                & (F.levenshtein(F.col("term"), F.lit(term)) <= coarse))
+            conds.append((F.length("term") >= len(term) - distance)
+                         & (F.length("term") <= len(term) + distance)
+                         & (F.levenshtein(F.col("term"), F.lit(term)) <= coarse))
             if transposition_cost_one:
-                from pyspark.sql.functions import pandas_udf
-
-                qterm, dmax = term, int(distance)
-
-                @pandas_udf("boolean")
-                def _dl_ok(terms_s: pd.Series) -> pd.Series:
-                    from tantivy_spark.query.exact import _damerau_levenshtein
-                    return terms_s.map(
-                        lambda t: _damerau_levenshtein(t, qterm) <= dmax)
-
-                base = base.filter(_dl_ok(F.col("term")))
-        rows = base.select("term").orderBy("term").limit(cap + 1).collect()
-        out = [r["term"] for r in rows]
+                conds.append(_within(F.col("term")))
+        out = self._dictionary_terms(conds, cap + 1)
         if len(out) > cap:
             raise ValueError(
                 f"fuzzy expansion of {term!r} (d<={distance}) exceeds {cap} "

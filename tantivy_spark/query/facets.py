@@ -93,9 +93,8 @@ def facet_counts_df(searcher, q, collector: FacetCollector):
                  & F.col("term").rlike(f"^(?:{alts})$"))
 
     # decode (term, doc) pairs for the child terms only
-    from tantivy_spark.query.exact import FLAT_SCHEMA, _decode_kernel
-    rows = reader.postings.filter(term_cond).drop("pos")
-    flat = rows.mapInPandas(_decode_kernel(False), schema=FLAT_SCHEMA)
+    from tantivy_spark.query.exact import decode_rows
+    flat = decode_rows(reader.postings.filter(term_cond))
 
     matched = searcher.matching(q, scoring=False) \
         if not isinstance(q, ast.AllQuery) else None

@@ -89,22 +89,15 @@ class _TermBlocks:
             starts = np.empty(nb, dtype=np.int64)
             starts[0] = 0
             starts[1:] = last[:-1] + 1
-            vint = bd == codec.VINT_MARKER
-            d_sizes = np.where(vint, 0, (nd * bd + 7) // 8)
-            t_sizes = np.where(vint, 0, (nd * bt + 7) // 8)
-            d_off = np.zeros(nb, dtype=np.int64)
-            t_off = np.zeros(nb, dtype=np.int64)
             f_off = np.zeros(nb, dtype=np.int64)
-            d_off[1:] = np.cumsum(d_sizes)[:-1]
-            t_off[1:] = np.cumsum(t_sizes)[:-1]
             f_off[1:] = np.cumsum(nd)[:-1]
             parts["starts"].append(starts)
             parts["ends"].append(last)
             parts["n_docs"].append(nd)
             parts["bits_d"].append(bd)
             parts["bits_t"].append(bt)
-            parts["d_off"].append(d_off)
-            parts["t_off"].append(t_off)
+            parts["d_off"].append(codec.block_offsets(nd, bd))
+            parts["t_off"].append(codec.block_offsets(nd, bt))
             parts["f_off"].append(f_off)
             parts["wand_fn"].append(np.asarray(row.wand_fn, dtype=np.int64))
             parts["wand_tf"].append(np.asarray(row.wand_tf, dtype=np.int64))

@@ -36,6 +36,9 @@ def test_postings_roundtrip(n, seed):
     assert np.array_equal(d2, docs)
     assert np.array_equal(t2, tfs)
     assert np.array_equal(codec.decode_fns(fb), fns)
+    # the decode reads only (last_doc, n_docs, bits_doc, bits_tf)
+    d4, t4 = codec.decode_postings(db, tb, [m[:4] for m in meta])
+    assert np.array_equal(d4, docs) and np.array_equal(t4, tfs)
     # blocks: full blocks bitpacked, tail vint
     assert sum(m[1] for m in meta) == n
     assert all(m[1] == 128 for m in meta[:-1])

@@ -134,3 +134,14 @@ def test_only_the_row_helpers_use_the_postings_coders():
                 if owner not in allowed]
     assert not bad, f"chunk-row format decoded/encoded outside the " \
         f"row helpers: {bad}"
+
+
+def test_only_the_codec_knows_the_block_layout():
+    """The VInt tail marker — and with it each block's byte offset — is
+    known only in ``index/codec.py``; WAND and the decoders ask
+    ``codec.block_offsets`` and ``codec.decode_block``."""
+    bad = [rel for rel, path in ((str(p.relative_to(PKG)), p)
+                                 for p in sorted(PKG.rglob("*.py")))
+           if rel != "index/codec.py"
+           and "VINT_MARKER" in _names_used(ast.parse(path.read_text()))]
+    assert not bad, f"VINT_MARKER named outside the codec: {bad}"

@@ -208,8 +208,11 @@ def test_regex_phrase_query(tiny_index, tiny_golden):
     s = ExactSearcher(tiny_index)
     literal = s.search(PhraseQuery(["order", "sort"]), k=8).collect()
     as_regex = s.search(RegexPhraseQuery(["order", "sort"]), k=8).collect()
-    assert [(r["segment_ord"], r["doc_id"]) for r in literal] == \
-        [(r["segment_ord"], r["doc_id"]) for r in as_regex]
+    # literal patterns: the same hits with bit-identical scores
+    assert [(r["segment_ord"], r["doc_id"], r["score"]) for r in literal] == \
+        [(r["segment_ord"], r["doc_id"], r["score"]) for r in as_regex]
+    assert sorted(s.matching(PhraseQuery(["order", "sort"])).collect()) == \
+        sorted(s.matching(RegexPhraseQuery(["order", "sort"])).collect())
     # widening the last slot can only grow the matched doc set
     widened = s.matching(RegexPhraseQuery(["order", "so.*"])).count()
     assert widened >= s.matching(PhraseQuery(["order", "sort"])).count()

@@ -13,7 +13,9 @@
 - query statistics (doc_freq) are read on the driver without a Spark
   job, so a term top-k runs 2 jobs and a WAND or exact boolean query 3
   (``count_jobs`` pins these counts, and the job budget of a build and
-  a merge; ``count_py4j_calls`` pins a light query's driver round-trips).
+  a merge; ``count_py4j_calls`` pins a light query's driver round-trips);
+- every positional query is one positions scan and one decode, however
+  many clauses a phrase prefix expands to.
 """
 
 import itertools
@@ -91,6 +93,9 @@ def test_term_filter_pushed_to_parquet(searcher):
     plan = _plan(searcher.flat_postings(["data", "fast"]))
     assert "PushedFilters: [In(term" in plan
     assert "pos" not in plan.split("ReadSchema")[1][:400]
+    # the decode never reads the WAND block-max arrays
+    read_schema = plan.split("ReadSchema: ")[1].split("\n")[0]
+    assert "wand_fn" not in read_schema and "wand_tf" not in read_schema
 
 
 def test_positions_read_only_when_needed(searcher):
@@ -380,3 +385,42 @@ def test_build_and_merge_job_counts(spark, tiny_pages, tmp_path_factory):
         spark, tiny_pages, built, cfg, resume=False)) == 12
     assert count_jobs(spark, lambda: merge_segments(
         spark, built, merged, n_target_segments=2)) <= 20
+
+
+# ---- positional lowering: phrase, phrase-prefix and regex-phrase queries
+# share ONE tagged positions scan, so a phrase-prefix plan does not grow
+# with its expansions.
+
+def _positional_shapes():
+    from tantivy_spark.query.ast import (PhrasePrefixQuery, PhraseQuery,
+                                         RegexPhraseQuery)
+
+    return {
+        "phrase": PhraseQuery(["order", "sort"]),
+        "phrase_prefix": PhrasePrefixQuery(["the"], prefix="s"),
+        "phrase_prefix_1": PhrasePrefixQuery(["the"], prefix="s",
+                                             max_expansions=1),
+        "regex_phrase": RegexPhraseQuery(["order", "s.*"]),
+    }
+
+
+def test_phrase_prefix_is_one_scan_one_decode(searcher):
+    from pyspark.sql import functions as F
+
+    q = _positional_shapes()["phrase_prefix"]
+    assert len(searcher._dictionary_terms(
+        [F.col("term").startswith(q.prefix)], q.max_expansions)) >= 3
+    plan = _final_plan(searcher.search(q, k=10))
+    assert plan.count("MapInPandas") == 1      # one postings decode
+    assert plan.count("PushedFilters: [In(term") == 1
+
+
+@pytest.mark.parametrize("name,jobs", [
+    ("phrase", 4), ("phrase_prefix", 6), ("phrase_prefix_1", 6),
+    ("regex_phrase", 9)])
+def test_positional_job_counts(spark, searcher, name, jobs):
+    """A phrase prefix runs as many jobs with 6 expansions as with 1: its
+    expansions share one scan, one decode and one set of shuffles."""
+    q = _positional_shapes()[name]
+    assert count_jobs(spark,
+                      lambda: searcher.search(q, k=10).collect()) == jobs

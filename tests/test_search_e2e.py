@@ -282,7 +282,10 @@ def test_fuzzy_prefix_reference_vectors(spark, tmp_path):
 
 
 def test_prefix_edit_distance_unit():
-    from tantivy_spark.query.exact import _prefix_edit_distance as ped
+    from tantivy_spark.query.exact import _edit_distance_row
+
+    def ped(t, q, transpositions):      # prefix distance: the row minimum
+        return min(_edit_distance_row(q, t, transpositions))
 
     assert ped("japan", "jap", False) == 0       # prefix hit
     assert ped("japan", "japon", False) == 1     # substitute within prefix
@@ -292,6 +295,49 @@ def test_prefix_edit_distance_unit():
     assert ped("abcd", "axcz", False) == 2
     assert ped("abcd", "axc", False) == 1        # edit("axc","abc")
     assert ped("x", "", False) == 0              # empty query matches all
+    # the full distance is the row's last cell
+    assert _edit_distance_row("ab", "ba", True)[-1] == 1    # one swap
+    assert _edit_distance_row("ab", "ba", False)[-1] == 2
+    assert _edit_distance_row("dtaa", "data", True)[-1] == 1
+    assert _edit_distance_row("", "abc", True)[-1] == 3
+
+
+@pytest.mark.parametrize("phrase_terms,boost", [
+    (["the"], None), ([], None), (["the"], 2.5)],
+    ids=["phrase_terms", "prefix_only", "boosted"])
+def test_phrase_prefix_equals_dismax_of_phrases(searcher, phrase_terms,
+                                                boost):
+    """A phrase prefix scores each doc by its best expansion: the same
+    top-k (rank, key, score) and matching set, bit for bit, as the
+    explicit DisjunctionMax (tie_breaker 0) of one PhraseQuery per
+    expansion, which lowers one scan per expansion."""
+    from pyspark.sql import functions as F
+
+    from tantivy_spark.query.ast import (BoostQuery, DisjunctionMaxQuery,
+                                         PhrasePrefixQuery, PhraseQuery)
+
+    q = PhrasePrefixQuery(phrase_terms, prefix="s")
+    expansions = sorted({r["term"] for r in searcher.reader.term_stats
+                         .filter(F.col("term").startswith("s"))
+                         .select("term").collect()})[:q.max_expansions]
+    assert len(expansions) >= 3
+    ref = DisjunctionMaxQuery(
+        [PhraseQuery(phrase_terms + [e]) for e in expansions], tie_breaker=0.0)
+    if boost is not None:
+        q, ref = BoostQuery(q, boost), BoostQuery(ref, boost)
+
+    def top(x):
+        return [(r["rank"], r["key"], r["score"])
+                for r in searcher.search(x, k=10).collect()]
+
+    def matching(x):
+        return sorted((r["segment_ord"], r["doc_id"], r["score"])
+                      for r in searcher.matching(x).collect())
+
+    assert top(q) == top(ref)
+    got = matching(q)
+    assert len({(s, d) for s, d, _ in got}) == len(got) > 10
+    assert got == matching(ref)
 
 
 def test_tweak_score_by_fast_field(spark, tmp_path):

@@ -140,3 +140,32 @@ def test_update_document_flow(spark, tmp_path):
     # 'common' still matches exactly one alive k2 (plus k1, k3)
     hits = s.search(TermQuery("common"), k=10).collect()
     assert sorted(h["key"] for h in hits) == ["k1", "k2", "k3"]
+
+
+def test_dictionary_expansion_counts_each_term_once(spark, tmp_path):
+    """A two-commit index keeps one term_stats row per (commit, term):
+    fuzzy, regex and phrase-prefix expansion still list each dictionary
+    term once, so caps and max_expansions count distinct terms."""
+    from tantivy_spark.query.ast import PhrasePrefixQuery, PhraseQuery
+    from tantivy_spark.query.exact import ExactSearcher
+
+    out = str(tmp_path / "wexp")
+    w = IndexWriter(spark, out, IndexConfig(key_col="url", text_col="text"),
+                    segments_per_batch=1)
+    w.add_documents(spark.createDataFrame(
+        [("k1", "merge sort"), ("k2", "sort order")],
+        "url STRING, text STRING")).commit()
+    w.add_documents(spark.createDataFrame(
+        [("k3", "merge sort fast"), ("k4", "merge sorted")],
+        "url STRING, text STRING")).commit()
+    s = ExactSearcher(w.reader())
+    assert s._expand_fuzzy("sort", 1, False, cap=2) == ["sort"]
+    assert s._expand_fuzzy("sort", 1, False, cap=1) == ["sort"]
+    assert s._expand_regex("sort.*", cap=2) == ["sort", "sorted"]
+    assert s._expand_regex("so.*", cap=1) == ["sort"]
+    # the first two distinct "so" terms, sort and sorted, both expand
+    prefix = PhrasePrefixQuery(["merge"], prefix="so", max_expansions=2)
+    both = PhraseQuery(["merge", "sort"])
+    keys = {r["key"] for r in s.search(prefix, k=10).collect()}
+    assert keys == {"k1", "k3", "k4"}
+    assert {r["key"] for r in s.search(both, k=10).collect()} == {"k1", "k3"}
