@@ -583,8 +583,23 @@ def _is_sentinel():
 
 # ---- the index-write path (see the module docstring) -------------------------
 
-def write_table(df: DataFrame, path: str, compression: str) -> None:
-    df.write.mode("overwrite").option("compression", compression).parquet(path)
+#: docmap parquet row-group size.  A top-k reads the keys of its k hits
+#: through row-group (segment_ord, doc_id) statistics, so at any corpus
+#: size it reads at most about k docmap row groups
+DOCMAP_ROW_GROUP_BYTES = 1 << 20
+
+
+def write_table(name: str, df: DataFrame, path: str,
+                compression: str) -> None:
+    """The write of index table ``name`` that build, ingest and merge
+    share.  The docmap is sorted by ``(segment_ord, doc_id)`` per file,
+    in row groups of about ``DOCMAP_ROW_GROUP_BYTES``
+    (``IndexReader.lookup`` prunes on them)."""
+    writer = df.write
+    if name == "docmap":
+        writer = (df.sortWithinPartitions("segment_ord", "doc_id").write
+                  .option("parquet.block.size", DOCMAP_ROW_GROUP_BYTES))
+    writer.mode("overwrite").option("compression", compression).parquet(path)
 
 
 def segment_postings(df: DataFrame, cfg: IndexConfig) -> DataFrame:
@@ -888,7 +903,7 @@ def _build_index_inner(spark: SparkSession, df: DataFrame, out_dir: str,
 
         def timed(name: str, table) -> float:
             t0 = time.time()
-            write_table(table(), path(name), cfg.compression)
+            write_table(name, table(), path(name), cfg.compression)
             return time.time() - t0
 
         with ThreadPoolExecutor(max_workers=2) as ex:

@@ -609,8 +609,9 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str,
 
     def write_concurrently(tables: dict) -> None:
         with ThreadPoolExecutor(max_workers=2) as ex:
-            futs = [ex.submit(write_table, df, os.path.join(out_dir, name),
-                              compression) for name, df in tables.items()]
+            futs = [ex.submit(write_table, name, df,
+                              os.path.join(out_dir, name), compression)
+                    for name, df in tables.items()]
             for f in futs:
                 f.result()
 

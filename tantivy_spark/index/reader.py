@@ -21,6 +21,35 @@ from pyspark.sql import functions as F
 DELETES_SCHEMA = "segment_ord INT, doc_id INT"
 
 
+def row_groups_holding(dataset, names: list[str], keys: list[tuple]) -> list:
+    """The row groups of a pyarrow parquet ``dataset``, as fragments,
+    whose min/max statistics on the columns ``names`` can hold one of
+    the sorted value tuples ``keys``; a row group without those
+    statistics is kept.  Only footers are read, and each row group costs
+    one bisect.  A pushed OR of the k key equalities would keep the same
+    row groups, but it is simplified once per row group and evaluated
+    on every row read, so its cost grows with k squared."""
+    from bisect import bisect_left, bisect_right
+
+    def holds(stats: list) -> bool:
+        if any(s is None or s.get("min") is None for s in stats):
+            return True
+        lo = tuple(s["min"] for s in stats)
+        hi = tuple(s["max"] for s in stats)
+        # a key the row group can hold lies in [lo, hi] in tuple order
+        near = keys[bisect_left(keys, lo):bisect_right(keys, hi)]
+        return any(all(a <= v <= b for v, a, b in zip(key, lo, hi))
+                   for key in near)
+
+    out = []
+    for frag in dataset.get_fragments() if keys else []:
+        ids = [rg.id for rg in frag.row_groups
+               if holds([rg.statistics.get(n) for n in names])]
+        if ids:
+            out.append(frag.subset(row_group_ids=ids))
+    return out
+
+
 class ReloadingReader:
     """The reference's ReloadPolicy analogue (src/reader/mod.rs:7-44):
     hands out an immutable IndexReader SNAPSHOT, refreshing it when the
@@ -157,34 +186,53 @@ class IndexReader:
 
     def doc_freqs(self, terms: list[str]) -> dict[str, int]:
         """Global doc_freq for a small set of query terms, read on the
-        driver with pyarrow — no Spark job.
+        driver with pyarrow (:meth:`lookup`) — no Spark job.
 
         The same statistics lookup the reference does when building a
         Weight (bm25.rs:95-129).  Only the ``term`` and ``doc_freq``
-        columns are read, ``term IN (...)`` is pushed into the scan, and
-        on a streaming-built index only the published ``batch=``
-        partitions are visited (the gate of :meth:`_table`).  Rows held:
-        O(query terms x published batches), summed per term (incremental
-        ingest appends per-batch deltas).  The ``term`` column it filters
-        grows with the vocabulary, not with ``n_docs``: term_stats is
-        hash-partitioned and unsorted, so row-group statistics rarely
-        prune and the whole column is read.
+        columns are read and ``term IN (...)`` is pushed into the scan.
+        Rows held: O(query terms x published batches), summed per term
+        (incremental ingest appends per-batch deltas).  The ``term``
+        column it filters grows with the vocabulary, not with
+        ``n_docs``: term_stats is hash-partitioned and unsorted, so
+        row-group statistics rarely prune and the whole column is read.
         """
-        import pyarrow as pa
-        import pyarrow.dataset as ds
+        import pyarrow.compute as pc
 
         if not terms:
             return {}
-        schema = pa.schema([("term", pa.string()), ("doc_freq", pa.int64())])
-        parts = [ds.dataset(d, schema=schema, format="parquet")
-                 for d in self._table_dirs("term_stats")]
-        table = ds.dataset(parts, schema=schema).to_table(
-            filter=ds.field("term").isin(list(set(terms))))
+        table = self.lookup("term_stats", ["term", "doc_freq"],
+                            pc.field("term").isin(list(set(terms))))
         out = {t: 0 for t in terms}
         for term, n in zip(table.column("term").to_pylist(),
                            table.column("doc_freq").to_pylist()):
             out[term] += int(n)
         return out
+
+    def lookup(self, name: str, columns: list[str], filter,
+               keys: list[tuple] | None = None) -> "pa.Table":
+        """``columns`` of the rows of index table ``name`` that match the
+        pyarrow expression ``filter``, read on the driver with pyarrow —
+        no Spark job.  Only the published ``batch=`` partitions of a
+        streaming-built index are visited (the gate of :meth:`_table`),
+        and the filter is pushed into the scan.
+
+        ``keys``: on a table whose files are sorted by the leading
+        columns of ``columns`` (the docmap, by ``(segment_ord,
+        doc_id)``), the sorted value tuples of those columns that the
+        wanted rows have.  Only the row groups whose min/max statistics
+        can hold one of them are read (:func:`row_groups_holding`), so a
+        lookup of k keys reads about k row groups at any table size."""
+        import pyarrow.dataset as ds
+
+        parts = [ds.dataset(d, format="parquet")
+                 for d in self._table_dirs(name)]
+        if keys is not None:
+            by = columns[:len(keys[0]) if keys else 0]
+            parts = [ds.FileSystemDataset(row_groups_holding(p, by, keys),
+                                          p.schema, p.format, p.filesystem)
+                     for p in parts]
+        return ds.dataset(parts).to_table(columns=columns, filter=filter)
 
     def _table_dirs(self, name: str) -> list[str]:
         """The directories holding ``name``'s visible rows: the table's

@@ -410,10 +410,11 @@ class OracleBuilder:
 
     def _phrase_prefix(self, q: ast.PhrasePrefixQuery, boost: float,
                        ctes: list[str]) -> str:
-        """Mirror of exact._lower's PhrasePrefixQuery path: expansions are
-        the first max_expansions dictionary terms with the prefix in
-        lexicographic order; each expansion forms a slop-0 phrase; a doc
-        scores via its best expansion (DisjunctionMax, tie_breaker 0)."""
+        """Mirror of the PhrasePrefixQuery lowering through
+        ``ExactSearcher._positional``: expansions are the first
+        max_expansions dictionary terms with the prefix in lexicographic
+        order; each expansion forms one slop-0 phrase clause; a doc
+        scores via its best clause."""
         if self.fields:
             raise NotImplementedError(
                 "multi-field oracle: phrase-prefix not supported")
@@ -464,7 +465,8 @@ class OracleBuilder:
 
     def _regex_phrase(self, q: ast.RegexPhraseQuery, boost: float,
                       ctes: list[str]) -> str:
-        """Mirror of exact._regex_phrase: each slot expands to the first
+        """Mirror of the RegexPhraseQuery lowering through
+        ``ExactSearcher._positional``: each slot expands to the first
         max_expansions dictionary terms matching its regex (lexicographic);
         a phrase start is an aligned position where every slot matched;
         scored with the summed per-slot idf (slot df = docs containing any

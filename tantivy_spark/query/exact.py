@@ -27,7 +27,8 @@ Scale notes: the only data that moves is the posting rows of the query's
 terms (parquet IN-filter pushdown on ``term``); scoring is whole-stage
 codegen'd JVM arithmetic; top-k is ``TakeOrderedAndProject`` (per-partition
 heap + driver merge, the exact analogue of the reference's per-segment
-TopNComputer + merge_fruits, src/collector/top_score_collector.rs).
+TopNComputer + merge_fruits, src/collector/top_score_collector.rs), and
+the driver reads only the k hits' docmap rows for their keys.
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tantivy_spark import B, K1
@@ -220,29 +221,63 @@ def decode_rows(rows: DataFrame, with_positions: bool = False) -> DataFrame:
     return rows.select(*cols).mapInPandas(decode, schema=schema)
 
 
-HIT_COLS = ["segment_ord", "doc_id", "score", "key"]
+#: the scored columns of a hit; ``top_k(..., reader)`` appends ``key``
+SCORE_COLS = ["segment_ord", "doc_id", "score"]
+
+
+def ranked(df: DataFrame, keys: list, k: int, offset: int,
+           cols: list) -> DataFrame:
+    """The lazy half of :func:`top_k`: rows 1..offset+k of ``df`` by
+    ``keys`` then DocAddress ascending (top_score_collector.rs:26-28),
+    projected to ``cols`` — a root TakeOrderedAndProject (per-partition
+    heap + driver merge): one job, no exchange, no global sort."""
+    order = [*keys, F.asc("segment_ord"), F.asc("doc_id")]
+    return df.orderBy(*order).limit(k + offset).select(*cols)
 
 
 def top_k(df: DataFrame, keys: list, k: int, offset: int, cols: list,
-          docmap: DataFrame | None = None) -> DataFrame:
-    """Every collector's top-k tail: ``(rank, *cols)`` of rows
+          reader: IndexReader | None = None) -> DataFrame:
+    """Every collector's top-k tail: ``(rank, *cols[, key])`` of rows
     offset+1..offset+k of ``df`` by ``keys`` then DocAddress ascending
-    (top_score_collector.rs:26-28, offset per :93-96), sorted by rank.
-    Both orderBy+limit pairs plan as TakeOrderedAndProject (per-partition
-    heap + driver merge): the first selects the hits, the last puts the
-    at most k result rows in rank order at the plan root — one job, no
-    range-partitioned global sort.  ``docmap``: the k ranked rows are
-    broadcast into an inner join that adds ``key`` — the corpus-scale
-    docmap stays distributed."""
-    order = [*keys, F.asc("segment_ord"), F.asc("doc_id")]
-    ranked = (df.orderBy(*order).limit(k + offset)
-              .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-              .filter(F.col("rank") > offset))
-    if docmap is not None:
-        ranked = F.broadcast(ranked).join(
-            docmap.select("segment_ord", "doc_id", "key"),
-            ["segment_ord", "doc_id"], "inner")
-    return ranked.select("rank", *cols).orderBy("rank").limit(k)
+    (offset per top_score_collector.rs:93-96), in rank order.
+
+    Eager: one Spark job selects and collects the offset+k rows
+    (:func:`ranked`); the driver drops the first ``offset`` and numbers
+    the ranks.  ``reader``: the driver appends each hit's ``key``, read
+    with pyarrow from the docmap rows of the k hits only
+    (``IndexReader.lookup``) — like the reference, which reads stored
+    fields only for collected hits, no job scans the docmap.  Returns a
+    local DataFrame of at most k rows (collecting it runs no job); the
+    driver holds O(k + offset) rows."""
+    import pyarrow.compute as pc
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    top = ranked(df, keys, k, offset, cols)
+    fields = [StructField("rank", IntegerType(), False), *top.schema.fields]
+    hits = top.collect()[offset:]
+    rows = [(offset + i + 1, *h) for i, h in enumerate(hits)]
+    if reader is not None:
+        addrs = [(h["segment_ord"], h["doc_id"]) for h in hits]
+        keyed = reader.lookup(
+            "docmap", ["segment_ord", "doc_id", "key"],
+            pc.field("segment_ord").isin(sorted({s for s, _ in addrs}))
+            & pc.field("doc_id").isin(sorted({d for _, d in addrs})),
+            keys=sorted(set(addrs)))
+        # the filter is per column, so it also passes pairs that are no
+        # hit; the dict picks the hits, and a hit without a docmap row
+        # has no key (an inner join)
+        key_of = dict(zip(zip(keyed.column("segment_ord").to_pylist(),
+                              keyed.column("doc_id").to_pylist()),
+                          keyed.column("key").to_pylist()))
+        rows = [(*r, key_of[a]) for r, a in zip(rows, addrs) if a in key_of]
+        fields.append(StructField(
+            "key", from_arrow_type(keyed.schema.field("key").type)))
+    schema = StructType(fields)
+    table = (LocalDataToArrowConversion.convert(rows, schema, False) if rows
+             else to_arrow_schema(schema).empty_table())
+    return df.sparkSession.createDataFrame(table, schema)
 
 
 class ExactSearcher:
@@ -858,9 +893,11 @@ class ExactSearcher:
 
     # ------------------------------------------------------------ collectors
     def search(self, q: ast.Query, k: int = 10, offset: int = 0) -> DataFrame:
-        """TopDocs: (rank, segment_ord, doc_id, score, key)."""
+        """TopDocs: (rank, segment_ord, doc_id, score, key) as a local
+        DataFrame of at most k rows — eager, O(k + offset) rows on the
+        driver (see :func:`top_k`)."""
         return top_k(self.matching(q), [F.desc("score")], k, offset,
-                     HIT_COLS, self.reader.docmap)
+                     SCORE_COLS, self.reader)
 
     def count(self, q: ast.Query) -> int:
         """Count collector (ref: src/collector/count_collector.rs).  A

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from tantivy_spark.index.reader import IndexReader
 from tantivy_spark.query import ast
-from tantivy_spark.query.exact import HIT_COLS, ExactSearcher, top_k
+from tantivy_spark.query.exact import SCORE_COLS, ExactSearcher, top_k
 from tantivy_spark.query.parser import QueryParser
 from tantivy_spark.query.wand import wand_candidates
 
@@ -80,7 +80,10 @@ class Searcher:
 
     def search(self, q, k: int = 10, offset: int = 0,
                method: str = "auto") -> DataFrame:
-        """TopDocs: (rank, segment_ord, doc_id, score, key)."""
+        """TopDocs: (rank, segment_ord, doc_id, score, key).  Eager: the
+        top-k runs here and comes back as a local DataFrame of at most k
+        rows, whose collect runs no job (``exact.top_k``); the driver
+        holds O(k + offset) rows."""
         if k < 1:
             # TopDocs::with_limit(0) panics in the reference
             # (top_score_collector.rs "limit must be strictly greater
@@ -93,8 +96,8 @@ class Searcher:
                 mode, terms, boosts = shape
                 rows = wand_candidates(self.reader, terms, k=k + offset,
                                        mode=mode, boosts=boosts)
-                return top_k(rows, [F.desc("score")], k, offset, HIT_COLS,
-                             self.reader.docmap)
+                return top_k(rows, [F.desc("score")], k, offset,
+                             SCORE_COLS, self.reader)
             if method == "wand":
                 raise ValueError("query shape not WAND-eligible")
         return self.exact.search(query, k=k, offset=offset)
@@ -301,8 +304,11 @@ class Searcher:
         """Docstore retrieval: join the (tiny, broadcast) top-k back to the
         source table for full documents — the reference's row-store lookup
         of top hits (ARCHITECTURE.md:138-159), with the source Iceberg/
-        parquet table playing the docstore."""
+        parquet table playing the docstore.  Every source row of a hit's
+        key is kept (a duplicated key yields several rows), so the rows
+        are put in rank order on one partition, not cut to k: no
+        range-partitioning sort and its sampling job."""
         return (F.broadcast(topk)
                 .join(source, topk["key"] == source[key_col], "inner")
                 .drop(source[key_col])
-                .orderBy("rank"))
+                .repartition(1).sortWithinPartitions("rank"))

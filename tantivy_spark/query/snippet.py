@@ -301,11 +301,12 @@ def snippets_for_topk(topk: DataFrame, source: DataFrame, terms: list[str],
                       max_num_chars: int = 150) -> DataFrame:
     """Attach a ``snippet`` column to a top-k result frame: broadcast the
     tiny top-k into the docstore (source) join, then run the fragment
-    kernel on just those k documents — never on the corpus."""
+    kernel on just those k documents — never on the corpus.  Rank order
+    as in ``Searcher.fetch_docs``: one partition, no sampling job."""
     docs = (F.broadcast(topk)
             .join(source, topk["key"] == source[key_col], "inner"))
     return docs.select(
         "rank", "key", "score",
         snippet_col(F.col(text_col), terms, term_scores,
                     max_num_chars).alias("snippet"),
-    ).orderBy("rank")
+    ).repartition(1).sortWithinPartitions("rank")

@@ -28,9 +28,10 @@ threshold (the driver-side final merge keeps global exactness regardless
 of per-unit pruning).  With one live term a unit is one chunk row and
 the kernel maps straight over the scan; with several a unit is one
 segment's rows, co-located by one shuffle on segment_ord.  Per-unit
-top-k outputs are tiny, so the final merge is a broadcast-size
-orderBy/limit — the same partial/final shape as the reference's
-per-segment collect + merge_fruits.  No threshold is shared across
+top-k outputs are tiny, so the final merge is ``exact.top_k``: a root
+TakeOrderedAndProject merged on the driver, which then reads the k hits'
+keys — the same partial/final shape as the reference's per-segment
+collect + merge_fruits.  No threshold is shared across
 units: a global seed prelude was measured at 800k docs (WAND_DEPTH.json)
 and never saved a decoded block, because each unit's own kth score
 becomes tight within its first strips.
@@ -56,7 +57,7 @@ from pyspark.sql import functions as F
 from tantivy_spark.bm25 import Bm25Params
 from tantivy_spark.index import codec
 from tantivy_spark.index.reader import IndexReader
-from tantivy_spark.query.exact import HIT_COLS, top_k
+from tantivy_spark.query.exact import SCORE_COLS, top_k
 
 OUT_SCHEMA = "segment_ord INT, doc_id INT, score FLOAT"
 
@@ -389,7 +390,8 @@ def wand_topk(reader: IndexReader, terms: list[str], k: int = 10,
               boosts: list[float] | None = None) -> DataFrame:
     """Distributed BMW top-k for a pure term union ("or") or pure term
     intersection ("and").  Returns (rank, segment_ord, doc_id, score, key)
-    with the reference tie-break; score is float32.
+    with the reference tie-break as a local k-row DataFrame (eager, see
+    ``exact.top_k``); score is float32.
 
     Deletes: per-segment alive bitsets are shipped into the kernels (task
     broadcast) so dead docs never influence thresholds.  Indexes with more
@@ -398,4 +400,4 @@ def wand_topk(reader: IndexReader, terms: list[str], k: int = 10,
     driver-memory blowup.
     """
     rows = wand_candidates(reader, terms, k, mode, boosts)
-    return top_k(rows, [F.desc("score")], k, 0, HIT_COLS, reader.docmap)
+    return top_k(rows, [F.desc("score")], k, 0, SCORE_COLS, reader)

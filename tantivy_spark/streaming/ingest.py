@@ -141,7 +141,7 @@ class IncrementalIndexer:
         def write(table: str, df: DataFrame) -> None:
             # an OVERWRITE of this batch's own subdirectory: a retried
             # batch rewrites the same paths byte-for-byte
-            write_table(df, self._bdir(table, bid), cfg.compression)
+            write_table(table, df, self._bdir(table, bid), cfg.compression)
 
         write("postings", segment_postings(batch_df, cfg))
         self._fail("after_postings")

@@ -131,6 +131,13 @@ def test_orphan_batch_invisible_to_readers(spark, corpus, tmp_path_factory):
     gated = sums(reader.term_stats)
     assert reader.doc_freqs(terms) == gated
     assert sums(spark.read.parquet(os.path.join(out, "term_stats"))) != gated
+    # and so does the driver-side key lookup of a top-k: every key comes
+    # from the published batch, none from the orphan docmap rows
+    published = {r["url"] for r in b0.collect()}
+    keys = [r["key"] for r in s.search(QUERY, k=10).collect()]
+    assert len(keys) == 10 and set(keys) <= published
+    assert set(reader.lookup("docmap", ["key"], None)
+               .column("key").to_pylist()) == published
 
     # merge reads through the same gate: the orphan batch is not merged
     from tantivy_spark.index.merge import merge_segments

@@ -5,15 +5,17 @@
   pruning via the term-sorted file layout);
 - unused fat columns (positions) are pruned from the read schema;
 - top-k is TakeOrderedAndProject (per-partition heap + driver merge),
-  never a global sort: the tail that puts the k hits in rank order is a
-  root TakeOrderedAndProject too, so no range-partitioning exchange
+  never a global sort: ``exact.ranked``, the frame ``top_k`` collects,
+  is a root TakeOrderedAndProject, so no range-partitioning exchange
   appears anywhere in a top-k plan;
-- the k-row result side is broadcast into the docmap join, keeping the
-  corpus-scale table distributed;
+- no top-k plan scans the docmap: the driver reads the k hits' keys with
+  pyarrow, and ``search`` returns a local k-row frame whose collect runs
+  no job;
 - query statistics (doc_freq) are read on the driver without a Spark
-  job, so a term top-k runs 2 jobs and a WAND or exact boolean query 3
+  job, so a term top-k runs 1 job and a WAND or exact boolean query 2
   (``count_jobs`` pins these counts, and the job budget of a build and
-  a merge; ``count_py4j_calls`` pins a light query's driver round-trips);
+  a merge; ``count_py4j_calls`` pins the driver round-trips of light
+  queries and of one phrase);
 - every positional query is one positions scan and one decode, however
   many clauses a phrase prefix expands to.
 """
@@ -21,9 +23,10 @@
 import itertools
 
 import pytest
+from pyspark.sql import functions as F
 
 from tantivy_spark.query import TermQuery
-from tantivy_spark.query.exact import ExactSearcher
+from tantivy_spark.query.exact import SCORE_COLS, ExactSearcher, ranked
 
 
 def _plan(df, execute: bool = False) -> str:
@@ -103,23 +106,38 @@ def test_positions_read_only_when_needed(searcher):
     assert "pos:binary" in plan.split("ReadSchema")[1][:500]
 
 
-def test_topk_uses_take_ordered_and_broadcast(searcher):
-    plan = _plan(searcher.search(TermQuery("data"), k=10), execute=True)
+def _ranked(df, k: int = 10):
+    """The lazy frame a score top-k collects (``exact.top_k``)."""
+    return ranked(df, [F.desc("score")], k, 0, SCORE_COLS)
+
+
+def _reads_no_docmap(plan: str) -> bool:
+    return "/docmap" not in plan
+
+
+def test_topk_uses_take_ordered_and_reads_no_docmap(spark, searcher):
+    plan = _plan(_ranked(searcher.matching(TermQuery("data"))),
+                 execute=True)
     assert "TakeOrderedAndProject" in plan
-    assert "BroadcastHashJoin" in plan
-    assert "BuildLeft" in plan  # the k-row side is built/broadcast
-    assert "SortMergeJoin" not in plan
     assert "rangepartitioning" not in plan  # no global sort
+    assert _reads_no_docmap(plan)
+    # search() hands back the k hits as a local relation
+    hits = searcher.search(TermQuery("data"), k=10)
+    assert "LocalTableScan" in _plan(hits)
+    assert count_jobs(spark, hits.collect) == 0
 
 
-def test_wand_topk_plan(tiny_index):
-    from tantivy_spark.query.wand import wand_topk
+def test_wand_topk_plan(spark, tiny_index):
+    from tantivy_spark.query.wand import wand_candidates, wand_topk
 
-    plan = _plan(wand_topk(tiny_index, ["fast", "slow"], k=10), execute=True)
+    plan = _plan(_ranked(wand_candidates(tiny_index, ["fast", "slow"], k=10)),
+                 execute=True)
     assert "TakeOrderedAndProject" in plan
-    assert "BuildLeft" in plan
     assert "PushedFilters: [In(term" in plan
     assert "rangepartitioning" not in plan  # no global sort
+    assert _reads_no_docmap(plan)
+    hits = wand_topk(tiny_index, ["fast", "slow"], k=10)
+    assert count_jobs(spark, hits.collect) == 0
 
 
 def test_count_single_term_is_stats_lookup(spark, searcher, tiny_golden):
@@ -185,14 +203,91 @@ def test_single_term_wand_has_no_repartition(spark, tiny_index):
     """Single-term WAND maps straight over the postings scan: no
     segment_ord exchange in the plan (parallelism = chunk count, not
     segment count); multi-term keeps the co-locating repartition."""
-    from tantivy_spark.query.wand import wand_topk
+    from tantivy_spark.query.wand import wand_candidates
 
-    single = wand_topk(tiny_index, ["data"], k=5)
-    multi = wand_topk(tiny_index, ["data", "fast"], k=5)
-    p1 = single._jdf.queryExecution().executedPlan().toString()
-    p2 = multi._jdf.queryExecution().executedPlan().toString()
+    p1 = _plan(_ranked(wand_candidates(tiny_index, ["data"], k=5), k=5))
+    p2 = _plan(_ranked(wand_candidates(tiny_index, ["data", "fast"], k=5),
+                       k=5))
     assert "hashpartitioning(segment_ord" not in p1
     assert "hashpartitioning(segment_ord" in p2
+
+
+def test_topk_reads_at_most_k_docmap_row_groups(spark, tmp_path_factory,
+                                                 monkeypatch):
+    """The key lookup of a top-k reads at most one docmap row group per
+    hit, plus any row group that spans two segments (its doc_id range
+    covers both): the same row groups pyarrow keeps for the OR of the k
+    ``(segment_ord, doc_id)`` equalities.  The hits equal those of an
+    index whose docmap is one row group per file, and every docmap file
+    is sorted by ``(segment_ord, doc_id)``."""
+    import functools
+    import operator
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    from tantivy_spark.corpus import synthetic_pages
+    from tantivy_spark.index import build, reader
+    from tantivy_spark.query.searcher import Searcher
+
+    pages = synthetic_pages(spark, 2000, seed=7).select("url", "text")
+    cfg = build.IndexConfig(key_col="url", text_col="text", n_segments=2)
+    base = tmp_path_factory.mktemp("rowgroups")
+    build.build_index(spark, pages, str(base / "one"), cfg)
+    monkeypatch.setattr(build, "DOCMAP_ROW_GROUP_BYTES", 8192)
+    build.build_index(spark, pages, str(base / "many"), cfg)
+    one = Searcher(reader.IndexReader(spark, str(base / "one")))
+    many = Searcher(reader.IndexReader(spark, str(base / "many")))
+
+    frags = list(ds.dataset(str(base / "many" / "docmap"),
+                            format="parquet").get_fragments())
+    for f in frags:
+        rows = f.to_table(columns=["segment_ord", "doc_id"]).to_pylist()
+        addrs = [(r["segment_ord"], r["doc_id"]) for r in rows]
+        assert addrs == sorted(addrs), f.path
+    stats = [rg.statistics for f in frags for rg in f.row_groups]
+    spanning = sum(st["segment_ord"]["min"] < st["segment_ord"]["max"]
+                   for st in stats)
+    k = 3
+    assert len(stats) > 2 * (k + spanning)
+
+    read = []
+    holding = reader.row_groups_holding
+
+    def counted(*args):
+        out = holding(*args)
+        read.append(sum(f.num_row_groups for f in out))
+        return out
+
+    monkeypatch.setattr(reader, "row_groups_holding", counted)
+    for q in ("the", "vortex007 quark012", '"of the"'):
+        read.clear()
+        hits = many.search(q, k=k).collect()
+        assert len(hits) == k and hits == one.search(q, k=k).collect()
+        pairs = functools.reduce(operator.or_, [
+            (pc.field("segment_ord") == h["segment_ord"])
+            & (pc.field("doc_id") == h["doc_id"]) for h in hits])
+        kept = sum(len(f.split_by_row_group(pairs)) for f in frags)
+        assert read[:1] == [kept] and kept <= k + spanning, (q, read, kept)
+
+
+def test_fetch_and_snippet_tails_job_counts(spark, tiny_index, tiny_pages):
+    """The docstore tails keep every source row of a hit's key, so they
+    are not cut to k: they put the rows in rank order on one partition,
+    with no range-partitioning sort and so no sampling job.  3 jobs each:
+    the broadcast of the local top-k, the source scan and join, and the
+    rank-order stage."""
+    from tantivy_spark.query.searcher import Searcher
+    from tantivy_spark.query.snippet import snippets_for_topk
+
+    s = Searcher(tiny_index)
+    top = s.search("data", k=5)
+    tails = {"fetch_docs": lambda: s.fetch_docs(top, tiny_pages, "url"),
+             "snippets": lambda: snippets_for_topk(top, tiny_pages, ["data"])}
+    for name, tail in tails.items():
+        assert "rangepartitioning" not in _plan(tail()), name
+        assert [r["rank"] for r in tail().collect()] == [1, 2, 3, 4, 5]
+        assert count_jobs(spark, lambda: tail().collect()) == 3, name
 
 
 def _wand_or(reader):
@@ -202,19 +297,22 @@ def _wand_or(reader):
 
 
 def test_term_topk_job_count(spark, tiny_index):
-    """A term top-k is the WAND kernel job plus the docmap job: the
-    doc_freq lookup runs no job and the rank-order tail no global sort."""
+    """A term top-k is the one WAND kernel job: the doc_freq lookup and
+    the key lookup run no job, and the rank-order tail no global sort."""
     from tantivy_spark.query.searcher import Searcher
 
     s = Searcher(tiny_index)
-    assert count_jobs(spark, lambda: s.search("data").collect()) == 2
+    assert count_jobs(spark, lambda: s.search("data").collect()) == 1
 
 
 @pytest.mark.parametrize("text,calls", [
-    ("data", 243), ("the data", 256), ("+data +fast", 256)])
-def test_light_query_py4j_calls(spark, tiny_index, text, calls):
-    """Driver round-trips to the JVM per light query: planning cost that
-    no job count shows."""
+    pytest.param("data", 168, id="data"),
+    pytest.param("the data", 181, id="the data"),
+    pytest.param("+data +fast", 181, id="+data +fast"),
+    pytest.param('"order sort"', 945, id="phrase")])
+def test_query_py4j_calls(spark, tiny_index, text, calls):
+    """Driver round-trips to the JVM per query: planning cost that no
+    job count shows.  The phrase is the heavy-path baseline."""
     from tantivy_spark.query.searcher import Searcher
 
     s = Searcher(tiny_index)
@@ -223,13 +321,13 @@ def test_light_query_py4j_calls(spark, tiny_index, text, calls):
 
 def test_wand_or_job_count(spark, tiny_index, tiny_pages, tmp_path_factory):
     """A 2-term OR counts its pruning work inside its one execution and
-    runs 3 jobs.  With deletes, the one bounded collect of the delete set
+    runs 2 jobs.  With deletes, the one bounded collect of the delete set
     is the only extra job (its fixed read schema infers nothing)."""
     from tantivy_spark.index.build import IndexConfig, build_index
     from tantivy_spark.index.deletes import delete_by_keys
     from tantivy_spark.index.reader import IndexReader
 
-    assert count_jobs(spark, _wand_or(tiny_index)) == 3
+    assert count_jobs(spark, _wand_or(tiny_index)) == 2
     out = str(tmp_path_factory.mktemp("wdel") / "idx")
     build_index(spark, tiny_pages, out, IndexConfig(
         key_col="url", text_col="text", n_segments=4,
@@ -238,7 +336,7 @@ def test_wand_or_job_count(spark, tiny_index, tiny_pages, tmp_path_factory):
     keys = [r["key"] for r in
             ExactSearcher(reader).search(TermQuery("the"), k=5).collect()]
     assert delete_by_keys(spark, reader, keys) == 5
-    assert count_jobs(spark, _wand_or(reader)) == 4
+    assert count_jobs(spark, _wand_or(reader)) == 3
 
 
 def test_chunk_dedup_plan_is_udf_free(spark):
@@ -353,21 +451,21 @@ def _final_plan(df) -> str:
 
 @pytest.mark.parametrize("name", list(_exact_shapes()))
 def test_exact_multi_clause_is_one_scan_one_aggregate(searcher, name):
-    df = searcher.search(_exact_shapes()[name], k=10)
-    plan = _final_plan(df)
+    plan = _final_plan(_ranked(searcher.matching(_exact_shapes()[name])))
     assert plan.count("MapInPandas") == 1      # one postings decode
     assert plan.count("PushedFilters: [In(term") == 1
     # tiny_index has no deletes, so not even the deletes anti-join
     for join in ("LeftOuter", "FullOuter", "LeftAnti"):
         assert join not in plan, join
     assert "TakeOrderedAndProject" in plan
+    assert _reads_no_docmap(plan)
 
 
 def test_exact_boolean_job_count(spark, searcher):
-    """``+data fast -slow``: one execution of 3 jobs; the doc_freqs
-    lookup runs none."""
+    """``+data fast -slow``: one execution of 2 jobs; the doc_freqs and
+    key lookups run none."""
     q = _exact_shapes()["must_should_not"]
-    assert count_jobs(spark, lambda: searcher.search(q, k=10).collect()) == 3
+    assert count_jobs(spark, lambda: searcher.search(q, k=10).collect()) == 2
 
 
 def test_build_and_merge_job_counts(spark, tiny_pages, tmp_path_factory):
@@ -410,14 +508,17 @@ def test_phrase_prefix_is_one_scan_one_decode(searcher):
     q = _positional_shapes()["phrase_prefix"]
     assert len(searcher._dictionary_terms(
         [F.col("term").startswith(q.prefix)], q.max_expansions)) >= 3
-    plan = _final_plan(searcher.search(q, k=10))
+    plan = _final_plan(_ranked(searcher.matching(q)))
     assert plan.count("MapInPandas") == 1      # one postings decode
     assert plan.count("PushedFilters: [In(term") == 1
+    assert _reads_no_docmap(plan)
 
 
 @pytest.mark.parametrize("name,jobs", [
-    ("phrase", 4), ("phrase_prefix", 6), ("phrase_prefix_1", 6),
-    ("regex_phrase", 9)])
+    pytest.param("phrase", 3, id="phrase"),
+    pytest.param("phrase_prefix", 5, id="phrase_prefix"),
+    pytest.param("phrase_prefix_1", 5, id="phrase_prefix_1"),
+    pytest.param("regex_phrase", 8, id="regex_phrase")])
 def test_positional_job_counts(spark, searcher, name, jobs):
     """A phrase prefix runs as many jobs with 6 expansions as with 1: its
     expansions share one scan, one decode and one set of shuffles."""
